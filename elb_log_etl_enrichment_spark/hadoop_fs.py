@@ -5,9 +5,11 @@ Both helpers go through the JVM Hadoop FileSystem API so the SAME code
 path serves ``file://``, ``s3a://`` and ``hdfs://`` URIs — the
 local-only ``os.path``/``shutil`` twins silently mis-handle every
 remote scheme (probe reads "missing", swap strands the staging copy;
-code-review r05/r06 findings). Rename is not atomic on object stores:
-for an S3 production path prefer the manifest-pointer swap
-(``sinks.writers.write_audit_publish``).
+code-review r05/r06 findings). Rename is not atomic on object stores,
+so ``fs_swap`` is not an object-store-safe swap either; nor is
+``sinks.writers.write_audit_publish``, whose rename-aside protocol uses
+local-only ``os.rename``/``shutil.rmtree``. One scheme-aware commit
+primitive is ROADMAP.md item 4.
 """
 
 from __future__ import annotations

@@ -9,10 +9,11 @@ and the only shuffles are the two the semantics require (the
 ``client_ip`` window partitioning, reused by sessionization and both
 rolling features, and the aggregate exchanges).
 
-Incremental state: the geo cache round-trips through parquet exactly
-like the reference (anti-join detects new IPs, upsert keeps the
-newest row per IP), so a second run over the same logs fetches zero
-new IPs.
+Incremental state: the geo cache round-trips through parquet like the
+reference (anti-join detects new IPs, only those are fetched), but the
+fetch runs inside the first sink job and the commit appends just the
+fetched rows after the sinks, so a run writes O(new IPs) cache bytes
+and a second run over the same logs fetches and writes nothing.
 """
 
 from __future__ import annotations
@@ -20,10 +21,11 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import bot_traffic, error_summary, hourly_geo_aggregates
+from ..operators.dedup import upsert_keep_latest
 from ..operators.enrich import new_keys
 from ..sinks.writers import write_cleaned_logs, write_csv, write_parquet
 from ..sources.elb_logs import LOCAL_TZ, parse_elb_lines, read_raw_lines
@@ -45,9 +47,10 @@ def make_feature_chain_template() -> Callable[[DataFrame, DataFrame], DataFrame]
     cron-tick scale) for a plan that is identical across batches —
     Column/WindowSpec objects are immutable unresolved expressions,
     reusable across same-schema frames. The stream builds this
-    template once per run; the batch pipeline shares it via
-    :func:`_feature_chain` so the two cannot drift (their parity is
-    additionally pinned by the streaming-vs-batch oracle).
+    template once per run and the batch pipeline once per call, both
+    through :func:`enrich_and_featurize`, so the two cannot drift
+    (their parity is additionally pinned by the streaming-vs-batch
+    oracle).
 
     Semantics are unchanged from the operator chain
     (`filter_categorize` ∘ `enrich_with_geo`, then time / processing /
@@ -156,124 +159,84 @@ def make_feature_chain_template() -> Callable[[DataFrame, DataFrame], DataFrame]
     return apply_chain
 
 
-def _feature_chain(parsed: DataFrame, cache: DataFrame) -> DataFrame:
-    """Steps 3-6 as one lazy plan: broadcast geo join, filters, time /
-    processing / session / rolling / path features (single-shot
-    wrapper over :func:`make_feature_chain_template`)."""
-    return make_feature_chain_template()(parsed, cache)
-
-
 def enrich_and_featurize(
-    spark: SparkSession,
-    parsed: DataFrame,
-    geo_cache_path: str,
-    fetch_fn: Callable[[str], dict] = fake_fetch,
-) -> DataFrame:
-    """Steps 2-6 of the reference main(): geo lookup/cache/join, then
-    the feature chain. Pure plan construction except the cache upsert
-    (which, as in the reference, is a materialized side effect)."""
-    cache = load_geo_cache(spark, geo_cache_path)
-    new_ips = new_keys(parsed, cache)
-    fetched = fetch_geolocations(new_ips, fetch_fn=fetch_fn)
-    cache = update_geo_cache(spark, fetched, geo_cache_path)
-    return _feature_chain(parsed, cache)
-
-
-def enrich_and_featurize_deferred(
     spark: SparkSession,
     parsed: DataFrame,
     geo_cache_path: str,
     fetch_fn: Callable[[str], dict] = fake_fetch,
     chain: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, Callable[[], None]]:
-    """The micro-batch variant of :func:`enrich_and_featurize`
-    (VERDICT r07 item 7): returns ``(enriched, finalize)`` where the
-    enrichment joins the upsert-merged cache as a LAZY frame and the
-    cache parquet write is deferred to ``finalize()``.
+    """Steps 2-6 of the reference main(): geo lookup/cache/join, then
+    the feature chain. Returns ``(enriched, finalize)``: the enrichment
+    joins the cache snapshot plus the fetched rows as a LAZY frame, and
+    the cache commit is deferred to ``finalize()``. The fetched IPs are
+    disjoint from the snapshot (``new_keys`` anti-joins that same
+    snapshot), so their union IS the keep-latest merge: the join side
+    needs no upsert shuffle, and the merge is only built when
+    ``finalize()`` commits.
 
-    Why: the eager form costs a standalone fetch-probe job per call
-    (distinct → anti-join → Arrow fetch, just to learn emptiness)
-    before the sink job runs. Here the fetched frame is persisted and
-    first materialized INSIDE the caller's sink job (the broadcast
-    build of the merged cache), so by the time ``finalize()`` probes
-    it the answer is already cached — one fewer Spark job per
-    micro-batch, worth ~0.3-0.5 s of scheduling at cron-tick batch
-    sizes. Semantics are unchanged: the enrichment sees exactly the
-    merged cache content, an empty fetch still skips the cache
-    rewrite (idle-tick contract), and a crash between sink commit and
-    cache swap degrades to a cold cache (refetch next tick), never a
-    corrupt one — the cache is a cache.
+    The fetched frame is persisted and first materialized INSIDE the
+    caller's first sink job (the broadcast build of the geo side),
+    so no standalone fetch-probe job runs; the fetch-row accumulator
+    rides those same tasks, so ``finalize()`` learns emptiness without
+    a job either. ``finalize()`` commits the fetched DELTA through
+    ``update_geo_cache`` (an O(delta) append, or the compaction
+    rewrite of the merge) and skips the write when nothing was fetched
+    (idle-run contract: no unseen IPs, no write). It must be called
+    after the enriched frame has been materialized, and always
+    unpersists the fetch buffer. If the caller never materialized the
+    frame (an error-path finalize after a sink failure that died
+    before the broadcast build), the tally is 0 and the commit is
+    skipped: the error path must not START fetch work on an
+    already-unhealthy cluster. A crash between sink commit and cache
+    commit degrades to a refetch next run, never a corrupt cache.
 
-    ``finalize()`` must be called after the enriched frame has been
-    materialized (it unpersists the fetch buffer).
-
-    SINGLE-WRITER ASSUMPTION (ADVICE r9): ``finalize()`` commits the
-    merge built against the cache snapshot loaded at batch START. Any
-    OTHER writer that updates the geo cache between batch start and
-    finalize has its rows silently overwritten by this commit. That
-    matches the documented ownership model — the cache has exactly one
-    writer (the reference's single cron loop / the single streaming
-    query; ``foreachBatch`` runs batches of one query serially) — and
-    losing a concurrent write only degrades to a refetch, never
-    corruption. Do NOT point two concurrently-running pipelines at the
-    same ``geo_cache_path`` without adding an external lock/lease.
+    SINGLE-WRITER ASSUMPTION: ``finalize()`` commits a delta computed
+    against the cache snapshot loaded at call time. Another writer
+    updating the cache in between could leave two rows for an IP, or
+    have its rows overwritten by a compaction. That matches the
+    ownership model — the cache has exactly one writer (the
+    reference's single cron loop, or one streaming query whose
+    ``foreachBatch`` batches run serially). Do NOT point two
+    concurrently-running pipelines at the same ``geo_cache_path``
+    without an external lock/lease.
 
     ``chain`` lets a micro-batch caller pass a prebuilt
     :func:`make_feature_chain_template` so the per-batch cost is the
-    5-Dataset application, not the full Column-tower rebuild (VERDICT
-    r08 item 2); None builds a fresh single-use template."""
-    from ..operators.dedup import upsert_keep_latest
-
+    5-Dataset application, not the full Column-tower rebuild; None
+    builds a fresh single-use template."""
     cache = load_geo_cache(spark, geo_cache_path)
     new_ips = new_keys(parsed, cache)
-    # fetched-row tally rides the fetch tasks themselves (r10, VERDICT
-    # r9 item 2): the old finalize probed emptiness with
-    # ``fetched.take(1)`` — a whole extra Spark job per micro-batch
-    # just to read one cached partition. The accumulator is populated
-    # DURING the sink job's broadcast build (where the persisted fetch
-    # first materializes), so finalize learns emptiness for free.
     fetch_tally = spark.sparkContext.accumulator(0)
     fetched = fetch_geolocations(
         new_ips, fetch_fn=fetch_fn, row_count_acc=fetch_tally
     ).persist()
-    merged = upsert_keep_latest(
-        cache, fetched, ["client_ip"], "api_fetch_timestamp"
+    enriched = (chain or make_feature_chain_template())(
+        parsed, cache.unionByName(fetched)
     )
-    enriched = (chain or make_feature_chain_template())(parsed, merged)
 
     def finalize() -> None:
-        # commit the fetched DELTA by append (r11, VERDICT r10 item 3):
-        # the r9-r10 path committed the full merged plan — an
-        # O(cache-size) stage-and-swap rewrite per fetching tick, the
-        # one history-proportional term left in the tick. Here the
-        # delta is disjoint from the cache by construction (new_keys
-        # anti-joined against the SAME snapshot `merged` was built
-        # from, single-writer contract), so appending the persisted
-        # fetch frame commits content identical to the merge for
-        # O(delta) bytes — no cache scan, no upsert shuffle, no swap
-        # renames. append_geo_cache_delta's compaction backstop
-        # rewrites `merged` (the self-compacting stage-and-swap) when
-        # the directory's file count hits its threshold. The
-        # empty-fetch skip reads the accumulator (idle-tick contract
-        # unchanged: no write when nothing new was fetched, and zero
-        # probe jobs either way). If the caller never materialized
-        # the enriched frame (contract violation — see the docstring —
-        # or an error-path finalize after a sink failure that died
-        # before the broadcast build), the tally is 0 and the commit
-        # is skipped: the error path must not START fetch work on an
-        # already-unhealthy cluster; the cache degrades to a refetch
-        # next batch, never corruption.
-        from ..sources.geo_cache import append_geo_cache_delta
-
         try:
             if fetch_tally.value > 0:
-                append_geo_cache_delta(
-                    spark, fetched, geo_cache_path, merged=merged
+                merged = upsert_keep_latest(
+                    cache, fetched, ["client_ip"], "api_fetch_timestamp"
                 )
+                update_geo_cache(spark, fetched, geo_cache_path, merged)
         finally:
             fetched.unpersist()
 
     return enriched, finalize
+
+
+def _reports(enriched: DataFrame) -> dict[str, DataFrame]:
+    """The four report frames of the sink fan-out (reference Step 7)."""
+    bot_detail, bot_summary = bot_traffic(enriched)
+    return {
+        "hourly": hourly_geo_aggregates(enriched),
+        "errors": error_summary(enriched),
+        "bot_detail": bot_detail,
+        "bot_summary": bot_summary,
+    }
 
 
 def run_pipeline(
@@ -288,7 +251,9 @@ def run_pipeline(
     ``logs_path`` may be a glob of (gzip) log files or a pre-built
     lines DataFrame (tests). Returns the intermediate frames for
     inspection; sinks land under ``output_dir`` in the reference's
-    layout (cleaned_logs/ aggregated_stats/ reports/).
+    layout (cleaned_logs/ aggregated_stats/ reports/). The geo cache is
+    committed once, after the five sink writes (O(delta) append, see
+    ``sources.geo_cache.update_geo_cache``).
     """
     geo_cache_path = geo_cache_path or os.path.join(
         output_dir, "ip_geolocation_cache.parquet"
@@ -299,54 +264,65 @@ def run_pipeline(
         else read_raw_lines(spark, logs_path)
     )
     parsed = parse_elb_lines(lines)
-    enriched = enrich_and_featurize(spark, parsed, geo_cache_path, fetch_fn)
-
-    # Persisted across the sink fan-out AND the returned frames: the
-    # caller inspects them after we return (unpersisting here would
-    # silently re-run the whole enrichment per caller action). The
-    # cache entry is LRU-evictable; callers that are done can
-    # `frames["enriched"].unpersist()` — which is why the RETURNED frame
-    # must be this persisted plan, not the observe() wrapper below:
-    # DataFrame.unpersist matches by sameResult, and CollectMetrics(...)
-    # does not match the pre-observe persisted plan.
+    chain = make_feature_chain_template()
+    enriched, finalize = enrich_and_featurize(
+        spark, parsed, geo_cache_path, fetch_fn, chain=chain
+    )
+    # Persisted across the sink fan-out: all five writes read it, and
+    # the first one also runs the geo fetch (the broadcast build).
     enriched = enriched.persist()
-    persisted = enriched
     # Pipeline observability (df.observe): named aggregate metrics
     # computed DURING the first action over the enriched frame — no
     # extra pass, no extra job, the accumulation rides the existing
     # scan. The reference's only telemetry is log lines; a production
     # pipeline alerts on these counters per run.
-    from pyspark.sql import Observation
-
     obs = Observation("pipeline_metrics")
-    enriched = enriched.observe(
+    observed = enriched.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.count_if(F.col("is_bot")).alias("n_bots"),
         F.count_if(F.col("waf_blocked")).alias("n_waf_blocked"),
         F.count_if(F.col("countryCode").isNull()).alias("n_geo_missing"),
     )
-    write_cleaned_logs(enriched, os.path.join(output_dir, "cleaned_logs"))
-    hourly = hourly_geo_aggregates(enriched)
-    write_parquet(
-        hourly,
-        os.path.join(output_dir, "aggregated_stats", "hourly_traffic_by_geo.parquet"),
-    )
-    errors = error_summary(enriched)
-    write_csv(errors, os.path.join(output_dir, "reports", "error_summary_geo.csv"))
-    bot_detail, bot_summary = bot_traffic(enriched)
-    write_parquet(
-        bot_detail, os.path.join(output_dir, "reports", "bot_traffic_details.parquet")
-    )
-    write_csv(
-        bot_summary,
-        os.path.join(output_dir, "reports", "bot_traffic_by_origin_summary.csv"),
-    )
-    return {
-        "enriched": persisted,
-        "hourly": hourly,
-        "errors": errors,
-        "bot_detail": bot_detail,
-        "bot_summary": bot_summary,
-        "metrics": obs.get,
-    }
+    try:
+        reports = _reports(observed)
+        write_cleaned_logs(observed, os.path.join(output_dir, "cleaned_logs"))
+        write_parquet(
+            reports["hourly"],
+            os.path.join(
+                output_dir, "aggregated_stats", "hourly_traffic_by_geo.parquet"
+            ),
+        )
+        write_csv(
+            reports["errors"],
+            os.path.join(output_dir, "reports", "error_summary_geo.csv"),
+        )
+        write_parquet(
+            reports["bot_detail"],
+            os.path.join(output_dir, "reports", "bot_traffic_details.parquet"),
+        )
+        write_csv(
+            reports["bot_summary"],
+            os.path.join(output_dir, "reports", "bot_traffic_by_origin_summary.csv"),
+        )
+    except BaseException:
+        # finalize() frees the fetch buffer on the error path too, but
+        # its own failure is swallowed so the SINK error stays the
+        # raised one (same contract as elb_stream)
+        try:
+            finalize()
+        except Exception:
+            pass
+        raise
+    finally:
+        enriched.unpersist()
+    finalize()
+    # The returned frames are re-planned over the COMMITTED cache: the
+    # sink plan's geo side holds the fetch, so recomputing it (after
+    # the caller unpersists, or on eviction) would call fetch_fn again
+    # and restamp api_fetch_timestamp. Same content, read back from the
+    # rows this run committed. Persisted so the caller's actions share
+    # one computation; a caller that is done can
+    # `frames["enriched"].unpersist()`.
+    final = chain(parsed, load_geo_cache(spark, geo_cache_path)).persist()
+    return {"enriched": final, **_reports(final), "metrics": obs.get}

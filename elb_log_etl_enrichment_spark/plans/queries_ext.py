@@ -36,27 +36,41 @@ def _fresh_checkpoint(name: str) -> str:
     return new
 
 
-#: session-scoped SHARED geo cache for the batch ELB fixture queries
-#: (r11, VERDICT r10 item 4): applicationId → cache path. The three
-#: cache-using fixture queries (elb_pipeline_hourly, elb_error_report,
-#: elb_bot_report) parse the SAME extended fixture corpus with the
-#: SAME deterministic fetch, so their geo caches are byte-equivalent;
-#: each previously built its own from scratch — three full fetch
-#: passes + three stage-and-swap commits per session where the cache's
-#: whole design point is cross-run persistence. Sharing one path makes
-#: the FIRST query of a session pay the fetch+commit and the others
-#: take update_geo_cache's empty-fetch path (zero fetch, zero
-#: rewrite — the reference's own mature-cache steady state). Results
+#: session-scoped SHARED geo cache for the batch ELB fixture queries:
+#: applicationId → cache path. The three cache-using fixture queries
+#: (elb_pipeline_hourly, elb_error_report, elb_bot_report) parse the
+#: SAME extended fixture corpus with the SAME deterministic fetch, so
+#: one cache serves all three. The first query of a session fills it
+#: through the pipeline's own primitives (``new_keys`` →
+#: ``fetch_geolocations`` → ``update_geo_cache``); every query then
+#: joins ``load_geo_cache`` of the shared path with no fetch and no
+#: probe job — the reference's own mature-cache steady state. Results
 #: are identical: geo columns are a pure function of the IP. Session-
-#: scoped (not cross-run) so every bench invocation still computes the
-#: cache from scratch once; single-threaded registry execution is the
-#: same contract every engine memo assumes.
+#: scoped (not cross-run) so every bench invocation still fills the
+#: cache once; single-threaded registry execution is the same contract
+#: every engine memo assumes.
 _GEO_CACHE_SHARED: dict[str, str] = {}
 
 
-def _shared_elb_geo_cache(spark: SparkSession) -> str:
+def _elb_fixture_enriched(spark: SparkSession) -> DataFrame:
+    """The extended ELB fixture corpus, parsed and geo-enriched through
+    the shared session cache (see ``_GEO_CACHE_SHARED``)."""
     import shutil
 
+    from ..operators.enrich import new_keys
+    from ..plans.pipeline import make_feature_chain_template
+    from ..session import ensure_engine_confs
+    from ..sources.alb_fixtures import write_fixture_parquet
+    from ..sources.elb_logs import parse_elb_lines
+    from ..sources.geo_cache import load_geo_cache, update_geo_cache
+    from ..sources.http_geo import fetch_geolocations
+
+    # tz-sensitive calendar features: pin session tz even on a vanilla
+    # session from the caller (no registry table → no load_table call)
+    ensure_engine_confs(spark)
+    if not os.path.exists(_ELB_FIXTURE_PARQUET):
+        write_fixture_parquet(_ELB_FIXTURE_PARQUET, extended=True)
+    parsed = parse_elb_lines(spark.read.parquet(_ELB_FIXTURE_PARQUET))
     app = spark.sparkContext.applicationId
     path = _GEO_CACHE_SHARED.get(app)
     if path is None:
@@ -68,8 +82,11 @@ def _shared_elb_geo_cache(spark: SparkSession) -> str:
             tempfile.mkdtemp(prefix="elb_geo_cache_shared_"),
             "cache.parquet",
         )
-        _GEO_CACHE_SHARED[app] = path
-    return path
+        delta = fetch_geolocations(new_keys(parsed, load_geo_cache(spark, path)))
+        # the cache starts empty, so the keep-latest merge is the delta
+        update_geo_cache(spark, delta, path, merged=delta)
+        _GEO_CACHE_SHARED[app] = path  # registered only once filled
+    return make_feature_chain_template()(parsed, load_geo_cache(spark, path))
 
 
 def _stage_two_batches(first: DataFrame, second: DataFrame, src: str) -> None:
@@ -1818,26 +1835,9 @@ _ELB_PIPELINE_HOURLY_SQL = f"""
     tags=("pipeline", "e2e", "elb", "agg", "join", "parse"),
 )
 def elb_pipeline_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.aggregate import hourly_geo_aggregates
-    from ..plans.pipeline import enrich_and_featurize
-    from ..session import ensure_engine_confs
-    from ..sources.alb_fixtures import write_fixture_parquet
-    from ..sources.elb_logs import parse_elb_lines
 
-    # tz-sensitive calendar features: pin session tz even on the
-    # driver's vanilla session (no driver table → no load_table call)
-    ensure_engine_confs(spark)
-    if not os.path.exists(_ELB_FIXTURE_PARQUET):
-        write_fixture_parquet(_ELB_FIXTURE_PARQUET, extended=True)
-    lines = spark.read.parquet(_ELB_FIXTURE_PARQUET)
-    parsed = parse_elb_lines(lines)
-    # shared session cache (r11): the first fixture query of the
-    # session fetches+commits; later ones take the empty-fetch path
-    cache_dir = _shared_elb_geo_cache(spark)
-    enriched = enrich_and_featurize(spark, parsed, cache_dir)
-    agg = hourly_geo_aggregates(enriched)
+    agg = hourly_geo_aggregates(_elb_fixture_enriched(spark))
     return _hourly_agg_oracle_projection(agg)
 
 
@@ -2005,22 +2005,9 @@ def elb_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-backed query: full parse→filter→geo-enrich path, IN-list
     4xx/5xx filter (F3), 13-column projection (F5). `time` goes out as
     epoch millis for engine-stable hashing."""
-    import os
-
     from ..operators.aggregate import error_summary
-    from ..plans.pipeline import enrich_and_featurize
-    from ..session import ensure_engine_confs
-    from ..sources.alb_fixtures import write_fixture_parquet
-    from ..sources.elb_logs import parse_elb_lines
 
-    ensure_engine_confs(spark)
-    if not os.path.exists(_ELB_FIXTURE_PARQUET):
-        write_fixture_parquet(_ELB_FIXTURE_PARQUET, extended=True)
-    lines = spark.read.parquet(_ELB_FIXTURE_PARQUET)
-    parsed = parse_elb_lines(lines)
-    cache_dir = _shared_elb_geo_cache(spark)  # r11: shared session cache
-    enriched = enrich_and_featurize(spark, parsed, cache_dir)
-    err = error_summary(enriched)
+    err = error_summary(_elb_fixture_enriched(spark))
     return err.select(
         F.unix_millis("time").alias("time_utc_ms"),
         "client_ip",
@@ -2100,22 +2087,9 @@ def elb_bot_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference bot_traffic_by_origin_summary.csv (elb_logs.py:385-391)
     as an oracle-backed query: full parse→filter→geo-enrich path, then
     the is_bot boolean filter (F4) and a count(*) per origin (A8)."""
-    import os
-
     from ..operators.aggregate import bot_traffic
-    from ..plans.pipeline import enrich_and_featurize
-    from ..session import ensure_engine_confs
-    from ..sources.alb_fixtures import write_fixture_parquet
-    from ..sources.elb_logs import parse_elb_lines
 
-    ensure_engine_confs(spark)
-    if not os.path.exists(_ELB_FIXTURE_PARQUET):
-        write_fixture_parquet(_ELB_FIXTURE_PARQUET, extended=True)
-    lines = spark.read.parquet(_ELB_FIXTURE_PARQUET)
-    parsed = parse_elb_lines(lines)
-    cache_dir = _shared_elb_geo_cache(spark)  # r11: shared session cache
-    enriched = enrich_and_featurize(spark, parsed, cache_dir)
-    _, summary = bot_traffic(enriched)
+    _, summary = bot_traffic(_elb_fixture_enriched(spark))
     return summary.select(
         "countryName",
         "isp",

@@ -118,8 +118,16 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    # Python workers import this package by name (pickled UDFs and
+    # pandas functions), so put its parent directory on their path:
+    # a caller that has the package only on its own sys.path, run from
+    # any other cwd, would otherwise fail inside the workers.
+    conf = dict(extra_conf or {})
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (conf.get(key), pkg_parent) if p)
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    for key, value in (extra_conf or {}).items():
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return ensure_engine_confs(builder.getOrCreate())

@@ -17,8 +17,6 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.utils import AnalysisException
 
-from ..operators.dedup import upsert_keep_latest
-
 #: reference elb_logs.py:157-160 + the client_ip index column.
 GEO_SCHEMA = StructType(
     [
@@ -42,47 +40,6 @@ def load_geo_cache(spark: SparkSession, cache_path: str) -> DataFrame:
         return spark.read.schema(GEO_SCHEMA).parquet(cache_path)
     except AnalysisException:
         return spark.createDataFrame([], GEO_SCHEMA)
-
-
-def update_geo_cache(
-    spark: SparkSession, new_entries: DataFrame, cache_path: str
-) -> DataFrame:
-    """Merge new lookups into the cache with last-write-wins dedup and
-    replace the parquet (reference update_geolocation_cache,
-    elb_logs.py:212-228, S8/J4).
-
-    The merged frame is staged to a sibling directory and swapped in,
-    because the sink would otherwise truncate its own input — and
-    staging keeps the merge DISTRIBUTED: the previous driver-collect
-    materialization pulled one row per distinct IP onto the driver,
-    which at web scale (millions of IPs) is a driver OOM on every
-    upsert (code-review r05 finding). A crash between the remove and
-    the rename degrades to a cold cache (refetch), never a corrupt
-    one; the swap goes through the Hadoop FileSystem API (r7, same
-    discipline as ``streaming.stream.compact_ingest_index``) so an
-    ``s3a://``/``hdfs://`` cache path takes the same code path as a
-    local one instead of stranding the staging copy; on object stores
-    prefer the manifest-pointer swap (``sinks.writers
-    .write_audit_publish``) — rename is not atomic there.
-
-    When ``new_entries`` is EMPTY the cache is returned untouched: a
-    cron tick with no unseen IPs (the steady state of a mature
-    deployment) must not rewrite the full cache — at web scale that is
-    a per-tick rewrite of millions of rows that changes nothing. The
-    probe rides the persisted frame the merge would consume anyway, so
-    the non-empty path does no extra work."""
-    old = load_geo_cache(spark, cache_path)
-    new_entries = new_entries.persist()
-    try:
-        if not new_entries.take(1):
-            return old
-        merged = upsert_keep_latest(
-            old, new_entries, ["client_ip"], "api_fetch_timestamp"
-        )
-        commit_geo_cache(spark, merged, cache_path)
-    finally:
-        new_entries.unpersist()
-    return spark.read.schema(GEO_SCHEMA).parquet(cache_path)
 
 
 #: append-delta compaction backstop: when the cache directory holds
@@ -124,74 +81,73 @@ def _cache_layout(spark: SparkSession, cache_path: str) -> tuple[int, int]:
     return n, total
 
 
-def append_geo_cache_delta(
-    spark: SparkSession,
-    delta: DataFrame,
-    cache_path: str,
-    merged: DataFrame,
-    compact_files: int = GEO_CACHE_COMPACT_FILES,
+def update_geo_cache(
+    spark: SparkSession, delta: DataFrame, cache_path: str, merged: DataFrame
 ) -> None:
-    """O(delta) cache commit for a delta of provably NEW keys — the
-    streaming tick's replacement for the full stage-and-swap rewrite
-    (r11, guide §6/§2.3: write the bytes that changed, not the
-    history).
+    """Commit a fetched ``delta`` of NEW keys into the cache — the one
+    commit entry point of every caller (reference
+    update_geolocation_cache, elb_logs.py:212-228, S8/J4). ``merged``
+    is the keep-latest merge of the cache snapshot and ``delta``
+    (``upsert_keep_latest``); it is only written when compaction fires.
 
-    The stage-and-swap in :func:`commit_geo_cache` rewrites the ENTIRE
-    merged cache every tick a fetch happens — an O(cache-size) write
-    (plus the upsert's dedup shuffle and the swap's rename pass) that
-    grows with deployment lifetime while the tick's new information is
-    O(new IPs). On the streaming path the delta is DISJOINT from the
-    cache by construction — ``new_keys`` anti-joins the batch's IPs
-    against the same cache snapshot the merge was built from, and the
-    cache has a single writer (pipeline.py's documented contract) — so
-    ``upsert_keep_latest(cache, delta)`` ≡ ``cache ∪ delta`` exactly,
-    and appending the delta's rows into the cache directory commits
-    the identical content for O(delta) bytes with no shuffle and no
-    renames beyond the one committed file's.
+    The delta is DISJOINT from the cache by construction — ``new_keys``
+    anti-joins the run's IPs against the same snapshot ``merged`` was
+    built from, and the cache has a single writer — so
+    ``upsert_keep_latest(cache, delta)`` ≡ ``cache ∪ delta`` and
+    appending the delta (:func:`append_geo_cache_delta`) commits the
+    merge's content for O(delta) bytes: no cache scan, no upsert
+    shuffle, no swap.
 
-    ``coalesce(1)`` makes the append one file AND one task: the job
-    commit is all-or-nothing per tick, so a crash never lands a
-    partial delta. Replay after any crash ordering is self-healing
-    either way: IPs whose rows landed are excluded by the next batch's
-    anti-join (no duplicates), IPs whose rows were lost are refetched
-    (the cache is a cache).
+    Compaction backstop: one small file per fetching run accumulates
+    forever, so when the directory holds ``GEO_CACHE_COMPACT_FILES``
+    data files MORE than the ideal count for its byte size (total bytes
+    / ``GEO_CACHE_TARGET_FILE_BYTES``, min 1) the commit rewrites
+    ``merged`` instead (:func:`commit_geo_cache`), repartitioned to
+    that ideal count — reader listing/open costs stay O(ideal +
+    threshold) files while the amortized write stays O(delta +
+    cache/threshold). Trigger and rewrite width derive from the same
+    listing, so a cache whose HEALTHY layout is wider than the
+    threshold keeps appending instead of rewriting itself every run.
 
-    Compaction backstop (``compact_files``): one small file per
-    fetching tick accumulates forever, so when the directory holds
-    ``compact_files`` data files MORE than the ideal count for its
-    byte size (total bytes / ``GEO_CACHE_TARGET_FILE_BYTES``, min 1)
-    the commit falls back to the stage-and-swap rewrite of ``merged``,
-    repartitioned to that ideal count — bounding reader listing/open
-    costs at O(ideal + threshold) files while the amortized per-tick
-    write stays O(delta + cache/threshold). Trigger and rewrite width
-    both derive from the same listing, so a cache whose HEALTHY layout
-    is wider than the threshold keeps appending normally instead of
-    rewriting itself every tick.
-
-    DO NOT call this with a delta that may UPDATE existing keys — use
-    :func:`commit_geo_cache`/:func:`update_geo_cache`; an appended
-    update would leave two rows for the key and last-write-wins would
-    be decided by the reader, which plain ``load_geo_cache`` does not
-    do."""
+    Callers skip the call when nothing was fetched (a run with no
+    unseen IPs — the steady state of a mature deployment — writes
+    nothing). DO NOT pass a delta that may UPDATE existing keys: an
+    appended update leaves two rows for the key, and plain
+    ``load_geo_cache`` does not resolve last-write-wins on read."""
     n_files, n_bytes = _cache_layout(spark, cache_path)
     ideal = max(1, -(-n_bytes // GEO_CACHE_TARGET_FILE_BYTES))
-    if n_files >= ideal + compact_files:
+    if n_files >= ideal + GEO_CACHE_COMPACT_FILES:
         commit_geo_cache(spark, merged.repartition(ideal), cache_path)
-        return
+    else:
+        append_geo_cache_delta(spark, delta, cache_path)
+
+
+def append_geo_cache_delta(
+    spark: SparkSession, delta: DataFrame, cache_path: str
+) -> None:
+    """Append ``delta`` to the cache directory as ONE file.
+    ``coalesce(1)`` makes the append one file AND one task: the job
+    commit is all-or-nothing, so a crash never lands a partial delta.
+    Replay after any crash ordering self-heals: IPs whose rows landed
+    are excluded by the next run's anti-join (no duplicates), IPs
+    whose rows were lost are refetched (the cache is a cache)."""
     delta.coalesce(1).write.mode("append").parquet(cache_path)
 
 
 def commit_geo_cache(spark: SparkSession, merged: DataFrame, cache_path: str) -> None:
-    """Stage-and-swap commit of a PREBUILT keep-latest merge — the
-    write half of :func:`update_geo_cache`, split out (r9) so the
-    streaming deferred path can commit the exact merge plan its
-    enrichment join already constructed instead of re-loading the
-    cache and rebuilding the upsert per micro-batch (~0.25 s of eager
-    re-analysis per cron tick for byte-identical plans). Staging keeps
-    the merge from truncating its own parquet input; the swap goes
-    through the Hadoop FileSystem API so remote cache paths share the
-    code path (see update_geo_cache's docstring for the full
-    rationale)."""
+    """Stage-and-swap rewrite of a PREBUILT keep-latest merge — the
+    compaction half of :func:`update_geo_cache`. The merge is staged to
+    a sibling directory and swapped in, because the sink would
+    otherwise truncate its own parquet input, and staging keeps the
+    merge DISTRIBUTED (collecting millions of IPs into one process
+    runs it out of memory). A crash between the swap's delete and rename
+    degrades to a cold cache (refetch), never a corrupt one. The swap
+    goes through the Hadoop FileSystem API (``hadoop_fs.fs_swap``), so
+    an ``s3a://``/``hdfs://`` cache path takes the same code path as a
+    local one; rename is not atomic on object stores, and the
+    rename-aside protocol of ``sinks.writers.write_audit_publish`` is
+    local-only (``os.rename``/``shutil.rmtree``) until the one
+    scheme-aware commit primitive lands (ROADMAP item 4)."""
     from ..hadoop_fs import fs_swap
 
     staging = cache_path.rstrip("/") + ".staging"

@@ -6,7 +6,7 @@ parsed exactly once across runs, the fix for the reference's 100%
 re-read amplification (SURVEY.md §2.8).
 
 The per-batch work runs in ``foreachBatch`` so the full batch engine
-(geo-cache anti-join/upsert, broadcast enrichment, window features,
+(geo-cache anti-join and commit, broadcast enrichment, window features,
 partitioned sinks) applies unchanged to each micro-batch; each batch
 lands by idempotent overwrite into its own ``ingest_batch=<id>``
 directory so a foreachBatch replay never duplicates sink rows.
@@ -22,10 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import (
-    enrich_and_featurize_deferred,
-    make_feature_chain_template,
-)
+from ..plans.pipeline import enrich_and_featurize, make_feature_chain_template
 from ..session import ensure_engine_confs
 from .stream import sized_shuffle_partitions
 from ..sinks.writers import CLEANED_PARTITIONS, write_cleaned_logs
@@ -69,8 +66,9 @@ def stream_elb_pipeline(
     partial output instead of appending next to it. Readers see
     ``ingest_batch`` as one more discovered partition column above the
     reference layout; partition pruning on the original keys still
-    applies. The geo-cache side effect is idempotent by construction
-    (keep-latest merge of identical rows).
+    applies. The geo-cache side effect is replay-safe: a replayed
+    batch anti-joins against the cache, so IPs whose rows already
+    landed are neither fetched nor appended again.
 
     ``max_files_per_trigger`` paces the file source (one availableNow
     run splits the backlog into per-file micro-batches, mtime order)
@@ -82,7 +80,7 @@ def stream_elb_pipeline(
     stays covered by the two-run tests.
 
     ``batch_shuffle_partitions`` sizes the PER-BATCH shuffles (window
-    features, upsert dedup, sink exchange) to the micro-batch's data
+    features, compaction dedup, sink exchange) to the micro-batch's data
     volume rather than the session's batch-analytics width — a cron
     tick's increment is orders of magnitude smaller than the corpus,
     and 32-wide exchanges over a few thousand rows are pure
@@ -146,10 +144,10 @@ def stream_elb_pipeline(
         # each of those re-parsed the batch's files
         batch = batch.persist()
         try:
-            # deferred variant (r8): the geo fetch materializes inside
-            # the sink job's broadcast build instead of a standalone
-            # probe job, and the cache write runs after the sink commit
-            enriched, finalize = enrich_and_featurize_deferred(
+            # the geo fetch materializes inside the sink job's
+            # broadcast build instead of a standalone probe job, and
+            # the cache write runs after the sink commit
+            enriched, finalize = enrich_and_featurize(
                 spark, batch, geo_cache_path, fetch_fn, chain=chain
             )
             # r10 (VERDICT r9 item 2): the per-batch emptiness probe

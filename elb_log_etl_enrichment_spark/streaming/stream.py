@@ -11,7 +11,7 @@ that cadence onto real incremental primitives:
 |                               | file tracking) / Trigger.AvailableNow  |
 | 30-min-gap sessionization     | ``session_window(ts, '30 minutes')``   |
 | hourly aggregates             | tumbling ``window(ts, '1 hour')``      |
-| geo cache upsert across runs  | ``foreachBatch`` keep-latest upsert    |
+| geo cache upsert across runs  | ``foreachBatch`` O(delta) cache append |
 | (none)                        | watermarks bound state for late data   |
 
 Scale note: session_window/tumbling aggs are stateful operators whose
@@ -25,7 +25,6 @@ from __future__ import annotations
 import os
 import tempfile
 import threading
-from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -438,34 +437,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def foreach_batch_cache_upsert(
-    stream: DataFrame,
-    spark: SparkSession,
-    cache_path: str,
-    checkpoint_dir: str,
-    fetch_fn: Callable[[str], dict],
-) -> None:
-    """Streaming version of the geo-cache maintenance loop (reference
-    Step 3-4): per micro-batch, anti-join the cache, fetch only new
-    keys, upsert with last-write-wins."""
-    from ..operators.enrich import new_keys
-    from ..sources.geo_cache import load_geo_cache, update_geo_cache
-    from ..sources.http_geo import fetch_geolocations
-
-    def upsert(batch: DataFrame, _batch_id: int) -> None:
-        cache = load_geo_cache(spark, cache_path)
-        fresh = fetch_geolocations(new_keys(batch, cache), fetch_fn=fetch_fn)
-        update_geo_cache(spark, fresh, cache_path)
-
-    query = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
 def static_enriched_stream(
     events: DataFrame, dim: DataFrame, on_left: str = "user_id", on_right: str = "c_custkey"
 ) -> DataFrame:
@@ -645,9 +616,11 @@ def compact_ingest_index(
     (code-review r06): a local-only ``shutil.rmtree``/``os.rename``
     would rewrite the staging copy on an ``s3a://``/``hdfs://`` index
     and then fail the swap, stranding a ``.compact`` sibling with no
-    compaction. Note rename is not atomic on object stores — for an
-    S3 production index prefer the manifest-pointer swap
-    (``sinks.writers.write_audit_publish``)."""
+    compaction. Note rename is not atomic on object stores, and the
+    rename-aside protocol of ``sinks.writers.write_audit_publish`` is
+    local-only (``os.rename``/``shutil.rmtree``), so neither is an
+    object-store-safe swap until one scheme-aware commit primitive
+    replaces both (ROADMAP.md item 4)."""
     if not _hadoop_path_exists(spark, index_path):
         return 0
     idx = spark.read.parquet(index_path)

@@ -42,3 +42,25 @@ def test_cli_usage_error():
     )
     assert proc.returncode == 2
     assert "usage:" in proc.stderr
+
+
+def test_python_workers_find_the_package_from_any_cwd(tmp_path):
+    """A caller with the package only on its own sys.path, run from a
+    cwd outside the checkout, must still run a pandas-function query:
+    get_spark puts the package's parent on the Python workers' path."""
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from elb_log_etl_enrichment_spark.session import get_spark\n"
+        "from elb_log_etl_enrichment_spark.plans.queries_ext import elb_error_report\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=2)\n"
+        "print(elb_error_report(spark, '').count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert int(proc.stdout.strip().splitlines()[-1]) > 0

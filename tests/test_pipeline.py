@@ -1,9 +1,11 @@
 """End-to-end pipeline test: fixture ALB lines → 4 sinks, plus the
-incremental geo-cache contract (second run fetches zero new IPs)."""
+incremental geo-cache contract (second run fetches zero new IPs, a run
+commits only the IPs it fetched)."""
 
 from __future__ import annotations
 
 import glob
+import gzip
 import os
 
 from pyspark.sql import Row
@@ -18,6 +20,16 @@ from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
 
 def _lines_df(spark):
     return spark.createDataFrame([Row(value=ln) for ln in fixture_lines()])
+
+
+def _poisoned_fetch():
+    """A fetch_fn that fails on any call (nested, so the workers
+    receive it by value rather than importing this module)."""
+
+    def fetch(ip: str) -> dict:
+        raise AssertionError(f"unexpected geo lookup for {ip}")
+
+    return fetch
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -69,11 +81,8 @@ def test_pipeline_end_to_end(spark, tmp_path):
 
     # second run over the same logs must fetch NOTHING: a fetch_fn that
     # raises proves the anti-join found no new IPs
-    def poisoned_fetch(ip: str) -> dict:
-        raise AssertionError(f"unexpected geo lookup for {ip}")
-
     run_pipeline(spark, _lines_df(spark), str(tmp_path / "out2"),
-                 geo_cache_path=cache_path, fetch_fn=poisoned_fetch)
+                 geo_cache_path=cache_path, fetch_fn=_poisoned_fetch())
     cache2 = load_geo_cache(spark, cache_path)
     assert cache2.count() == 4  # keep-latest dedup, no growth
 
@@ -134,3 +143,236 @@ def test_run_pipeline_returned_enriched_unpersists_cache(spark, tmp_path):
     assert enriched.storageLevel.useMemory or enriched.storageLevel.useDisk
     enriched.unpersist(blocking=True)
     assert not (enriched.storageLevel.useMemory or enriched.storageLevel.useDisk)
+
+
+# ---------------------------------------------------------------------------
+# geo-cache commit: update_geo_cache → append_geo_cache_delta / compaction
+# ---------------------------------------------------------------------------
+def _data_files(path: str) -> list[str]:
+    return sorted(
+        f
+        for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
+        if os.path.isfile(f)
+        and not os.path.basename(f).startswith(("_", "."))
+    )
+
+
+def _listing(path: str) -> list[tuple[str, int, int]]:
+    """Every entry under ``path`` (hidden ones too) with size and mtime."""
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            out.append((os.path.join(root, f), st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+
+def _geo_rows(spark, ips: list[str], ts: str):
+    from elb_log_etl_enrichment_spark.sources.geo_cache import GEO_SCHEMA
+
+    rows = [
+        (ip, "US", "United States", "Region", "City", 1.0, 2.0, "isp", ts)
+        for ip in ips
+    ]
+    df = spark.createDataFrame(rows, GEO_SCHEMA.fieldNames())
+    return df.withColumn(
+        "api_fetch_timestamp", F.col("api_fetch_timestamp").cast("timestamp")
+    )
+
+
+def test_geo_cache_empty_update_skips_rewrite(spark, tmp_path):
+    """A finalize() that fetched nothing leaves the cache UNTOUCHED — no
+    write, no staging dir (a run with no unseen IPs must not write to
+    a web-scale cache) — while a non-empty delta still lands through
+    update_geo_cache."""
+    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
+    from elb_log_etl_enrichment_spark.plans.pipeline import enrich_and_featurize
+    from elb_log_etl_enrichment_spark.sources.elb_logs import parse_elb_lines
+    from elb_log_etl_enrichment_spark.sources.geo_cache import update_geo_cache
+
+    cache_path = str(tmp_path / "geo_cache.parquet")
+    parsed = parse_elb_lines(_lines_df(spark))
+    enriched, finalize = enrich_and_featurize(spark, parsed, cache_path)
+    enriched.count()
+    finalize()
+    listing_before = _listing(cache_path)
+
+    enriched, finalize = enrich_and_featurize(
+        spark, parsed, cache_path, fetch_fn=_poisoned_fetch()
+    )
+    assert enriched.filter("countryName IS NULL").count() == 0
+    finalize()
+    assert _listing(cache_path) == listing_before  # not rewritten
+    assert not os.path.exists(cache_path + ".staging")
+
+    # a non-empty delta still merges
+    old = load_geo_cache(spark, cache_path)
+    newer = _geo_rows(spark, ["5.6.7.8"], "2026-01-01 00:00:00")
+    merged = upsert_keep_latest(old, newer, ["client_ip"], "api_fetch_timestamp")
+    update_geo_cache(spark, newer, cache_path, merged)
+    got = {r.client_ip for r in load_geo_cache(spark, cache_path).collect()}
+    assert got == {"10.0.9.9", "10.1.1.1", "10.2.2.2", "10.3.3.3", "5.6.7.8"}
+
+
+def test_append_delta_commits_merge_identical_content(spark, tmp_path):
+    """Committing a disjoint delta yields exactly the keep-latest merge
+    the stage-and-swap rewrite would commit, for one new data file."""
+    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
+    from elb_log_etl_enrichment_spark.sources.geo_cache import (
+        commit_geo_cache,
+        update_geo_cache,
+    )
+
+    cache_path = str(tmp_path / "cache.parquet")
+    base = _geo_rows(spark, ["1.1.1.1", "2.2.2.2"], "2026-01-01 00:00:00")
+    commit_geo_cache(spark, base, cache_path)
+    n_files_before = len(_data_files(cache_path))
+
+    old = load_geo_cache(spark, cache_path)
+    delta = _geo_rows(spark, ["3.3.3.3"], "2026-01-01 00:02:00")
+    merged = upsert_keep_latest(old, delta, ["client_ip"], "api_fetch_timestamp")
+    update_geo_cache(spark, delta, cache_path, merged)
+
+    got = load_geo_cache(spark, cache_path)
+    assert got.count() == 3
+    assert got.select("client_ip").distinct().count() == 3  # no dup keys
+    # content identical to what the full merge rewrite would commit
+    assert got.exceptAll(merged).count() == 0
+    assert merged.exceptAll(got).count() == 0
+    # exactly ONE new data file (coalesce(1): all-or-nothing job commit)
+    assert len(_data_files(cache_path)) == n_files_before + 1
+
+
+def test_append_delta_compacts_past_ideal_plus_threshold(spark, tmp_path, monkeypatch):
+    """The compaction trigger is RELATIVE to the ideal file count for
+    the cache's byte size (an absolute threshold would make a cache
+    whose healthy layout is wider than the threshold rewrite itself
+    every run). At fixture scale ideal == 1, so with a threshold of 1
+    a 2-file directory compacts back to ONE file whose content is the
+    merge."""
+    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
+    from elb_log_etl_enrichment_spark.sources import geo_cache
+
+    monkeypatch.setattr(geo_cache, "GEO_CACHE_COMPACT_FILES", 1)
+    cache_path = str(tmp_path / "cache.parquet")
+
+    def step(ip: str, ts: str) -> None:
+        old = load_geo_cache(spark, cache_path)
+        delta = _geo_rows(spark, [ip], ts)
+        merged = upsert_keep_latest(
+            old, delta, ["client_ip"], "api_fetch_timestamp"
+        )
+        geo_cache.update_geo_cache(spark, delta, cache_path, merged)
+
+    # build through the append path so the file count is deterministic
+    # (coalesce(1): exactly one file per step; a commit_geo_cache base
+    # write may split one row across several shuffle-task files)
+    step("1.1.1.1", "2026-01-01 00:00:00")  # 0 -> 1 file
+    # 1 file + delta, threshold 1: 1 < ideal(1)+1 -> appends (2 files)
+    step("2.2.2.2", "2026-01-01 00:02:00")
+    assert len(_data_files(cache_path)) == 2
+    # 2 files >= ideal(1)+1 -> compacts: the swap replaces the
+    # directory with ONE ideal-width file holding the full merge
+    step("3.3.3.3", "2026-01-01 00:04:00")
+    assert len(_data_files(cache_path)) == 1
+    got = load_geo_cache(spark, cache_path)
+    assert sorted(r.client_ip for r in got.collect()) == [
+        "1.1.1.1", "2.2.2.2", "3.3.3.3",
+    ]
+
+
+def test_streaming_cache_append_path_matches_merge_across_ticks(spark, tmp_path):
+    """Two fetching micro-batches commit via append; the resulting
+    cache has one row per distinct IP with correct geo columns — the
+    same content a full keep-latest rewrite would produce."""
+    from elb_log_etl_enrichment_spark.streaming.elb_stream import (
+        stream_elb_pipeline,
+    )
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    out = str(tmp_path / "out")
+    lines = fixture_lines()
+    half = len(lines) // 2
+
+    def _write_gz(path: str, chunk: list[str]) -> None:
+        with gzip.open(path, "wt") as f:
+            f.write("\n".join(chunk) + "\n")
+
+    _write_gz(str(logs / "a.log.gz"), lines[:half])
+    stream_elb_pipeline(spark, str(logs / "*.gz"), out)
+    _write_gz(str(logs / "b.log.gz"), lines[half:])
+    stream_elb_pipeline(spark, str(logs / "*.gz"), out)
+
+    cache_path = os.path.join(out, "ip_geolocation_cache.parquet")
+    cache = load_geo_cache(spark, cache_path).collect()
+    ips = [r.client_ip for r in cache]
+    assert len(ips) == len(set(ips)) > 0  # one row per IP, never dupes
+    # geo columns are the deterministic fake_fetch function of the IP
+    for r in cache:
+        want = fake_fetch(r.client_ip)
+        assert r.countryCode == want["countryCode"]
+        assert r.city == want["city"]
+    # cleaned rows match the enrichment of those cache rows: the sink
+    # saw the same merged view the append committed
+    cleaned = spark.read.parquet(os.path.join(out, "cleaned_logs"))
+    joined_cc = {
+        (row.client_ip, row.countryCode) for row in
+        cleaned.select("client_ip", "countryCode").distinct().collect()
+    }
+    cache_cc = {(r.client_ip, r.countryCode) for r in cache}
+    assert joined_cc <= cache_cc
+
+
+def test_second_batch_run_appends_one_file_for_its_new_ips(spark, tmp_path):
+    """A batch run over logs with k unseen IPs commits O(k): the cache
+    gains exactly one data file, the earlier files keep their names
+    and sizes, and the cache holds one row per IP. A run with no unseen
+    IP leaves the directory listing, mtimes included, unchanged."""
+    cache_path = str(tmp_path / "cache.parquet")
+    run_pipeline(spark, _lines_df(spark), str(tmp_path / "a"),
+                 geo_cache_path=cache_path)["enriched"].unpersist()
+    files_before = {f: os.path.getsize(f) for f in _data_files(cache_path)}
+
+    # k = 2 unseen IPs: two of the fixture's clients renamed
+    moved = [
+        ln.replace(" 10.2.2.2:", " 10.7.2.2:").replace(" 10.3.3.3:", " 10.7.3.3:")
+        for ln in fixture_lines()
+    ]
+    moved_df = spark.createDataFrame([Row(value=ln) for ln in moved])
+    run_pipeline(spark, moved_df, str(tmp_path / "b"),
+                 geo_cache_path=cache_path)["enriched"].unpersist()
+    files_after = {f: os.path.getsize(f) for f in _data_files(cache_path)}
+    assert len(files_after) == len(files_before) + 1
+    assert {f: files_after[f] for f in files_before} == files_before
+    rows = load_geo_cache(spark, cache_path).collect()
+    ips = [r.client_ip for r in rows]
+    assert len(ips) == len(set(ips))
+    assert set(ips) == {
+        "10.0.9.9", "10.1.1.1", "10.2.2.2", "10.3.3.3", "10.7.2.2", "10.7.3.3",
+    }
+
+    listing = _listing(cache_path)
+    run_pipeline(spark, moved_df, str(tmp_path / "c"),
+                 geo_cache_path=cache_path,
+                 fetch_fn=_poisoned_fetch())["enriched"].unpersist()
+    assert _listing(cache_path) == listing
+
+
+def test_returned_frames_do_not_fetch_again(spark, tmp_path):
+    """The CLI counts frames["enriched"] and frames["hourly"] after
+    run_pipeline returns, so recomputing them must not call fetch_fn
+    again: they read the geo rows back from the committed cache."""
+    marker = str(tmp_path / "fetch_forbidden")
+
+    def guarded_fetch(ip: str) -> dict:
+        if os.path.exists(marker):
+            raise AssertionError(f"geo lookup for {ip} after run_pipeline returned")
+        return fake_fetch(ip)
+
+    frames = run_pipeline(spark, _lines_df(spark), str(tmp_path / "out"),
+                          fetch_fn=guarded_fetch)
+    open(marker, "w").close()
+    frames["enriched"].unpersist()
+    assert frames["hourly"].count() > 0
+    assert frames["enriched"].count() == frames["metrics"]["n_rows"]

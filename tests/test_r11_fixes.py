@@ -1,10 +1,7 @@
 """Round-11 optimization pins.
 
-Covers the structural changes of the second optimization round:
-- append-delta geo-cache commit (O(delta) per tick instead of the
-  O(cache) stage-and-swap rewrite) + its compaction backstop,
-- the streaming tick still producing a merge-identical cache through
-  the append path across multiple fetching batches,
+Covers the structural changes of the second optimization round
+(the geo-cache commit pins live in test_pipeline.py):
 - PersistSlot (the unified release-at-next-call registry replacing 13
   module-local ``_*_PERSISTED`` lists),
 - the directory-aware table-memo freshness stamp (ADVICE r10: in-place
@@ -13,165 +10,7 @@ Covers the structural changes of the second optimization round:
 
 from __future__ import annotations
 
-import glob
-import gzip
 import os
-
-from pyspark.sql import functions as F
-
-
-def _data_files(path: str) -> list[str]:
-    return sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(f)
-        and not os.path.basename(f).startswith(("_", "."))
-    )
-
-
-# ---------------------------------------------------------------------------
-# append_geo_cache_delta
-# ---------------------------------------------------------------------------
-def _geo_rows(spark, ips: list[str], ts: str):
-    from elb_log_etl_enrichment_spark.sources.geo_cache import GEO_SCHEMA
-
-    rows = [
-        (
-            ip,
-            "US",
-            "United States",
-            "Region",
-            "City",
-            1.0,
-            2.0,
-            "isp",
-            ts,
-        )
-        for ip in ips
-    ]
-    df = spark.createDataFrame(rows, GEO_SCHEMA.fieldNames())
-    return df.withColumn(
-        "api_fetch_timestamp", F.col("api_fetch_timestamp").cast("timestamp")
-    )
-
-
-def test_append_delta_commits_merge_identical_content(spark, tmp_path):
-    """Appending a disjoint delta yields exactly the keep-latest merge
-    the old stage-and-swap committed, for one new data file."""
-    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
-    from elb_log_etl_enrichment_spark.sources.geo_cache import (
-        append_geo_cache_delta,
-        commit_geo_cache,
-        load_geo_cache,
-    )
-
-    cache_path = str(tmp_path / "cache.parquet")
-    base = _geo_rows(spark, ["1.1.1.1", "2.2.2.2"], "2026-01-01 00:00:00")
-    commit_geo_cache(spark, base, cache_path)
-    n_files_before = len(_data_files(cache_path))
-
-    old = load_geo_cache(spark, cache_path)
-    delta = _geo_rows(spark, ["3.3.3.3"], "2026-01-01 00:02:00")
-    merged = upsert_keep_latest(old, delta, ["client_ip"], "api_fetch_timestamp")
-    append_geo_cache_delta(spark, delta, cache_path, merged=merged)
-
-    got = load_geo_cache(spark, cache_path)
-    assert got.count() == 3
-    assert got.select("client_ip").distinct().count() == 3  # no dup keys
-    # content identical to what the full merge rewrite would commit
-    want = upsert_keep_latest(
-        old, delta, ["client_ip"], "api_fetch_timestamp"
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # exactly ONE new data file (coalesce(1): all-or-nothing job commit)
-    assert len(_data_files(cache_path)) == n_files_before + 1
-
-
-def test_append_delta_compacts_past_ideal_plus_threshold(spark, tmp_path):
-    """The compaction trigger is RELATIVE to the ideal file count for
-    the cache's byte size (review r11: an absolute threshold would
-    make a cache whose healthy layout is wider than the threshold
-    rewrite itself every tick). At fixture scale ideal == 1, so with
-    compact_files=1 a 2-file directory compacts back to ONE file whose
-    content is the merge."""
-    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
-    from elb_log_etl_enrichment_spark.sources.geo_cache import (
-        append_geo_cache_delta,
-        load_geo_cache,
-    )
-
-    cache_path = str(tmp_path / "cache.parquet")
-
-    def step(ip: str, ts: str, **kw):
-        old = load_geo_cache(spark, cache_path)
-        delta = _geo_rows(spark, [ip], ts)
-        merged = upsert_keep_latest(
-            old, delta, ["client_ip"], "api_fetch_timestamp"
-        )
-        append_geo_cache_delta(spark, delta, cache_path, merged=merged, **kw)
-
-    # build through the append path so the file count is deterministic
-    # (coalesce(1): exactly one file per step; a commit_geo_cache base
-    # write may split one row across several shuffle-task files)
-    step("1.1.1.1", "2026-01-01 00:00:00", compact_files=1)  # 0 -> 1 file
-    # 1 file + delta, threshold 1: 1 < ideal(1)+1 -> appends (2 files)
-    step("2.2.2.2", "2026-01-01 00:02:00", compact_files=1)
-    assert len(_data_files(cache_path)) == 2
-    # 2 files >= ideal(1)+1 -> compacts: the swap replaces the
-    # directory with ONE ideal-width file holding the full merge
-    step("3.3.3.3", "2026-01-01 00:04:00", compact_files=1)
-    assert len(_data_files(cache_path)) == 1
-    got = load_geo_cache(spark, cache_path)
-    assert sorted(r.client_ip for r in got.collect()) == [
-        "1.1.1.1", "2.2.2.2", "3.3.3.3",
-    ]
-
-
-def test_streaming_cache_append_path_matches_merge_across_ticks(spark, tmp_path):
-    """Two fetching micro-batches commit via append; the resulting
-    cache has one row per distinct IP with correct geo columns — the
-    same content the r10 full-rewrite path produced."""
-    from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
-    from elb_log_etl_enrichment_spark.sources.geo_cache import load_geo_cache
-    from elb_log_etl_enrichment_spark.sources.http_geo import fake_fetch
-    from elb_log_etl_enrichment_spark.streaming.elb_stream import (
-        stream_elb_pipeline,
-    )
-
-    logs = tmp_path / "logs"
-    logs.mkdir()
-    out = str(tmp_path / "out")
-    lines = fixture_lines()
-    half = len(lines) // 2
-
-    def _write_gz(path: str, chunk: list[str]) -> None:
-        with gzip.open(path, "wt") as f:
-            f.write("\n".join(chunk) + "\n")
-
-    _write_gz(str(logs / "a.log.gz"), lines[:half])
-    stream_elb_pipeline(spark, str(logs / "*.gz"), out)
-    _write_gz(str(logs / "b.log.gz"), lines[half:])
-    stream_elb_pipeline(spark, str(logs / "*.gz"), out)
-
-    cache_path = os.path.join(out, "ip_geolocation_cache.parquet")
-    cache = load_geo_cache(spark, cache_path).collect()
-    ips = [r.client_ip for r in cache]
-    assert len(ips) == len(set(ips)) > 0  # one row per IP, never dupes
-    # geo columns are the deterministic fake_fetch function of the IP
-    for r in cache:
-        want = fake_fetch(r.client_ip)
-        assert r.countryCode == want["countryCode"]
-        assert r.city == want["city"]
-    # cleaned rows match the enrichment of those cache rows: the sink
-    # saw the same merged view the append committed
-    cleaned = spark.read.parquet(os.path.join(out, "cleaned_logs"))
-    joined_cc = {
-        (row.client_ip, row.countryCode) for row in
-        cleaned.select("client_ip", "countryCode").distinct().collect()
-    }
-    cache_cc = {(r.client_ip, r.countryCode) for r in cache}
-    assert joined_cc <= cache_cc
 
 
 # ---------------------------------------------------------------------------

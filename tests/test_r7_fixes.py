@@ -344,50 +344,6 @@ def test_ann_index_artifacts_persist_across_sessions(spark, monkeypatch):
     assert second == first
 
 
-def test_geo_cache_empty_update_skips_rewrite(spark, tmp_path):
-    """update_geo_cache with zero new entries must return the cache
-    UNTOUCHED — no staging write, no swap (r7: a cron tick with no
-    unseen IPs must not rewrite a web-scale cache), and the swap of a
-    non-empty update goes through the scheme-aware Hadoop FS API."""
-    import os
-
-    from elb_log_etl_enrichment_spark.sources.geo_cache import (
-        GEO_SCHEMA,
-        load_geo_cache,
-        update_geo_cache,
-    )
-
-    cache_path = str(tmp_path / "geo_cache.parquet")
-    seed = spark.createDataFrame(
-        [("1.2.3.4", "C1", "Country1", "R1", "City1", 1.0, -1.0, "ISP1", None)],
-        GEO_SCHEMA,
-    )
-    update_geo_cache(spark, seed, cache_path)
-    listing_before = sorted(
-        (f, os.path.getmtime(os.path.join(cache_path, f)))
-        for f in os.listdir(cache_path)
-    )
-
-    empty = spark.createDataFrame([], GEO_SCHEMA)
-    out = update_geo_cache(spark, empty, cache_path)
-    listing_after = sorted(
-        (f, os.path.getmtime(os.path.join(cache_path, f)))
-        for f in os.listdir(cache_path)
-    )
-    assert listing_after == listing_before  # not rewritten
-    assert not os.path.exists(cache_path + ".staging")
-    assert [r.client_ip for r in out.collect()] == ["1.2.3.4"]
-
-    # non-empty update still merges with last-write-wins
-    newer = spark.createDataFrame(
-        [("5.6.7.8", "C2", "Country2", "R2", "City2", 2.0, -2.0, "ISP2", None)],
-        GEO_SCHEMA,
-    )
-    update_geo_cache(spark, newer, cache_path)
-    got = {r.client_ip for r in load_geo_cache(spark, cache_path).collect()}
-    assert got == {"1.2.3.4", "5.6.7.8"}
-
-
 def test_ann_artifact_keys_distinguish_transformed_frames(spark, monkeypatch):
     """code-review r7: the artifact/memo key must include the frame's
     semantic plan identity — a FILTERED frame over the same files must
