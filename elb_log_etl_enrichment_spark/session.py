@@ -16,6 +16,25 @@ Scale design notes (target: 1000-executor cluster, ~100 TB inputs):
 * Arrow is enabled for the few Pandas-UDF paths (user-agent
   classification, HTTP enrichment, multimodal plumbing). Everything
   else stays JVM-side in whole-stage codegen.
+* The codegen class cache holds 1000 entries
+  (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100).
+  This pays only when one JVM runs the pipeline or the queries two or
+  more times: the benchmark's warm loop, ``bench.py``'s sweep,
+  ``scripts/profile_query.py`` and the test suite. The CLI runs once
+  per JVM and gains nothing; its one run compiles its ~117 classes at
+  either size. One batch ``run_pipeline`` needs about 117 distinct
+  generated classes and a stream tick 73 (plus 14 on a compaction
+  tick). At 100, every warm batch run evicted what the next one needed
+  and recompiled ~94 classes (the stream tick after a compaction 22),
+  which then ran interpreted until the JIT caught up again. 1000 is
+  about 8x the batch working set. It does not hold the whole registry:
+  ``bench.py``'s 194-query sweep has about 1,880 distinct classes and
+  compiles 2,021 at 1000 (2,903 at 100). The cache is a JVM-wide
+  static, sized once from the conf of the first session that touches
+  codegen in the process, so the setting only works on the builder: a
+  session ``get_spark`` did not build (e.g. the driver's own, handed to
+  ``queries()``) keeps the 100-entry default, and
+  ``ensure_engine_confs`` cannot change it at runtime.
 """
 
 from __future__ import annotations
@@ -26,6 +45,8 @@ from pyspark.sql import SparkSession
 
 #: Confs that are safe to (re)apply to an externally provided session at
 #: runtime — e.g. the driver's own SparkSession handed to ``queries()``.
+#: Static confs such as the codegen cache size cannot be set at runtime,
+#: so they live on the ``get_spark`` builder only.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -116,6 +137,8 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
+        # Static: sizes the JVM-wide codegen cache (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # Python workers import this package by name (pickled UDFs and

@@ -5,7 +5,10 @@ times cold + N warm materializations (same `.count()` action as
 bench.py, or the noop sink with --noop), then parses the event log and
 prints, per job/stage of the LAST run: duration, task count, shuffle
 read/write bytes, input bytes and spill — the numbers the Spark UI
-would show, without the UI.
+would show, without the UI. Each run also prints how many classes
+whole-stage codegen compiled during it and their mean Janino compile
+ms: a warm run that still compiles is thrashing the JVM-wide codegen
+cache, which otherwise shows only as a slower wall time.
 
 Usage:
     python scripts/profile_query.py <query> [--warm 2] [--noop]
@@ -22,6 +25,14 @@ import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) since the JVM started."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, nanos / 1e6
 
 
 def main() -> None:
@@ -54,8 +65,10 @@ def main() -> None:
     fn = REGISTRY[args.name].fn
     runs = []
     marks = []  # (t_start_ms, t_end_ms) per run, cluster clock ~ wall
+    compiles = []  # (classes, mean compile ms) per run
     for i in range(args.warm + 1):
         spark.sparkContext.setJobDescription(f"{args.name} run {i}")
+        n0, ms0 = codegen_counters(spark)
         t0 = time.time()
         df = fn(spark, sf_dir)
         if args.noop:
@@ -63,9 +76,15 @@ def main() -> None:
         else:
             df.count()
         t1 = time.time()
+        n1, ms1 = codegen_counters(spark)
         runs.append(round(t1 - t0, 3))
         marks.append((t0 * 1000, t1 * 1000))
+        compiles.append((n1 - n0, (ms1 - ms0) / (n1 - n0) if n1 > n0 else 0.0))
     print(f"{args.name}: cold {runs[0]} s; warm {runs[1:]}")
+    for i, (n, mean_ms) in enumerate(compiles):
+        label = "cold" if i == 0 else f"warm {i}"
+        print(f"  {label:>7}: {runs[i]:>8.3f} s, codegen compiled {n} classes, "
+              f"mean {mean_ms:.1f} ms")
 
     spark.stop()
     # parse the event log for the LAST run's window

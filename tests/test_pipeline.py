@@ -376,3 +376,31 @@ def test_returned_frames_do_not_fetch_again(spark, tmp_path):
     frames["enriched"].unpersist()
     assert frames["hourly"].count() > 0
     assert frames["enriched"].count() == frames["metrics"]["n_rows"]
+
+
+def test_warm_run_compiles_no_generated_classes(spark, tmp_path):
+    """A warm run_pipeline reuses every generated class of the run
+    before it. Spark's codegen cache is one JVM-wide LRU; at its
+    100-entry default a run (~117 classes at benchmark scale) evicted
+    what the next one needed, so every warm run recompiled. Both runs
+    start from a fresh copy of one seed cache, so they plan alike."""
+    import shutil
+
+    from elb_log_etl_enrichment_spark.sources.geo_cache import commit_geo_cache
+
+    seed = str(tmp_path / "seed_cache.parquet")
+    commit_geo_cache(
+        spark, _geo_rows(spark, ["10.1.1.1", "10.2.2.2"], "2026-01-01 00:00:00"), seed
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(name: str) -> None:
+        cache = str(tmp_path / name / "cache.parquet")
+        shutil.copytree(seed, cache)
+        run_pipeline(spark, _lines_df(spark), str(tmp_path / name / "out"),
+                     geo_cache_path=cache)["enriched"].unpersist()
+
+    run("first")
+    before = compiles.getCount()
+    run("second")
+    assert compiles.getCount() - before == 0
