@@ -9,6 +9,8 @@ oracle (results stay right) but catastrophic at scale.
 
 from __future__ import annotations
 
+import pytest
+
 from elb_log_etl_enrichment_spark.plans.audit import plan_stats, plan_text
 
 SF = "/root/testdata/sf0.001"
@@ -239,13 +241,9 @@ def test_approx_percentile_twins_track_exact(spark):
         assert r["n"] == exact_f[et]["n"]
 
 
-def test_registry_prefix_is_oracle_backed_and_complete(spark):
-    """Driver-sampling triage (VERDICT r01 item 8): every CORE_PREFIX
-    name must exist and be oracle-backed; the first 50 returned by
-    all_queries() must be exactly oracle-backed queries; rows-only
-    queries must all sort after every oracle-backed one."""
+def _assert_driver_order():
     from elb_log_etl_enrichment_spark.plans.queries import (
-        CORE_PREFIX,
+        DRIVER_ORDER,
         REGISTRY,
         all_oracle_sql,
         all_queries,
@@ -253,15 +251,40 @@ def test_registry_prefix_is_oracle_backed_and_complete(spark):
 
     names = list(all_queries())
     osql = all_oracle_sql()
-    missing = [n for n in CORE_PREFIX if n not in REGISTRY]
-    assert not missing, missing
-    assert names[: len(CORE_PREFIX)] == CORE_PREFIX
+    assert len(DRIVER_ORDER) == len(set(DRIVER_ORDER))
+    assert sorted(DRIVER_ORDER) == sorted(REGISTRY), (
+        sorted(set(REGISTRY) ^ set(DRIVER_ORDER))
+    )
+    assert names == DRIVER_ORDER
     assert all(n in osql for n in names[:50]), [n for n in names[:50] if n not in osql]
     first_rows_only = next(
         (i for i, n in enumerate(names) if n not in osql), len(names)
     )
     assert all(n not in osql for n in names[first_rows_only:])
-    assert len(names) == len(set(names)) == len(REGISTRY)
+
+
+def test_registry_prefix_is_oracle_backed_and_complete():
+    """The driver samples the first 50 names of all_queries(): that
+    order is the literal DRIVER_ORDER, which lists every registered
+    query exactly once; the first 50 are oracle-backed and rows-only
+    queries sort after every oracle-backed one."""
+    _assert_driver_order()
+
+
+def test_unlisted_query_fails_the_registry_order_check(monkeypatch):
+    """A query registered without a DRIVER_ORDER entry must fail the
+    order check instead of silently dropping out of the registry."""
+    from elb_log_etl_enrichment_spark.plans import queries
+
+    queries._load_extensions()
+    spec = queries.REGISTRY["pricing_summary"]
+    monkeypatch.setitem(
+        queries.REGISTRY,
+        "unlisted_query",
+        queries.QuerySpec("unlisted_query", spec.fn, spec.sql, spec.tags),
+    )
+    with pytest.raises(AssertionError):
+        _assert_driver_order()
 
 
 def test_salted_join_spreads_hot_key_and_matches_plain_join(spark):
