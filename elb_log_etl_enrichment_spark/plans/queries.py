@@ -811,56 +811,182 @@ def asof_latest_order_before_event(spark: SparkSession, sf_dir: str) -> DataFram
 #: Rule: queries whose plan changed since their last driver row first,
 #: then the rest stalest-first per scripts/driver_staleness.py (ties keep order).
 DRIVER_ORDER = [
-    "exact_median_two_pass",
-    "forget_entity_audit",
-    "temporal_embargo_split_audit",
     "elb_pipeline_hourly",
     "elb_error_report",
     "elb_bot_report",
     "streaming_elb_pipeline_hourly",
-    "padding_waste_audit",
-    "mann_whitney_u",
-    "kruskal_wallis_value_by_type",
-    "simhash_near_dup",
-    "simhash_weighted_near_dup",
-    "association_rules_parts",
-    "multi_horizon_backtest",
-    "dim_truncation_recall",
-    "cuped_adjusted_lift",
-    "value_drift_audit",
-    "watermark_lateness_profile",
-    "hll_sketch_distinct_users",
-    "embedding_near_dup_pairs",
-    "ewma_control_chart",
-    "mergeable_histogram_quantiles",
-    "multimodal_decode_stats",
-    "ngram_jaccard_near_dup",
-    "order_price_quartiles",
-    "orders_above_avg_scalar_subquery",
-    "pareto_concentration",
-    "snapshot_diff_orders",
-    "streaming_hourly_counts",
-    "streaming_sessionize_events",
-    "streaming_static_nation_counts",
-    "streaming_view_purchase_outer",
-    "top3_customers_per_nation",
-    "zscore_outlier_events",
-    "exact_dedup_documents",
-    "format_matrix_roundtrip",
-    "geo_hotspot_clusters",
-    "join_cardinality_estimate",
-    "leakproof_customer_split",
-    "lpa_communities",
-    "partition_backfill_stats",
-    "pii_redaction_audit",
-    "referential_integrity_audit",
-    "scd2_user_event_intervals",
-    "segment_digest_reconcile",
-    "sequence_packing_stats",
-    "streaming_timeout_sessions",
-    "vocab_growth_audit",
-    "write_audit_publish_stats",
-    "zorder_layout_audit",
+    "ab_welch_ttest",
+    "ols_order_value_regression",
+    "embedding_dim_profile",
+    "bm25_top_docs",
+    "knn_label_agreement",
+    "count_min_sketch_audit",
+    "nation_trade_pagerank",
+    "stratified_sample_audit",
+    "lateral_top2_customers",
+    "expectations_audit",
+    "training_export_pipeline",
+    "gapfill_locf_hourly",
+    "cohort_retention_matrix",
+    "funnel_view_click_purchase",
+    "dsir_importance_weights",
+    "semdedup_survivors",
+    "l_diversity_audit",
+    "column_encryption_roundtrip",
+    "range_lookup_join",
+    "heavy_hitter_tokens",
+    "simhash_block_bias_audit",
+    "multimodal_image_resize_stats",
+    "multimodal_audio_frame_features",
+    "multimodal_video_frame_sample_stats",
+    "cosine_topk_lsh",
+    "winnowing_collision_pairs",
+    "duplicated_span_coverage",
+    "gopher_quality_battery",
+    "rfm_segment_counts",
+    "benford_first_digit_audit",
+    "string_function_battery",
+    "incremental_hourly_rollup",
+    "pmi_collocations",
+    "cusum_changepoint",
+    "user_survival_curve",
+    "cosine_topk_arrow",
+    "bloom_decontamination_audit",
+    "tfidf_top_terms",
+    "multimodal_pixel_roundtrip_stats",
+    "multimodal_wav_roundtrip_stats",
+    "multimodal_video_motion_stats",
+    "udtf_token_spans",
+    "grouped_agg_pandas_gmean",
+    "jsonl_roundtrip_stats",
+    "naive_bayes_langid_confusion",
+    "streaming_sliding_window_counts",
+    "shard_rebalance_audit",
+    "seasonal_residual_anomalies",
+    "gini_concentration",
+    "deterministic_uniform_sample",
+    "geo_cell_density",
+    "dynamic_gap_sessions",
+    "multimodal_sniff_stats",
+    "cube_status_priority",
+    "asof_next_order_after_event",
+    "salted_event_mktsegment_join",
+    "streaming_ohlc_bars",
+    "streaming_stateful_user_totals",
+    "per_nation_deterministic_sample",
+    "schema_drift_union_stats",
+    "seasonal_naive_backtest",
+    "variant_props_stats",
+    "elb_template_mining",
+    "datetime_function_battery",
+    "sql_api_region_order_totals",
+    "from_json_props_stats",
+    "doc_fingerprint_summary",
+    "shingle_containment_pairs",
+    "streaming_dedup_distinct_users",
+    "filtered_revenue_simple",
+    "returned_items_topk",
+    "window_value_functions",
+    "null_safe_join_battery",
+    "grouping_sets_customer",
+    "cheapest_part_per_type_size",
+    "sole_fault_suppliers",
+    "priority_exists_orders",
+    "market_share_ratio",
+    "high_balance_no_orders",
+    "shipping_priority_topk",
+    "top_supplier_by_revenue",
+    "large_volume_customers",
+    "dedup_cluster_sizes",
+    "simhash_documents",
+    "winnowing_fingerprints",
+    "incremental_ingest_dedup",
+    "recursive_knn_bfs_levels",
+    "knn_clustering_coefficient",
+    "supplier_knn_triangles",
+    "streaming_wap_publish_stats",
+    "streaming_dedup_hourly_active_users",
+    "ohlc_bars_events",
+    "event_transition_matrix",
+    "max_concurrent_shipments",
+    "synthetic_source_status_counts",
+    "equi_depth_histogram_orders_approx",
+    "iqr_outlier_audit_approx",
+    "vocab_growth_audit_approx",
+    "bpe_encode_stats",
+    "profit_by_nation_year",
+    "nation_pair_volume",
+    "local_supplier_volume",
+    "promo_revenue_ratio",
+    "quarterly_growth_by_priority",
+    "supplier_variety_by_part",
+    "cube_priority_status",
+    "excess_volume_suppliers",
+    "important_parts_value_threshold",
+    "shipment_priority_buckets",
+    "small_qty_order_revenue",
+    "disjunctive_bracket_revenue",
+    "array_function_battery",
+    "null_handling_battery",
+    "listagg_bitwise_battery",
+    "map_struct_event_stats",
+    "posexplode_ordinal_tokens",
+    "unpivot_order_status_counts",
+    "pii_redaction_stats",
+    "text_quality_scores",
+    "token_entropy_quality",
+    "doc_chunking_stats",
+    "minhash_calibration",
+    "stratified_sample_counts",
+    "langid_confusion",
+    "leakage_safe_split_audit",
+    "curation_funnel_by_source",
+    "dedup_survivor_stats",
+    "batch_session_window_stats",
+    "rolling_distinct_users",
+    "time_weighted_avg_users",
+    "parquet_footer_stats",
+    "streaming_neardup_ingest_stats",
+    "streaming_ingest_dedup_stats",
+    "k_anonymity_audit",
+    "srm_balance_audit",
+    "multimodal_pipeline_stats",
+    "exact_dedup_map_payload",
+    "elb_device_report",
+    "approx_aggregates_events",
+    "cosine_topk_pq",
+    "cosine_topk_ivfpq",
+    "embedding_pca_variance",
+    "cosine_topk_ivfpq_rerank",
+    "embedding_centroid_drift",
+    "embedding_quantization_error",
+    "feature_hashing_vectors",
+    "nearest_dc_assignment",
+    "ab_conversion_ztest",
+    "mad_outlier_census",
+    "stat_moments_by_returnflag",
+    "regression_battery",
+    "column_profile_lineitem",
+    "table_content_digest",
+    "compaction_binpack_plan",
+    "shard_assignment_stats",
+    "uniqueness_violations",
+    "skew_profile_events",
+    "equi_depth_histogram_orders",
+    "iqr_outlier_audit",
+    "readability_scores",
+    "token_diversity_flags",
+    "bigram_repetition_flags",
+    "doc_length_histogram",
+    "fuzzy_name_match_stats",
+    "token_explode_topk",
+    "weighted_sample_audit",
+    "deterministic_split_counts",
+    "source_mixing_weights",
+    "mixture_rebalance_weights",
+    "session_relative_features",
+    "activity_bitmap_stats",
+    "hinted_join_strategies",
     "bpe_merge_table",
     "cosine_topk_ivf",
     "cosine_topk_ivf_bucketed",
@@ -909,178 +1035,52 @@ DRIVER_ORDER = [
     "cosine_topk_bruteforce",
     "hourly_event_aggregate",
     "incremental_join_rollup",
-    "streaming_neardup_ingest_stats",
-    "streaming_ingest_dedup_stats",
-    "k_anonymity_audit",
-    "srm_balance_audit",
-    "multimodal_pipeline_stats",
-    "exact_dedup_map_payload",
-    "elb_device_report",
-    "approx_aggregates_events",
-    "cosine_topk_pq",
-    "cosine_topk_ivfpq",
-    "embedding_pca_variance",
-    "cosine_topk_ivfpq_rerank",
-    "embedding_centroid_drift",
-    "embedding_quantization_error",
-    "feature_hashing_vectors",
-    "nearest_dc_assignment",
-    "ab_conversion_ztest",
-    "mad_outlier_census",
-    "stat_moments_by_returnflag",
-    "regression_battery",
-    "column_profile_lineitem",
-    "table_content_digest",
-    "compaction_binpack_plan",
-    "shard_assignment_stats",
-    "uniqueness_violations",
-    "skew_profile_events",
-    "equi_depth_histogram_orders",
-    "iqr_outlier_audit",
-    "readability_scores",
-    "token_diversity_flags",
-    "bigram_repetition_flags",
-    "doc_length_histogram",
-    "fuzzy_name_match_stats",
-    "token_explode_topk",
-    "weighted_sample_audit",
-    "deterministic_split_counts",
-    "source_mixing_weights",
-    "mixture_rebalance_weights",
-    "session_relative_features",
-    "activity_bitmap_stats",
-    "hinted_join_strategies",
-    "bpe_encode_stats",
-    "profit_by_nation_year",
-    "nation_pair_volume",
-    "local_supplier_volume",
-    "promo_revenue_ratio",
-    "quarterly_growth_by_priority",
-    "supplier_variety_by_part",
-    "cube_priority_status",
-    "excess_volume_suppliers",
-    "important_parts_value_threshold",
-    "shipment_priority_buckets",
-    "small_qty_order_revenue",
-    "disjunctive_bracket_revenue",
-    "array_function_battery",
-    "null_handling_battery",
-    "listagg_bitwise_battery",
-    "map_struct_event_stats",
-    "posexplode_ordinal_tokens",
-    "unpivot_order_status_counts",
-    "pii_redaction_stats",
-    "text_quality_scores",
-    "token_entropy_quality",
-    "doc_chunking_stats",
-    "minhash_calibration",
-    "stratified_sample_counts",
-    "langid_confusion",
-    "leakage_safe_split_audit",
-    "curation_funnel_by_source",
-    "dedup_survivor_stats",
-    "batch_session_window_stats",
-    "rolling_distinct_users",
-    "time_weighted_avg_users",
-    "parquet_footer_stats",
-    "from_json_props_stats",
-    "doc_fingerprint_summary",
-    "shingle_containment_pairs",
-    "streaming_dedup_distinct_users",
-    "filtered_revenue_simple",
-    "returned_items_topk",
-    "window_value_functions",
-    "null_safe_join_battery",
-    "grouping_sets_customer",
-    "cheapest_part_per_type_size",
-    "sole_fault_suppliers",
-    "priority_exists_orders",
-    "market_share_ratio",
-    "high_balance_no_orders",
-    "shipping_priority_topk",
-    "top_supplier_by_revenue",
-    "large_volume_customers",
-    "dedup_cluster_sizes",
-    "simhash_documents",
-    "winnowing_fingerprints",
-    "incremental_ingest_dedup",
-    "recursive_knn_bfs_levels",
-    "knn_clustering_coefficient",
-    "supplier_knn_triangles",
-    "streaming_wap_publish_stats",
-    "streaming_dedup_hourly_active_users",
-    "ohlc_bars_events",
-    "event_transition_matrix",
-    "max_concurrent_shipments",
-    "synthetic_source_status_counts",
-    "equi_depth_histogram_orders_approx",
-    "iqr_outlier_audit_approx",
-    "vocab_growth_audit_approx",
-    "incremental_hourly_rollup",
-    "pmi_collocations",
-    "cusum_changepoint",
-    "user_survival_curve",
-    "cosine_topk_arrow",
-    "bloom_decontamination_audit",
-    "tfidf_top_terms",
-    "multimodal_pixel_roundtrip_stats",
-    "multimodal_wav_roundtrip_stats",
-    "multimodal_video_motion_stats",
-    "udtf_token_spans",
-    "grouped_agg_pandas_gmean",
-    "jsonl_roundtrip_stats",
-    "naive_bayes_langid_confusion",
-    "streaming_sliding_window_counts",
-    "shard_rebalance_audit",
-    "seasonal_residual_anomalies",
-    "gini_concentration",
-    "deterministic_uniform_sample",
-    "geo_cell_density",
-    "dynamic_gap_sessions",
-    "multimodal_sniff_stats",
-    "cube_status_priority",
-    "asof_next_order_after_event",
-    "salted_event_mktsegment_join",
-    "streaming_ohlc_bars",
-    "streaming_stateful_user_totals",
-    "per_nation_deterministic_sample",
-    "schema_drift_union_stats",
-    "seasonal_naive_backtest",
-    "variant_props_stats",
-    "elb_template_mining",
-    "datetime_function_battery",
-    "sql_api_region_order_totals",
-    "knn_label_agreement",
-    "count_min_sketch_audit",
-    "nation_trade_pagerank",
-    "stratified_sample_audit",
-    "lateral_top2_customers",
-    "expectations_audit",
-    "training_export_pipeline",
-    "gapfill_locf_hourly",
-    "cohort_retention_matrix",
-    "funnel_view_click_purchase",
-    "dsir_importance_weights",
-    "semdedup_survivors",
-    "l_diversity_audit",
-    "column_encryption_roundtrip",
-    "range_lookup_join",
-    "heavy_hitter_tokens",
-    "simhash_block_bias_audit",
-    "multimodal_image_resize_stats",
-    "multimodal_audio_frame_features",
-    "multimodal_video_frame_sample_stats",
-    "cosine_topk_lsh",
-    "winnowing_collision_pairs",
-    "duplicated_span_coverage",
-    "gopher_quality_battery",
-    "rfm_segment_counts",
-    "benford_first_digit_audit",
-    "string_function_battery",
-    "ab_welch_ttest",
-    "ols_order_value_regression",
-    "embedding_dim_profile",
-    "bm25_top_docs",
+    "exact_median_two_pass",
+    "forget_entity_audit",
+    "temporal_embargo_split_audit",
+    "padding_waste_audit",
+    "mann_whitney_u",
+    "kruskal_wallis_value_by_type",
+    "simhash_near_dup",
+    "simhash_weighted_near_dup",
+    "association_rules_parts",
+    "multi_horizon_backtest",
+    "dim_truncation_recall",
+    "cuped_adjusted_lift",
+    "value_drift_audit",
+    "watermark_lateness_profile",
+    "hll_sketch_distinct_users",
+    "embedding_near_dup_pairs",
+    "ewma_control_chart",
+    "mergeable_histogram_quantiles",
+    "multimodal_decode_stats",
+    "ngram_jaccard_near_dup",
+    "order_price_quartiles",
+    "orders_above_avg_scalar_subquery",
+    "pareto_concentration",
+    "snapshot_diff_orders",
+    "streaming_hourly_counts",
+    "streaming_sessionize_events",
+    "streaming_static_nation_counts",
+    "streaming_view_purchase_outer",
+    "top3_customers_per_nation",
+    "zscore_outlier_events",
+    "exact_dedup_documents",
+    "format_matrix_roundtrip",
+    "geo_hotspot_clusters",
+    "join_cardinality_estimate",
+    "leakproof_customer_split",
+    "lpa_communities",
+    "partition_backfill_stats",
+    "pii_redaction_audit",
+    "referential_integrity_audit",
+    "scd2_user_event_intervals",
+    "segment_digest_reconcile",
+    "sequence_packing_stats",
+    "streaming_timeout_sessions",
+    "vocab_growth_audit",
+    "write_audit_publish_stats",
+    "zorder_layout_audit",
 ]
 
 
