@@ -593,7 +593,7 @@ def build_ivf_index(
     memo → artifact → seeded-sample-fit chain the query-time operator
     uses — so a layout built here and a :func:`cosine_topk_ivf` call
     on the same corpus share bit-identical geometry (pair-set parity
-    is pinned in tests/test_r10_fixes.py). Cell assignment is the same
+    is pinned in tests/test_similarity.py). Cell assignment is the same
     expanded ``‖c−cent‖²`` argmin the Arrow kernel computes, run once
     per row as a vectorized Arrow pass. Zero-norm vectors are
     excluded at build (undefined cosine — they can never be
@@ -685,7 +685,7 @@ def cosine_topk_ivf_bucketed(
 
     vs :func:`cosine_topk_ivf` (same centroids, same probe rule, same
     Arrow scoring — pair-for-pair identical results, pinned in
-    tests/test_r10_fixes.py): the query-time operator re-assigns
+    tests/test_similarity.py): the query-time operator re-assigns
     every corpus row to its cell on every call because the local
     corpus is not pre-bucketed; here assignment happened once at
     BUILD, so the serve scan (a) reads only

@@ -1552,7 +1552,7 @@ def cosine_topk_ivf_bucketed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivf_index + cosine_topk_ivf_bucketed): cell assignment is
     write-once storage, the serve scan partition-prunes to the probed
     cells, and results are pair-identical to cosine_topk_ivf on the
-    same centroids (pinned in tests/test_r10_fixes.py, along with the
+    same centroids (pinned in tests/test_similarity.py, along with the
     plan-asserted pruning). Same recall@3 audit/floor as the
     query-time twin — identical results, identical recall."""
     return _ann_recall_audit(

@@ -4,9 +4,11 @@
 For every query in the registry, report the most recent driver
 CORRECTNESS round that sampled it (and whether that row was a full
 hash pass). The driver samples the FIRST 50 entries of
-``all_queries()`` each round, so this table is the rotation-debt
-ledger: any query whose last driver row is many rounds old should be
-rotated back into the head.
+``all_queries()`` each round; that order is the literal
+``DRIVER_ORDER`` list in ``plans/queries.py``. Rule for rotating it:
+queries whose plan changed since their last driver row go first, then
+every other name by this table's staleness, descending, ties keeping
+their current ``DRIVER_ORDER`` position.
 
 Usage:
     python scripts/driver_staleness.py            # table, stalest first

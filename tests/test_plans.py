@@ -354,6 +354,52 @@ def test_salted_join_guards_and_key_only_frames(spark):
     assert n_salts > 1
 
 
+def test_aqe_splits_skewed_join_partitions(spark, tmp_path):
+    """AQE skew-join handling (the 100 TB answer to hot keys when
+    salting isn't applied): with thresholds forced low, a sort-merge
+    join against a heavily skewed key column must show skew-split
+    partitions in the final adaptive plan ("n skewed partitions"
+    annotation / CustomShuffleReader splitting), proving the runtime
+    re-plan path is available to every shuffle join in the registry."""
+    import pyspark.sql.functions as F
+
+    confs = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        # 95 % of left rows share key 0; right side is uniform
+        left = spark.range(200_000).select(
+            F.when(F.col("id") % 20 != 0, F.lit(0))
+            .otherwise(F.col("id") % 50)
+            .alias("k"),
+            F.concat(F.lit("payload_"), F.col("id")).alias("pad"),
+        )
+        right = spark.range(50).select(
+            F.col("id").alias("k"), F.lit("dim").alias("attr")
+        )
+        j = left.join(right, "k").groupBy("attr").count()
+        rows = j.collect()  # materialize so AQE finalizes the plan
+        assert sum(r["count"] for r in rows) == 200_000  # no row lost
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        assert "skewed" in plan.lower(), plan[:4000]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_expectations_audit_catches_planted_violations(spark, tmp_path):
     """A corpus with a negative total price, an out-of-enum status, an
     orphan custkey, and an out-of-range quantity must fail exactly
@@ -652,51 +698,6 @@ def test_sketch_queries_track_exact_counts(spark):
     for et, r in audit_rows.items():
         assert r["users_est_ok"] == 1 and r["median_rank_ok"] == 1, (et, r)
         assert r["n"] == exact[et]["n"]
-
-
-def test_aqe_splits_skewed_join_partitions(spark, tmp_path):
-    """AQE skew-join handling (the 100 TB answer to hot keys when
-    salting isn't applied): with thresholds forced low, a sort-merge
-    join against a heavily skewed key column must show skew-split
-    partitions in the final adaptive plan ("n skewed partitions"
-    annotation / CustomShuffleReader splitting), proving the runtime
-    re-plan path is available to every shuffle join in the registry."""
-    import pyspark.sql.functions as F
-
-    confs = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        # 95 % of left rows share key 0; right side is uniform
-        left = spark.range(200_000).select(
-            F.when(F.col("id") % 20 != 0, F.lit(0))
-            .otherwise(F.col("id") % 50)
-            .alias("k"),
-            F.concat(F.lit("payload_"), F.col("id")).alias("pad"),
-        )
-        right = spark.range(50).select(
-            F.col("id").alias("k"), F.lit("dim").alias("attr")
-        )
-        j = left.join(right, "k").groupBy("attr").count()
-        j.collect()  # materialize so AQE finalizes the plan
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan
-        assert "skewed" in plan.lower(), plan[:4000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q18_single_fact_exchange_and_topk(spark):

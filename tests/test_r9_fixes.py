@@ -317,7 +317,7 @@ class TestMemoHygiene:
         assert set(memo) == {("a", 1), ("a", 3)}
         # ADVICE r10: same-app evictions are SILENT (a held
         # checkpointed frame must keep its blocks) — on_evict fires
-        # only cross-app; see test_r10_fixes.TestMemoSameAppEviction
+        # only cross-app; see test_memo.TestMemoSameAppEviction
         assert evicted == []
 
     def test_backfill_dirs_atexit_cleanup(self, tmp_path):

@@ -1,0 +1,174 @@
+"""Similarity operators (operators/similarity.py): the corpus-count
+cache and the cell-bucketed IVF serving layout.
+
+* ``_corpus_count``'s fallback cache lives in a module-scope
+  WeakKeyDictionary, not on the DataFrame wrapper: an explicit
+  lifetime contract that survives a PySpark which adds ``__slots__``
+  or connect-mode proxies that drop attributes.
+"""
+
+from __future__ import annotations
+
+import gc
+
+from pyspark.sql import functions as F
+
+SF = "/root/testdata/sf0.001"
+
+
+class TestCorpusCountWeakCache:
+    def test_no_monkey_attribute_and_no_rescan(self, spark):
+        from elb_log_etl_enrichment_spark.operators import similarity
+
+        emb = spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(6)], "id long, emb array<double>"
+        )
+        p = emb
+        n1 = similarity._corpus_count(p, emb, None, None, "v")
+        assert n1 == 6
+        # cached in the module-scope weak dict, NOT on the wrapper
+        assert not hasattr(emb, "_sg_corpus_count")
+        assert similarity._FRAME_COUNT_CACHE.get(emb) == {"v": 6}
+
+        # second call hits the cache even if counting would now fail
+        class Boom:
+            def count(self):
+                raise AssertionError("re-scanned despite cache")
+
+        n2 = similarity._corpus_count(Boom(), emb, None, None, "v")
+        assert n2 == 6
+
+    def test_entry_dies_with_wrapper(self, spark):
+        from elb_log_etl_enrichment_spark.operators import similarity
+
+        before = len(similarity._FRAME_COUNT_CACHE)
+        emb = spark.createDataFrame([(1, [1.0])], "id long, emb array<double>")
+        similarity._corpus_count(emb, emb, None, None, "v")
+        assert len(similarity._FRAME_COUNT_CACHE) == before + 1
+        del emb
+        gc.collect()
+        assert len(similarity._FRAME_COUNT_CACHE) == before
+
+
+class TestIvfBucketedLayout:
+    """The cell-bucketed IVF serving layout."""
+
+    def _embeddings(self, spark):
+        return spark.read.parquet(f"{SF}/embeddings.parquet")
+
+    def test_pair_set_parity_with_query_time_ivf(self, spark, tmp_path):
+        """Same corpus, same centroids (shared _ivf_centroids chain)
+        → the layout-served operator must return the exact pair set
+        of the query-time operator, rank for rank."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_ivf,
+            cosine_topk_ivf_bucketed,
+        )
+
+        e = self._embeddings(spark)
+        pred = F.col("vec_id") % 100 == 0
+        a = {
+            (r["query_id"], r["rnk"], r["neighbor"], r["cosine"])
+            for r in cosine_topk_ivf(e, pred, k=3).collect()
+        }
+        b = {
+            (r["query_id"], r["rnk"], r["neighbor"], r["cosine"])
+            for r in cosine_topk_ivf_bucketed(
+                e, pred, k=3, index_dir=str(tmp_path / "idx")
+            ).collect()
+        }
+        assert a == b
+        assert len(a) > 0
+
+    def test_serve_scan_partition_prunes_to_probed_cells(
+        self, spark, tmp_path
+    ):
+        """The plan-asserted pruning pin: a single query probes
+        exactly n_probe cells, and the serve scan must (a) show the
+        cell IN-list as a PartitionFilter and (b) read files ONLY
+        from those cells' directories — the other cells are never
+        touched."""
+        from elb_log_etl_enrichment_spark.operators import similarity
+
+        e = self._embeddings(spark)
+        idx = str(tmp_path / "idx")
+        similarity.build_ivf_index(e, index_dir=idx, n_cells=16)
+
+        captured = {}
+        real_read = similarity.cosine_topk_ivf_bucketed
+
+        # run with one query; capture the pruned scan by rebuilding it
+        # the way the operator does
+        res = real_read(
+            e, F.col("vec_id") == 0, k=3, n_cells=16, n_probe=3,
+            index_dir=idx,
+        )
+        res.collect()
+
+        # reconstruct the pruned read to inspect the physical plan
+        import numpy as np
+
+        loaded = similarity._index_artifact_load(
+            f"{idx}/centroids.npz", ["centers"]
+        )
+        cent = np.asarray(loaded[0])
+        row = (
+            similarity._prepared(e)
+            .filter(F.col("vec_id") == 0)
+            .collect()[0]
+        )
+        qd2 = ((np.array(row["v"])[None, :] - cent) ** 2).sum(-1)
+        probed = sorted(np.argsort(qd2, kind="stable")[:3].tolist())
+        pruned = spark.read.parquet(f"{idx}/corpus").filter(
+            F.col("cell").isin([int(c) for c in probed])
+        )
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters" in plan and "cell" in plan, plan[:2000]
+        # runtime truth (DataFrame.inputFiles() lists the relation's
+        # files BEFORE partition pruning): the files actually scanned
+        # must all live under the probed cells' directories
+        scanned = [
+            r[0]
+            for r in pruned.select(F.input_file_name()).distinct().collect()
+        ]
+        assert scanned, "pruned scan read no files"
+        for f in scanned:
+            assert any(f"cell={c}/" in f for c in probed), f
+        scanned_cells = {
+            f.split("cell=")[1].split("/")[0] for f in scanned
+        }
+        assert len(scanned_cells) <= 3  # n_probe
+        # and it genuinely pruned: the full layout has more cells
+        all_cells = {
+            r[0]
+            for r in spark.read.parquet(f"{idx}/corpus")
+            .select("cell")
+            .distinct()
+            .collect()
+        }
+        assert len(scanned_cells) < len(all_cells)
+        captured["ok"] = True
+        assert captured["ok"]
+
+    def test_build_is_idempotent_and_excludes_zero_norm(
+        self, spark, tmp_path
+    ):
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            build_ivf_index,
+        )
+
+        e = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 2.0]), (2, [0.0, 0.0])],
+            "vec_id long, embedding array<double>",
+        )
+        idx = str(tmp_path / "idx")
+        out = build_ivf_index(e, index_dir=idx, n_cells=2)
+        assert out == idx
+        corpus = spark.read.parquet(f"{idx}/corpus")
+        ids = {r["vec_id"] for r in corpus.collect()}
+        assert ids == {0, 1}  # zero-norm vec 2 excluded
+        # idempotent: second build reuses the layout (same file set)
+        files1 = sorted(corpus.inputFiles())
+        build_ivf_index(e, index_dir=idx, n_cells=2)
+        files2 = sorted(spark.read.parquet(f"{idx}/corpus").inputFiles())
+        assert files1 == files2

@@ -411,3 +411,59 @@ def test_padding_waste_sorted_never_worse_than_arrival(spark):
     for r in rows.values():
         assert r["padded_slots"] >= r["total_tokens"]
         assert r["n_batches"] == -(-r["n_docs"] // 32)  # ceil
+
+
+class TestBpeOracleIndependence:
+    """``bpe_merge_table``: ``n_multi_words`` (distinct words of length
+    >= 2) is an oracle-matched column, and the early-stop flag also
+    requires ``len(merges) >= n_multi_words``, so a trainer bug that
+    the encoder mirrors cannot certify itself."""
+
+    def test_n_multi_words_matches_duckdb(self, spark):
+        """``n_multi_words`` is independently recomputable: engine
+        value == DuckDB value on the same corpus."""
+        import duckdb
+
+        from elb_log_etl_enrichment_spark.plans import queries
+
+        queries.all_queries()  # load extension registries
+        spec = queries.REGISTRY["bpe_merge_table"]
+        row = spec.fn(spark, SF).collect()[0]
+        con = duckdb.connect()
+        for t in ("documents",):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{SF}/{t}.parquet')"
+            )
+        orc = con.execute(spec.sql).fetchone()
+        ocols = [d[0] for d in con.execute(spec.sql).description]
+        odict = dict(zip(ocols, orc))
+        assert row["n_multi_words"] == odict["n_multi_words"]
+        assert row["n_multi_words"] > 12  # real corpus: bound has teeth
+        assert row["n_merges_ok"] == 1
+
+    def test_structural_bound_catches_overmerge(self, spark, monkeypatch):
+        """Simulate the correlated bug: trainer stops after 3 merges
+        claiming exhaustion AND the encoder mirrors it (reports every
+        word fully merged). The independent n_multi_words bound must
+        zero the flag."""
+        from elb_log_etl_enrichment_spark.operators import bpe
+        from elb_log_etl_enrichment_spark.plans import queries_training
+
+        real_train = bpe.bpe_train
+
+        def overmerging_train(words, n_merges=12):
+            return real_train(words, n_merges=n_merges)[:3]
+
+        def lying_encode(words, merges):
+            return words.select(
+                "word", F.lit(1).alias("n_bpe_tokens")
+            )
+
+        monkeypatch.setattr(
+            queries_training, "bpe_train", overmerging_train, raising=False
+        )
+        monkeypatch.setattr(bpe, "bpe_train", overmerging_train)
+        monkeypatch.setattr(bpe, "bpe_encode_tokens", lying_encode)
+        row = queries_training.bpe_merge_table(spark, SF).collect()[0]
+        assert row["n_merges_ok"] == 0
