@@ -327,7 +327,6 @@ def test_salted_join_guards_and_key_only_frames(spark):
     replica are rejected; a key-only big frame salts fine (position
     salt, no content hash); identical duplicate rows of a hot key
     spread across salts instead of landing on one reducer."""
-    import pytest
     from pyspark.sql import functions as F
 
     from elb_log_etl_enrichment_spark.operators.skew import salted_join
