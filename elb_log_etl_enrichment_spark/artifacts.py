@@ -207,7 +207,7 @@ def plan_identity(df) -> str | None:
     md5 of ``canonicalized().toString()``, NOT ``semanticHash()``:
     the canonicalized pretty-print normalizes expression ids
     (``none#0L``) and is byte-stable across JVMs (pinned by
-    test_r7_fixes), while semanticHash was measured to vary between
+    test_memo), while semanticHash was measured to vary between
     identical fresh processes on pyspark 4.1 — which would silently
     turn every cross-session artifact hit into a retrain. A
     cross-version print-format drift just retrains (miss, never a

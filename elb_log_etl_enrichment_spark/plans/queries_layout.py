@@ -538,15 +538,15 @@ def _lp(expr: str) -> str:
 def write_audit_publish_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end write-audit-publish exercise whose RESULT is the
     digest of the PUBLISHED files (not the in-memory frame): stage →
-    audit-from-staged-bytes → atomic-rename publish, then (a) retry
+    audit-from-staged-bytes → rename-aside publish, then (a) retry
     the identical publish and require the idempotent no-op, and (b)
     attempt a publish whose audit must fail (min_rows impossible)
     into a separate target and require nothing appeared there.  The
     oracle computes the same digest straight from the source table —
     a hash match proves the staged/published round trip preserved
-    every row.  See ``sinks/writers.write_audit_publish`` for the
-    commit-protocol notes (local rename == the honest single-node
-    stand-in for an Iceberg/Delta pointer swap).
+    every row.  The publish is ``hadoop_fs.fs_publish``, the package's
+    one scheme-aware commit protocol (notes and its object-store limit
+    in ``sinks/writers.write_audit_publish``).
     """
     import os
     import shutil

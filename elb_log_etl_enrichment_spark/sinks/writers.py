@@ -11,6 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..hadoop_fs import (
+    fs_delete, fs_publish, fs_recover, hadoop_path_exists, staging_path,
+)
+
 #: reference partition layout (elb_logs.py:346)
 CLEANED_PARTITIONS = ["request_year", "request_month", "request_day", "countryCode"]
 
@@ -296,16 +300,19 @@ def write_audit_publish(
     2. AUDIT by re-reading the staged files (catches truncated/corrupt
        writes, not just logical errors): row count >= ``min_rows``,
        and a content digest computed FROM THE STAGED BYTES.
-    3. PUBLISH by directory rename. A fresh publish is one atomic
-       rename; a replace renames the old table aside (``._old``),
-       renames staging in, then deletes the retired copy — readers
-       never see a mix, the not-found window is two renames (not an
-       O(table) delete), and a crash at ANY point loses nothing: the
-       old publish survives in ``._old`` and the new one in staging,
-       both reclaimed on the next run. (On object stores this
-       becomes a metastore/table-format pointer swap — Iceberg and
-       Delta commit protocols are this same pattern; local renames
-       are the honest single-node equivalent.)
+    3. PUBLISH by ``hadoop_fs.fs_publish`` — the package's one
+       rename-aside protocol, on the Hadoop FS API so any scheme
+       works. A fresh publish is one rename; a replace renames the
+       old table aside (``._old``), renames staging in, then deletes
+       the retired copy — readers never see a mix, the not-found
+       window is two renames (not an O(table) delete), and a crash at
+       ANY point loses nothing: the next call's ``fs_recover`` rolls
+       an orphaned ``._old`` back (or GCs a superseded one) and
+       deletes abandoned staging before it writes. Rename is not
+       atomic on object stores, so an outside reader can still see
+       that two-rename not-found window; a production table would
+       publish by a metastore/table-format pointer swap (Iceberg and
+       Delta commit protocols are this same pattern).
 
     Idempotent retry: if ``final_dir`` already holds data whose digest
     equals the staged digest, the publish is a no-op (``published:
@@ -316,66 +323,32 @@ def write_audit_publish(
     "noop"}``. Raises :class:`AuditFailure` (staging removed, target
     untouched) when the audit fails.
     """
-    import os
-    import shutil
-
     spark = df.sparkSession
-    staging = final_dir.rstrip("/") + "._staging"
-    retired = final_dir.rstrip("/") + "._old"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # abandoned staging from a crashed run
-    if os.path.isdir(retired):
-        if not os.path.isdir(final_dir):
-            # crashed between the two replace renames: the old
-            # publish is intact in ._old — roll it back before
-            # anything else so no crash sequence can lose it
-            os.rename(retired, final_dir)
-        else:
-            shutil.rmtree(retired)  # crash after install: just GC
+    staging = staging_path(final_dir)
+    fs_recover(spark, final_dir)
     df.write.mode("overwrite").parquet(staging)
 
     staged = spark.read.parquet(staging)
     audit = _stable_row_digest(staged).collect()[0]
     if audit.n_rows < min_rows:
-        shutil.rmtree(staging, ignore_errors=True)
+        fs_delete(spark, staging)
         raise AuditFailure(
             f"staged write has {audit.n_rows} rows < min_rows={min_rows}; "
             "nothing published"
         )
 
-    if os.path.isdir(final_dir):
-        existing = _stable_row_digest(spark.read.parquet(final_dir)).collect()[0]
-        if (existing.n_rows, existing.digest_sum, existing.digest_xor) == (
-            audit.n_rows,
-            audit.digest_sum,
-            audit.digest_xor,
-        ):
-            shutil.rmtree(staging, ignore_errors=True)
-            return {
-                "n_rows": audit.n_rows,
-                "digest_sum": audit.digest_sum,
-                "digest_xor": audit.digest_xor,
-                "published": False,
-                "noop": True,
-            }
-        # replace via rename-aside so a table is visible at every
-        # instant and a crash mid-replace loses nothing: the old
-        # publish survives in ._old until the new one is installed
-        os.rename(final_dir, retired)
-        os.rename(staging, final_dir)
-        shutil.rmtree(retired, ignore_errors=True)
-        return {
-            "n_rows": audit.n_rows,
-            "digest_sum": audit.digest_sum,
-            "digest_xor": audit.digest_xor,
-            "published": True,
-            "noop": False,
-        }
-    os.rename(staging, final_dir)
+    digest = (audit.n_rows, audit.digest_sum, audit.digest_xor)
+    noop = hadoop_path_exists(spark, final_dir) and digest == tuple(
+        _stable_row_digest(spark.read.parquet(final_dir)).collect()[0]
+    )
+    if noop:
+        fs_delete(spark, staging)
+    else:
+        fs_publish(spark, final_dir)
     return {
         "n_rows": audit.n_rows,
         "digest_sum": audit.digest_sum,
         "digest_xor": audit.digest_xor,
-        "published": True,
-        "noop": False,
+        "published": not noop,
+        "noop": noop,
     }

@@ -17,6 +17,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.utils import AnalysisException
 
+from ..hadoop_fs import fs_publish, fs_recover, staging_path
+
 #: reference elb_logs.py:157-160 + the client_ip index column.
 GEO_SCHEMA = StructType(
     [
@@ -35,7 +37,10 @@ GEO_SCHEMA = StructType(
 
 def load_geo_cache(spark: SparkSession, cache_path: str) -> DataFrame:
     """Load the cache, or an empty typed frame when missing
-    (reference load_geolocation_cache, elb_logs.py:150-163)."""
+    (reference load_geolocation_cache, elb_logs.py:150-163). Recovers
+    a compaction a crash interrupted first (``hadoop_fs.fs_recover``),
+    so the read sees exactly the old or exactly the new cache."""
+    fs_recover(spark, cache_path)
     try:
         return spark.read.schema(GEO_SCHEMA).parquet(cache_path)
     except AnalysisException:
@@ -63,7 +68,7 @@ GEO_CACHE_TARGET_FILE_BYTES = 512 * 1024 * 1024
 
 def _cache_layout(spark: SparkSession, cache_path: str) -> tuple[int, int]:
     """(data-file count, total data bytes) under ``cache_path`` via the
-    Hadoop FS API (same remote-path discipline as ``fs_swap``);
+    Hadoop FS API (same remote-path discipline as ``hadoop_fs``);
     (0, 0) when missing."""
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
@@ -135,21 +140,13 @@ def append_geo_cache_delta(
 
 
 def commit_geo_cache(spark: SparkSession, merged: DataFrame, cache_path: str) -> None:
-    """Stage-and-swap rewrite of a PREBUILT keep-latest merge — the
-    compaction half of :func:`update_geo_cache`. The merge is staged to
-    a sibling directory and swapped in, because the sink would
-    otherwise truncate its own parquet input, and staging keeps the
-    merge DISTRIBUTED (collecting millions of IPs into one process
-    runs it out of memory). A crash between the swap's delete and rename
-    degrades to a cold cache (refetch), never a corrupt one. The swap
-    goes through the Hadoop FileSystem API (``hadoop_fs.fs_swap``), so
-    an ``s3a://``/``hdfs://`` cache path takes the same code path as a
-    local one; rename is not atomic on object stores, and the
-    rename-aside protocol of ``sinks.writers.write_audit_publish`` is
-    local-only (``os.rename``/``shutil.rmtree``) until the one
-    scheme-aware commit primitive lands (ROADMAP item 4)."""
-    from ..hadoop_fs import fs_swap
-
-    staging = cache_path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    fs_swap(spark, staging, cache_path)
+    """Stage-and-publish rewrite of a PREBUILT keep-latest merge — the
+    compaction half of :func:`update_geo_cache`, installed by
+    ``hadoop_fs.fs_publish`` (rename-aside, any scheme). Staging keeps
+    the sink from truncating its own parquet input and keeps the merge
+    DISTRIBUTED (collecting millions of IPs into one process runs it
+    out of memory). :func:`load_geo_cache` recovers before it reads,
+    so a crash at any point loses nothing; on object stores an outside
+    reader can still see the two-rename not-found window."""
+    merged.write.mode("overwrite").parquet(staging_path(cache_path))
+    fs_publish(spark, cache_path)

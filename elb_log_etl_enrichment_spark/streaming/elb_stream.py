@@ -15,31 +15,19 @@ directory so a foreachBatch replay never duplicates sink rows.
 from __future__ import annotations
 
 import os
-import shutil
 import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..hadoop_fs import fs_delete, fs_has_part_files
 from ..plans.pipeline import enrich_and_featurize, make_feature_chain_template
 from ..session import ensure_engine_confs
 from .stream import sized_shuffle_partitions
 from ..sinks.writers import CLEANED_PARTITIONS, write_cleaned_logs
 from ..sources.elb_logs import parse_elb_lines
 from ..sources.http_geo import fake_fetch
-
-
-def _has_part_files(target: str) -> bool:
-    """True when any Spark data file exists under ``target`` — the
-    filesystem proof that a committed sink write produced rows. Used
-    only on the rare path where ``Observation.get`` failed, so the
-    walk's cost is irrelevant; the common non-empty tick never calls
-    this."""
-    for _root, _dirs, files in os.walk(target):
-        if any(f.startswith("part-") for f in files):
-            return True
-    return False
 
 
 def stream_elb_pipeline(
@@ -216,9 +204,9 @@ def stream_elb_pipeline(
                 try:
                     batch_rows = obs.get["n"]
                 except Exception:
-                    batch_rows = 1 if _has_part_files(target) else 0
+                    batch_rows = int(fs_has_part_files(spark, target))
                 if batch_rows == 0:
-                    shutil.rmtree(target, ignore_errors=True)
+                    fs_delete(spark, target)
                 err: list = []
 
                 def _run_finalize() -> None:

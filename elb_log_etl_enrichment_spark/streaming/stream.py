@@ -38,7 +38,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..hadoop_fs import fs_swap, hadoop_path_exists
+from ..hadoop_fs import fs_publish, fs_recover, hadoop_path_exists, staging_path
 from ..session import ensure_engine_confs
 
 
@@ -369,7 +369,7 @@ def run_available_now(
     session must serialize calls or use a dedicated session. The
     synchronous conf capture inside ``start()`` is pinned against
     version drift by
-    tests/test_r6_fixes.py::test_state_partitions_knob_captured_and_restored."""
+    tests/test_streaming.py::test_state_partitions_knob_captured_and_restored."""
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
@@ -608,33 +608,22 @@ def compact_ingest_index(
     compaction: history probes filter on batch_id values, which the
     rewrite never touches). Returns the compacted row count.
 
-    Staged to a sibling directory and swapped in, like the geo-cache
-    upsert (the sink would otherwise truncate its own input); run it
-    BETWEEN ticks — the cron cadence's idle window — never while a
-    foreachBatch commit is in flight. The delete+rename swap goes
-    through the Hadoop FileSystem API like the existence probe
-    (code-review r06): a local-only ``shutil.rmtree``/``os.rename``
-    would rewrite the staging copy on an ``s3a://``/``hdfs://`` index
-    and then fail the swap, stranding a ``.compact`` sibling with no
-    compaction. Note rename is not atomic on object stores, and the
-    rename-aside protocol of ``sinks.writers.write_audit_publish`` is
-    local-only (``os.rename``/``shutil.rmtree``), so neither is an
-    object-store-safe swap until one scheme-aware commit primitive
-    replaces both (ROADMAP.md item 4)."""
-    if not _hadoop_path_exists(spark, index_path):
+    Staged and installed by ``hadoop_fs.fs_publish`` (rename-aside,
+    any scheme) like the geo-cache compaction (the sink would otherwise
+    truncate its own input); run it BETWEEN ticks — the cron cadence's
+    idle window — never while a foreachBatch commit is in flight. This
+    function and :func:`_index_history` recover before they read, so a
+    crash never turns into an empty history; on object stores an
+    outside reader can still see the two-rename not-found window."""
+    fs_recover(spark, index_path)
+    if not hadoop_path_exists(spark, index_path):
         return 0
     idx = spark.read.parquet(index_path)
-    staging = index_path.rstrip("/") + ".compact"
+    staging = staging_path(index_path)
     idx.repartition(target_files).write.mode("overwrite").parquet(staging)
     n = spark.read.parquet(staging).count()
-    _fs_swap(spark, staging, index_path)
+    fs_publish(spark, index_path)
     return n
-
-
-# Shared scheme-aware primitives (hadoop_fs); the underscored names
-# are the test seams test_r6/r7_fixes.py pin.
-_fs_swap = fs_swap
-_hadoop_path_exists = hadoop_path_exists
 
 
 def _index_history(
@@ -654,8 +643,11 @@ def _index_history(
     ``os.path.exists`` (code-review r05): a local-only probe returns
     False for EVERY ``s3a://``/``hdfs://`` index, silently replaying
     the exact failure mode above on remote stores. ``getFileSystem``
-    raises loudly for an unresolvable scheme, which is what we want."""
-    if not _hadoop_path_exists(spark, index_path):
+    raises loudly for an unresolvable scheme, which is what we want.
+    An interrupted compaction is recovered first
+    (``hadoop_fs.fs_recover``) for the same reason."""
+    fs_recover(spark, index_path)
+    if not hadoop_path_exists(spark, index_path):
         return empty
     idx = spark.read.parquet(index_path)
     if "batch_id" not in idx.columns:

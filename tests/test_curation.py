@@ -4,8 +4,10 @@ shuffles)."""
 
 from __future__ import annotations
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elb_log_etl_enrichment_spark.operators.dedup import exact_dedup
 from elb_log_etl_enrichment_spark.plans.audit import plan_stats
 
 
@@ -345,3 +347,52 @@ def test_span_coverage_plan_is_digest_shuffled(spark):
 
     for m in re.finditer(r"Exchange hashpartitioning\(([a-zA-Z_#0-9]+)", plan):
         assert not m.group(1).startswith("text"), m.group(0)
+
+
+def test_exact_dedup_map_column_uses_aggregation_not_window(spark):
+    """VERDICT r05 item 3 / ADVICE low: map-typed frames used to fall
+    back to a row_number window that shipped duplicate bodies through
+    the exchange. They must now dedup via the min_by hash aggregation:
+    no Window in the plan, deterministic min-id survivor."""
+    df = spark.createDataFrame(
+        [
+            Row(id=2, text="dup", props={"a": "1"}),
+            Row(id=1, text="dup", props={"a": "2"}),
+            Row(id=3, text="uniq", props={"b": "9"}),
+        ],
+        schema="id long, text string, props map<string,string>",
+    )
+    out = exact_dedup(df, ["text"], "id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    # partial_min_by BEFORE the exchange = map-side combine: at most
+    # one candidate row per (digest, task) crosses the shuffle
+    assert "partial_min_by" in plan
+    rows = {r.id: r for r in out.collect()}
+    assert set(rows) == {1, 3}  # min-id survivor per content
+    assert rows[1].props == {"a": "2"}  # full row carried, not torn
+
+
+def test_exact_dedup_nested_map_in_struct(spark):
+    """ADVICE low: a map nested inside a struct used to slip past the
+    top-level-only MapType guard and crash min(struct) at plan time.
+    The recursive detector must route it to the min_by path."""
+    df = spark.createDataFrame(
+        [
+            Row(id=5, text="x", meta=Row(tags={"k": "v"})),
+            Row(id=4, text="x", meta=Row(tags={"k": "w"})),
+        ],
+        schema="id long, text string, meta struct<tags: map<string,string>>",
+    )
+    out = exact_dedup(df, ["text"], "id").collect()
+    assert len(out) == 1 and out[0].id == 4
+
+
+def test_exact_dedup_map_path_null_positions(spark):
+    """The min_by path must keep the to_json struct hashing semantics:
+    ("a", NULL) and (NULL, "a") stay distinct contents."""
+    df = spark.createDataFrame(
+        [Row(id=1, x="a", y=None, m={}), Row(id=2, x=None, y="a", m={})],
+        schema="id long, x string, y string, m map<string,string>",
+    )
+    assert exact_dedup(df, ["x", "y"], "id").count() == 2

@@ -138,3 +138,91 @@ def test_label_propagation_paths_agree(spark):
         for r in label_propagation(e, small_graph_threshold=0).collect()
     }
     assert local == dist and len(local) > 0
+
+
+def test_connected_components_paths_agree(spark):
+    """The r6 driver union-find gate must label identically to the
+    distributed min-label loop (forced via small_graph_threshold=0) —
+    chain + singleton + duplicate/reversed edges."""
+    from pyspark.sql import Row
+
+    from elb_log_etl_enrichment_spark.operators.graph import (
+        connected_components,
+    )
+
+    nodes = spark.createDataFrame([Row(id=i) for i in [1, 2, 3, 4, 7, 9]])
+    edges = spark.createDataFrame(
+        [Row(src=2, dst=1), Row(src=2, dst=3), Row(src=3, dst=2),
+         Row(src=4, dst=3), Row(src=9, dst=7)]
+    )
+    local = {
+        (r.id, r.label)
+        for r in connected_components(nodes, edges).collect()
+    }
+    dist = {
+        (r.id, r.label)
+        for r in connected_components(
+            nodes, edges, small_graph_threshold=0
+        ).collect()
+    }
+    assert local == dist == {
+        (1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (9, 7)
+    }
+
+
+def test_cc_local_ignores_edges_to_unknown_nodes(spark):
+    """An edge-only 'bridge' id (absent from nodes) must not merge two
+    components on the union-find path — the distributed min-label loop
+    ignores unlabeled endpoints, and both paths must agree (ADVICE
+    r06). Node set {1,2,10,11}; edges 1-2, 10-11, and a bridge
+    1-99-10 through unknown id 99 (which would also become the min
+    label if unioned, the worst case)."""
+    from elb_log_etl_enrichment_spark.operators.graph import (
+        connected_components,
+    )
+
+    nodes = spark.createDataFrame([(1,), (2,), (10,), (11,)], "id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (10, 11), (1, 99), (99, 10)], "src long, dst long"
+    )
+    local = {
+        r.id: r.label
+        for r in connected_components(
+            nodes, edges, small_graph_threshold=100
+        ).collect()
+    }
+    dist = {
+        r.id: r.label
+        for r in connected_components(
+            nodes, edges, small_graph_threshold=0
+        ).collect()
+    }
+    assert local == dist == {1: 1, 2: 1, 10: 10, 11: 10}
+
+
+def test_cc_local_known_bridge_still_merges(spark):
+    """Control: the same bridge id listed in `nodes` DOES merge the
+    components (and its id participates in min-label) on both paths."""
+    from elb_log_etl_enrichment_spark.operators.graph import (
+        connected_components,
+    )
+
+    nodes = spark.createDataFrame(
+        [(1,), (2,), (10,), (11,), (0,)], "id long"
+    )
+    edges = spark.createDataFrame(
+        [(1, 2), (10, 11), (1, 0), (0, 10)], "src long, dst long"
+    )
+    local = {
+        r.id: r.label
+        for r in connected_components(
+            nodes, edges, small_graph_threshold=100
+        ).collect()
+    }
+    dist = {
+        r.id: r.label
+        for r in connected_components(
+            nodes, edges, small_graph_threshold=0
+        ).collect()
+    }
+    assert local == dist == {0: 0, 1: 0, 2: 0, 10: 0, 11: 0}

@@ -98,3 +98,45 @@ def test_table_memo_sees_inplace_directory_mutation(spark, tmp_path):
     os.utime(str(d), ns=(1, 1))
     s2 = _path_stamp(str(d))
     assert s1 != s2
+
+
+def test_plan_identity_stable_across_jvms():
+    """The artifact tier's cross-session reuse rests on plan_identity
+    being a pure function of the canonicalized plan. JVM semanticHash
+    was measured to VARY between identical fresh processes (which is
+    why plan_identity hashes the canonicalized pretty-print instead) —
+    if a pyspark upgrade ever makes that process-dependent too,
+    artifacts silently never hit and every session retrains (the
+    persistence win evaporates with no error). Pin it: two fresh
+    interpreter+JVM pairs under the SAME session setup must agree.
+    (Sessions with different confs may legitimately differ — load_table
+    adapts the plan to the conf — so the contract is same-context
+    stability, which is what bench→bench and driver→driver reuse
+    need.)"""
+    import subprocess
+    import sys
+
+    prog = (
+        "import sys; sys.path.insert(0, '/root/repo');\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[2]')"
+        ".config('spark.ui.enabled','false').getOrCreate())\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "from elb_log_etl_enrichment_spark.sources.tables import load_table\n"
+        "from elb_log_etl_enrichment_spark.artifacts import plan_identity\n"
+        "print('PH=' + str(plan_identity("
+        "load_table(spark, '/root/testdata/sf0.001', 'embeddings'))))\n"
+    )
+
+    def run_once() -> str:
+        child = subprocess.run(
+            [sys.executable, "-c", prog],
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        marks = [l for l in child.stdout.splitlines() if l.startswith("PH=")]
+        assert marks, child.stderr[-2000:]
+        return marks[0]
+
+    assert run_once() == run_once()

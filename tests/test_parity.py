@@ -62,3 +62,43 @@ def test_rolling_window_closed_boundary(spark):
     # 2nd event: the t-300s event is inside the closed frame
     # 3rd event: 301s after the 2nd → only itself
     assert counts == [1, 2, 1]
+
+
+def test_fingerprint_oracle_parity_on_empty_normalization(spark):
+    """ADVICE medium: a corpus containing an all-punctuation / CJK doc
+    must produce the SAME distinct-fingerprint count in Spark (NULL
+    skipped by count_distinct) and the DuckDB oracle (md5(NULLIF(...))
+    now also NULL)."""
+    import duckdb
+
+    from elb_log_etl_enrichment_spark.functions.text import fingerprint
+
+    docs = [
+        ("s", "hello world"),
+        ("s", "HELLO, world!"),  # same fingerprint as above
+        ("s", "!!!"),  # normalizes to nothing -> NULL fp
+        ("s", "你好世界"),  # non-Latin -> NULL fp
+    ]
+    sdf = spark.createDataFrame(docs, schema="source string, text string")
+    got = (
+        sdf.select("source", fingerprint(F.col("text")).alias("fp"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count_distinct("fp").alias("n_distinct_fp"),
+        )
+        .collect()[0]
+    )
+    con = duckdb.connect()
+    want = con.execute(
+        """
+        SELECT CAST(COUNT(*) AS BIGINT),
+               CAST(COUNT(DISTINCT md5(NULLIF(
+                   regexp_replace(lower(txt), '[^a-z0-9]', '', 'g'), '')))
+                   AS BIGINT)
+        FROM (VALUES ('hello world'), ('HELLO, world!'), ('!!!'), ('你好世界'))
+             t(txt)
+        """
+    ).fetchone()
+    con.close()
+    assert (got.n_docs, got.n_distinct_fp) == want == (4, 1)

@@ -203,7 +203,7 @@ def test_geo_cache_empty_update_skips_rewrite(spark, tmp_path):
     assert enriched.filter("countryName IS NULL").count() == 0
     finalize()
     assert _listing(cache_path) == listing_before  # not rewritten
-    assert not os.path.exists(cache_path + ".staging")
+    assert not os.path.exists(cache_path + "._staging")
 
     # a non-empty delta still merges
     old = load_geo_cache(spark, cache_path)

@@ -829,3 +829,39 @@ def test_rfm_reuses_per_customer_exchange_single_scan(spark):
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final
     assert "ReusedExchange" in final or "ReusedQueryStage" in final, final
+
+
+def test_steady_staleness_rule():
+    """bench.py's steady-stamp staleness rule (r7): an entry measured
+    at HEAD is fresh ONLY while the working tree carries no engine
+    edits (the diff runs against the worktree, not commit..HEAD —
+    uncommitted code is still code the stamp can't vouch for,
+    code-review r7); an entry with a bogus or missing commit, or for
+    an unknown query, is always stale."""
+    import subprocess
+
+    from elb_log_etl_enrichment_spark.plans.queries import all_queries
+
+    all_queries()
+    import bench
+
+    head = subprocess.run(
+        ["git", "rev-parse", "--short", "HEAD"],
+        cwd=bench.REPO_ROOT, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    dirty = bool(
+        subprocess.run(
+            ["git", "diff", "--name-only", "HEAD", "--",
+             "elb_log_etl_enrichment_spark"],
+            cwd=bench.REPO_ROOT, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    )
+    book = {
+        "pricing_summary": {"commit": head, "steady": 1.0},
+        "no_such_query": {"commit": head, "steady": 1.0},
+        "revenue_by_nation": {"steady": 1.0},  # no commit recorded
+        "sessionize_events": {"commit": "0000000", "steady": 1.0},
+    }
+    stale = set(bench._stale_steady_entries(book))
+    assert ("pricing_summary" in stale) == dirty
+    assert {"no_such_query", "revenue_by_nation", "sessionize_events"} <= stale

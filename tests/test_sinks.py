@@ -368,3 +368,69 @@ def test_zorder_writes_empty_and_all_null_frames(spark, tmp_path):
     out2 = str(tmp_path / "z_null")
     write_zorder_parquet(all_null, out2, "a", "b")
     assert spark.read.parquet(out2).count() == 5
+
+
+def test_bucketed_layout_persists_and_invalidates(spark, tmp_path):
+    """r7: the co-bucketed join layout is a persisted artifact —
+    reused across sessions while the source fingerprint matches
+    (DDL-only re-register, no rewrite), rewritten the moment a source
+    file changes (a stale layout would serve wrong rows)."""
+    import os
+    import shutil
+    import time as _time
+
+    from elb_log_etl_enrichment_spark.plans import queries_ext as qe
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    for t in ("orders", "lineitem"):
+        shutil.copytree(
+            f"/root/testdata/sf0.001/{t}.parquet", src / f"{t}.parquet"
+        ) if os.path.isdir(f"/root/testdata/sf0.001/{t}.parquet") else shutil.copy(
+            f"/root/testdata/sf0.001/{t}.parquet", src / f"{t}.parquet"
+        )
+    sf_dir = str(src)
+
+    def bucket_file_mtimes():
+        import hashlib
+
+        sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        base = os.path.join("/tmp", f"spark_graft_bucketed_{sfx}")
+        out = {}
+        for root, _, files in os.walk(base):
+            for f in files:
+                p = os.path.join(root, f)
+                out[p] = os.stat(p).st_mtime_ns
+        return base, out
+
+    def reset_session_state():
+        qe._BUCKET_DIRS.pop(sf_dir, None)
+        for t in spark.catalog.listTables():
+            if t.name.startswith("bj_"):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+    t_o, t_l = qe._bucketed_tables(spark, sf_dir)
+    n1 = spark.table(t_l).count()
+    base, m1 = bucket_file_mtimes()
+    assert n1 > 0 and m1
+
+    # fresh "session": same sources -> DDL-only reuse, files untouched
+    reset_session_state()
+    qe._bucketed_tables(spark, sf_dir)
+    _, m2 = bucket_file_mtimes()
+    assert m2 == m1, "reuse path rewrote the bucketed files"
+    assert spark.table(t_l).count() == n1
+
+    # a source file changes -> fingerprint mismatch -> full rewrite
+    reset_session_state()
+    victim = src / "lineitem.parquet"
+    if victim.is_dir():
+        part = next(p for p in victim.iterdir() if p.suffix == ".parquet")
+    else:
+        part = victim
+    _time.sleep(0.01)
+    os.utime(part)  # mtime bump = regenerated testdata
+    qe._bucketed_tables(spark, sf_dir)
+    _, m3 = bucket_file_mtimes()
+    assert m3 != m1, "changed source did not invalidate the layout"
+    assert spark.table(t_l).count() == n1

@@ -7,6 +7,8 @@ import glob
 import gzip
 import os
 
+from pyspark.sql import functions as F
+
 from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
 from elb_log_etl_enrichment_spark.streaming.elb_stream import stream_elb_pipeline
 
@@ -527,3 +529,159 @@ def test_all_garbage_batch_leaves_no_empty_ingest_dir(spark, tmp_path):
     stream_elb_pipeline(spark, str(logs / "*.gz"), out)
     assert _cleaned_count(spark, out) == 5
     assert glob.glob(os.path.join(sink_root, "ingest_batch=*"))
+
+
+def test_stage_two_batches_orders_files_by_mtime(spark, tmp_path):
+    """VERDICT r05 item 4: the single paced availableNow run replaces
+    the two-run ingest shape, so FileStreamSource MUST process the
+    staged history file as micro-batch 0 and the tick file as batch 1
+    — _stage_two_batches forces that with a 60 s mtime gap. A flipped
+    order would classify history docs as the incoming batch and break
+    the ingest oracles."""
+    import os
+
+    from pyspark.sql import Row
+
+    from elb_log_etl_enrichment_spark.plans.queries_ext import (
+        _stage_two_batches,
+    )
+
+    src = str(tmp_path / "src")
+    first = spark.createDataFrame([Row(doc_id=1, text="a")])
+    second = spark.createDataFrame([Row(doc_id=2, text="b")])
+    _stage_two_batches(first, second, src)
+    parts = sorted(
+        (os.path.getmtime(os.path.join(src, f)), f)
+        for f in os.listdir(src)
+        if not f.startswith(("_", "."))  # Spark ignores hidden files
+    )
+    assert len(parts) == 2
+    assert parts[1][0] - parts[0][0] >= 30  # forced gap, no mtime tie
+
+    seen: list[tuple[int, list[int]]] = []
+    (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .writeStream.foreachBatch(
+            lambda b, bid: seen.append((bid, [r.doc_id for r in b.collect()]))
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert seen == [(0, [1]), (1, [2])]
+
+
+def test_state_partitions_knob_captured_and_restored(spark, tmp_path):
+    """run_available_now(state_partitions=N) must pin the stream's
+    STATE partitioning to N (Spark captures the conf at start()) and
+    restore the session conf afterwards — if a Spark upgrade ever
+    captures lazily instead, the state dir count exposes it."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from elb_log_etl_enrichment_spark.streaming.stream import (
+        run_available_now,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, i % 3) for i in range(30)], "v long, k long"
+    ).coalesce(1).write.parquet(src)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = (
+        spark.readStream.schema("v long, k long").parquet(src)
+        .groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+    )
+    ck = str(tmp_path / "ck")
+    out = run_available_now(
+        stream, spark, "mem_state_knob", ck,
+        output_mode="complete", state_partitions=3,
+    )
+    assert out.count() == 3
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    state_dirs = os.listdir(os.path.join(ck, "state", "0"))
+    assert sorted(d for d in state_dirs if d.isdigit()) == ["0", "1", "2"]
+
+
+def test_elb_stream_single_paced_run_batches_per_file(spark, tmp_path):
+    """r7 (verdict r06 item 6): one availableNow run with
+    maxFilesPerTrigger=1 over two mtime-ordered gzip objects must
+    process each file in its own micro-batch (two ingest_batch
+    partition dirs, per-file row counts), composing to the same
+    cleaned-logs content as the former two-run shape."""
+    import glob
+    import gzip
+    import os
+    import time
+
+    from elb_log_etl_enrichment_spark.sources.alb_fixtures import (
+        fixture_lines,
+    )
+    from elb_log_etl_enrichment_spark.streaming.elb_stream import (
+        stream_elb_pipeline,
+    )
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    out = str(tmp_path / "out")
+    lines = fixture_lines()
+
+    def land(name, chunk, mtime=None):
+        p = str(logs / name)
+        with gzip.open(p, "wt") as f:
+            f.write("\n".join(chunk) + "\n")
+        if mtime is not None:
+            os.utime(p, (mtime, mtime))
+
+    now = time.time()
+    land("a.log.gz", lines, mtime=now - 60)  # 22 cleaned rows
+    land("b.log.gz", lines[:5])  # 5 more browser lines
+    stream_elb_pipeline(
+        spark, str(logs / "*.gz"), out, max_files_per_trigger=1
+    )
+    root = os.path.join(out, "cleaned_logs")
+    batches = sorted(
+        os.path.basename(d)
+        for d in glob.glob(os.path.join(root, "ingest_batch=*"))
+    )
+    assert batches == ["ingest_batch=0", "ingest_batch=1"], batches
+    cleaned = spark.read.parquet(root)
+    per_batch = {
+        r["ingest_batch"]: r["n"]
+        for r in cleaned.groupBy("ingest_batch")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert per_batch == {0: 22, 1: 5}, per_batch
+
+
+def test_sized_shuffle_partitions_rejects_nesting(spark):
+    """The single-threaded-session contract on the per-stream shuffle
+    sizing is enforced (ADVICE r06 #4): a second sized block on the
+    same session — a concurrent stream compiling inside another's conf
+    window — raises instead of silently miscompiling; the conf is
+    restored either way, and n=None blocks don't participate."""
+    import pytest
+
+    from elb_log_etl_enrichment_spark.streaming.stream import (
+        sized_shuffle_partitions,
+    )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with sized_shuffle_partitions(spark, 4):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+        with pytest.raises(RuntimeError, match="not re-entrant"):
+            with sized_shuffle_partitions(spark, 8):
+                pass
+        # unaffected by the rejected attempt
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+        with sized_shuffle_partitions(spark, None):  # no-op path nests fine
+            pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    with sized_shuffle_partitions(spark, 4):  # reusable after clean exit
+        pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
