@@ -458,7 +458,7 @@ def main() -> None:
         "sf": sf,
     }
     # steal-proof comparisons (VERDICT r04 item 8): attach the solo
-    # steady-state map (scripts/steady_retime.py — fresh JVM, 1 cold +
+    # steady-state map (scripts/query_runner.py steady — fresh JVM, 1 cold +
     # 2 warm, steady = min warm; re-measured on code change, commit
     # recorded in BENCH.steady.json). In-suite numbers above swing
     # with host CPU steal; the steady map is the per-query signal.
@@ -477,7 +477,7 @@ def main() -> None:
         # trustworthy while the query's defining module is unchanged
         # since it was measured. Entries whose module has commits after
         # their recorded measuring commit move to `steady_stale` —
-        # regression hunts must re-time those (scripts/steady_retime.py)
+        # regression hunts must re-time those (query_runner.py steady)
         # instead of reading a number the current code never produced.
         stale = _stale_steady_entries(steady_book)
         report["steady"] = {

@@ -50,6 +50,21 @@ def fs_has_part_files(spark: SparkSession, path: str) -> bool:
     return False
 
 
+def fs_data_files(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(count, total bytes) of the data files directly under ``path``
+    (names starting with ``_`` or ``.`` are metadata); (0, 0) when
+    ``path`` is missing."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return 0, 0
+    n = total = 0
+    for st in fs.listStatus(jpath):
+        if st.isFile() and not st.getPath().getName().startswith(("_", ".")):
+            n += 1
+            total += st.getLen()
+    return n, total
+
+
 def staging_path(dest: str) -> str:
     return dest.rstrip("/") + "._staging"
 

@@ -338,7 +338,7 @@ def ivf_sizing(n_rows: int) -> tuple[int, int]:
     curve is monotone-or-flat in N: 0.80/0.80/0.80/0.838 (same
     4-point sweep; 1/2 buys 0.90+ but non-monotonically and at ~33 %
     more candidate volume — 3/8 is the knee). Pinned in
-    tests/test_r8_fixes.py and tests/test_r9_fixes.py."""
+    tests/test_similarity.py (``TestProbeScaling``)."""
     n_cells = max(8, min(256, int(round(n_rows**0.5))))
     n_probe = max(1, -(-3 * n_cells // 8))
     return n_cells, n_probe

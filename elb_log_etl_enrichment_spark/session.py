@@ -20,7 +20,7 @@ Scale design notes (target: 1000-executor cluster, ~100 TB inputs):
   (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100).
   This pays only when one JVM runs the pipeline or the queries two or
   more times: the benchmark's warm loop, ``bench.py``'s sweep,
-  ``scripts/profile_query.py`` and the test suite. The CLI runs once
+  ``scripts/query_runner.py`` and the test suite. The CLI runs once
   per JVM and gains nothing; its one run compiles its ~117 classes at
   either size. One batch ``run_pipeline`` needs about 117 distinct
   generated classes and a stream tick 73 (plus 14 on a compaction

@@ -17,7 +17,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.utils import AnalysisException
 
-from ..hadoop_fs import fs_publish, fs_recover, staging_path
+from ..hadoop_fs import fs_data_files, fs_publish, fs_recover, staging_path
 
 #: reference elb_logs.py:157-160 + the client_ip index column.
 GEO_SCHEMA = StructType(
@@ -66,26 +66,6 @@ GEO_CACHE_COMPACT_FILES = 64
 GEO_CACHE_TARGET_FILE_BYTES = 512 * 1024 * 1024
 
 
-def _cache_layout(spark: SparkSession, cache_path: str) -> tuple[int, int]:
-    """(data-file count, total data bytes) under ``cache_path`` via the
-    Hadoop FS API (same remote-path discipline as ``hadoop_fs``);
-    (0, 0) when missing."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(cache_path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return 0, 0
-    n = total = 0
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            n += 1
-            total += st.getLen()
-    return n, total
-
-
 def update_geo_cache(
     spark: SparkSession, delta: DataFrame, cache_path: str, merged: DataFrame
 ) -> None:
@@ -119,7 +99,7 @@ def update_geo_cache(
     nothing). DO NOT pass a delta that may UPDATE existing keys: an
     appended update leaves two rows for the key, and plain
     ``load_geo_cache`` does not resolve last-write-wins on read."""
-    n_files, n_bytes = _cache_layout(spark, cache_path)
+    n_files, n_bytes = fs_data_files(spark, cache_path)
     ideal = max(1, -(-n_bytes // GEO_CACHE_TARGET_FILE_BYTES))
     if n_files >= ideal + GEO_CACHE_COMPACT_FILES:
         commit_geo_cache(spark, merged.repartition(ideal), cache_path)

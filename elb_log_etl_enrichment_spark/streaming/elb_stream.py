@@ -170,22 +170,6 @@ def stream_elb_pipeline(
                     target,
                     mode="overwrite",
                 )
-            except BaseException:
-                # finalize() even when the sink write throws (r8
-                # code-review: the success-only call leaked one
-                # persisted fetch frame per failed batch) — but
-                # SWALLOW its own failure so the SINK error stays the
-                # batch's failure (r8 second review: a bare finally
-                # let an also-failing cache swap on the same unhealthy
-                # cluster replace the root cause). finalize's internal
-                # try/finally frees the persisted frame even when the
-                # cache write dies.
-                try:
-                    finalize()
-                except Exception:
-                    pass
-                raise
-            else:
                 # A 0-row batch's write completes having scheduled no
                 # task, so the CollectMetrics row is never emitted and
                 # Observation.get raises (JVM assertion) instead of
@@ -207,6 +191,22 @@ def stream_elb_pipeline(
                     batch_rows = int(fs_has_part_files(spark, target))
                 if batch_rows == 0:
                     fs_delete(spark, target)
+            except BaseException:
+                # finalize() when the sink write or the empty-batch
+                # cleanup throws (r8 code-review: the success-only call
+                # leaked one persisted fetch frame per failed batch) —
+                # but SWALLOW its own failure so the batch's error
+                # stays the raised one (r8 second review: a bare
+                # finally let an also-failing cache swap on the same
+                # unhealthy cluster replace the root cause). finalize's
+                # internal try/finally frees the persisted frame even
+                # when the cache write dies.
+                try:
+                    finalize()
+                except Exception:
+                    pass
+                raise
+            else:
                 err: list = []
 
                 def _run_finalize() -> None:

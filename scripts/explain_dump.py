@@ -8,7 +8,7 @@ captured with this script.
 
 Usage:
     python scripts/explain_dump.py --out plans/r10 --suffix _before q1 q2 ...
-    SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... apply as for bench.py
+    SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as for scripts/query_runner.py
 """
 
 from __future__ import annotations
@@ -19,6 +19,8 @@ import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+
+from query_runner import default_cpus, default_sf_dir  # noqa: E402
 
 
 def main() -> None:
@@ -32,8 +34,9 @@ def main() -> None:
     from elb_log_etl_enrichment_spark.session import get_spark
 
     all_queries()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir = default_sf_dir()
+    cpus = default_cpus()
+    os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)  # shuffle width
     spark = get_spark(app_name="explain-dump", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out, exist_ok=True)

@@ -7,7 +7,9 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elb_log_etl_enrichment_spark.functions.text import predict_lang
 from elb_log_etl_enrichment_spark.operators.dedup import exact_dedup
+from elb_log_etl_enrichment_spark.operators.text_dedup import winnowing_fingerprints
 from elb_log_etl_enrichment_spark.plans.audit import plan_stats
 
 
@@ -396,3 +398,199 @@ def test_exact_dedup_map_path_null_positions(spark):
         schema="id long, x string, y string, m map<string,string>",
     )
     assert exact_dedup(df, ["x", "y"], "id").count() == 2
+
+
+def test_exact_dedup_distinguishes_null_positions(spark):
+    """("a", NULL) and (NULL, "a") are different contents — both must
+    survive (raw xxhash64/concat_ws would collide them)."""
+    df = spark.createDataFrame(
+        [Row(id=1, x="a", y=None), Row(id=2, x=None, y="a")],
+        schema="id long, x string, y string",
+    )
+    assert exact_dedup(df, ["x", "y"], "id").count() == 2
+
+
+def test_winnowing_no_overflow_on_non_ascii(spark):
+    """CJK codepoints (ascii() returns the full codepoint) must not
+    overflow the polynomial: fingerprints stay in [0, MOD)."""
+    text = ("一二三 " * 10) + "abcdefgh " * 5
+    df = spark.createDataFrame([Row(doc_id=1, text=text)])
+    row = winnowing_fingerprints(df).collect()[0]
+    assert row.n_fps > 0
+    assert 0 <= row.min_fp <= row.max_fp < 1_000_003
+
+
+def test_winnowing_hof_and_arrow_agree_as_sets(spark):
+    """Code-review r05: the HOF formulation had zero callers and no
+    test pinning it to the Arrow one; the two return the same
+    fingerprint SETS (orders differ: encounter vs np.unique sorted)."""
+    from pyspark.sql import functions as F
+
+    from elb_log_etl_enrichment_spark.operators.text_dedup import (
+        winnowing_fp_sets,
+        winnowing_fp_sets_arrow,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog " * 3),
+            (2, "pack my box with five dozen liquor jugs"),
+            (3, "abcabcabcabcabcabcabcabcabcabc"),
+            (4, "short"),  # below k+w-1: both formulations drop it
+        ],
+        "doc_id long, text string",
+    )
+    sort = F.array_sort("__fps").alias("fps")
+    hof = {
+        r["doc_id"]: r["fps"]
+        for r in winnowing_fp_sets(docs).select("doc_id", sort).collect()
+    }
+    arrow = {
+        r["doc_id"]: r["fps"]
+        for r in winnowing_fp_sets_arrow(docs).select("doc_id", sort).collect()
+    }
+    assert hof == arrow
+    assert set(arrow) == {1, 2, 3}
+
+
+def test_winnowing_arrow_schema_follows_doc_id_type(spark):
+    """Code-review r05: the Arrow fingerprinter hardcoded bigint ids;
+    string doc_ids (fine in every sibling operator) must work too."""
+    from elb_log_etl_enrichment_spark.operators.text_dedup import (
+        winnowing_fp_sets_arrow,
+    )
+
+    docs = spark.createDataFrame(
+        [("a", "the quick brown fox jumps over the lazy dog")],
+        "doc_id string, text string",
+    )
+    out = winnowing_fp_sets_arrow(docs)
+    assert dict(out.dtypes)["doc_id"] == "string"
+    assert out.count() == 1
+
+
+def test_simhash_block_pairs_rejects_unexact_hamming(spark):
+    """Code-review r05: max_hamming past the pigeonhole bound would
+    silently drop pairs whose bits span all blocks — must raise."""
+    import pytest
+
+    from elb_log_etl_enrichment_spark.operators.text_dedup import (
+        SIMHASH_BLOCKS,
+        simhash_near_dup,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g h i j")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_near_dup(docs, max_hamming=SIMHASH_BLOCKS)
+
+
+def test_predict_lang_null_is_und(spark):
+    df = spark.createDataFrame([Row(text=None)], schema="text string")
+    assert df.select(predict_lang(F.col("text")).alias("p")).first().p == "und"
+
+
+class TestPlantedLeakIsAlwaysCaught:
+    """VERDICT r07 item 6: leakage_safe_split_audit guards the most
+    expensive real-world failure (train/test contamination); a
+    PLANTED near-dup pair straddling the naive per-document split
+    must always be reported torn by the naive scheme and never by
+    the cluster-granular one."""
+
+    _counter = [0]
+
+    def _corpus_dir(self, spark, tmp_path_factory, docs):
+        """Write a documents corpus to a FRESH dir (the minhash pair
+        memo keys on (app, sf_dir) — reusing a path would serve stale
+        cluster labels)."""
+        self._counter[0] += 1
+        d = tmp_path_factory.mktemp(f"leak{self._counter[0]}")
+        spark.createDataFrame(
+            [(i, t, "en", "synthetic", len(t)) for i, t in enumerate(docs)],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long",
+        ).write.parquet(str(d / "documents.parquet"))
+        return str(d)
+
+    @staticmethod
+    def _naive_side(text: str) -> str:
+        import hashlib
+
+        return (
+            "train"
+            if hashlib.md5(text.encode()).hexdigest()[0] <= "c"
+            else "test"
+        )
+
+    def test_planted_leak_hypothesis(self, spark, tmp_path_factory):
+        """Property: for ANY planted near-dup pair with differing
+        naive hash sides, naive_torn_clusters >= 1 and
+        safe_torn_clusters == 0. The pair is built to share an
+        IDENTICAL 3-gram shingle set (a repeated word cycle — text
+        differs, shingles don't), so the LSH edge is deterministic,
+        never a banding coin-flip."""
+        from hypothesis import HealthCheck, given, settings
+        from hypothesis import strategies as st
+
+        words = st.lists(
+            st.sampled_from(
+                ["alpha", "bravo", "carol", "delta", "echo", "fox",
+                 "golf", "hotel", "india", "julia", "kilo", "lima"]
+            ),
+            min_size=3,
+            max_size=5,
+            unique=True,
+        )
+
+        @settings(
+            max_examples=6,
+            deadline=None,
+            suppress_health_check=[
+                HealthCheck.function_scoped_fixture,
+                HealthCheck.filter_too_much,
+            ],
+        )
+        @given(cycle=words, reps=st.integers(min_value=2, max_value=5))
+        def run(cycle, reps):
+            base = " ".join(cycle * reps)
+            leak = None
+            # find a repeat count whose text hashes to the OTHER naive
+            # side — same shingle set, different md5 by construction
+            for extra in range(reps + 1, reps + 40):
+                cand = " ".join(cycle * extra)
+                if self._naive_side(cand) != self._naive_side(base):
+                    leak = cand
+                    break
+            if leak is None:  # astronomically unlikely (p ~ 0.7^39)
+                return
+            fillers = [
+                f"unique{i}a unique{i}b unique{i}c unique{i}d"
+                for i in range(10)
+            ]
+            sf = self._corpus_dir(
+                spark, tmp_path_factory, fillers + [base, leak]
+            )
+            rows = _q("leakage_safe_split_audit")(
+                spark, sf
+            ).collect()
+            assert rows, "audit emitted no rows"
+            assert all(r.safe_torn_clusters == 0 for r in rows), rows
+            assert all(r.naive_torn_clusters >= 1 for r in rows), rows
+
+        run()
+
+    def test_untorn_corpus_reports_clean(self, spark, tmp_path_factory):
+        """No near-dups at all: both torn counters must be 0."""
+        docs = [
+            f"solo{i}x solo{i}y solo{i}z solo{i}w" for i in range(12)
+        ]
+        sf = self._corpus_dir(spark, tmp_path_factory, docs)
+        rows = _q("leakage_safe_split_audit")(
+            spark, sf
+        ).collect()
+        assert rows
+        assert all(
+            r.safe_torn_clusters == 0 and r.naive_torn_clusters == 0
+            for r in rows
+        ), rows

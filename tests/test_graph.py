@@ -226,3 +226,43 @@ def test_cc_local_known_bridge_still_merges(spark):
         ).collect()
     }
     assert local == dist == {0: 0, 1: 0, 2: 0, 10: 0, 11: 0}
+
+
+def test_graph_operators_accept_string_node_ids(spark):
+    """Code-review r05 (reproduced): string node ids crashed the CC
+    convergence cast under ANSI / silently exited after one round
+    otherwise, crashed local LPA's -label tie-break, and pagerank's
+    local path coerced the id type."""
+    from elb_log_etl_enrichment_spark.operators.graph import (
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+
+    # a 4-chain needs >1 min-propagation round: a1-a2-a3-a4
+    edges = spark.createDataFrame(
+        [("a1", "a2"), ("a2", "a3"), ("a3", "a4"), ("z1", "z2")],
+        "u string, v string",
+    )
+    nodes = (
+        edges.select(F.col("u").alias("id"))
+        .unionByName(edges.select(F.col("v").alias("id")))
+        .distinct()
+    )
+    labels = {
+        r["id"]: r["label"]
+        for r in connected_components(
+            nodes, edges, src_col="u", dst_col="v"
+        ).collect()
+    }
+    assert labels["a4"] == "a1" and labels["a1"] == "a1"
+    assert labels["z2"] == "z1"
+    lpa = label_propagation(edges, src_col="u", dst_col="v", iters=3)
+    assert dict(lpa.dtypes) == {"node": "string", "label": "string"}
+    pr = pagerank(
+        edges.withColumn("w", F.lit(1.0)), src="u", dst="v", weight="w"
+    )
+    assert dict(pr.dtypes)["name"] == "string"
+    # long ids keep their type through the LOCAL path too
+    e2 = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, w double")
+    assert dict(pagerank(e2).dtypes)["name"] == "bigint"

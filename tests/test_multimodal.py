@@ -380,3 +380,41 @@ def test_synthetic_y4m_motion_stats_formula(spark):
     assert row.total_sad == sum(sads)
     assert row.peak_transition == sads.index(max(sads)) + 1
     assert row.peak_sad == max(sads)
+
+
+def test_multimodal_degenerate_params_fail_at_plan_time(spark):
+    """Code-review r05: n_frames=1 motion / frame_len > n_samples used
+    to raise ValueError from max() INSIDE mapInPandas, failing the
+    whole job at run time with an opaque executor traceback."""
+    import pytest
+    from pyspark.sql import Row
+
+    from elb_log_etl_enrichment_spark.operators.multimodal import (
+        synthetic_wav_frame_features,
+        synthetic_y4m_motion_stats,
+    )
+
+    ids = spark.createDataFrame([Row(media_id=1)])
+    with pytest.raises(ValueError, match="no full frame"):
+        synthetic_wav_frame_features(ids, n_samples=128, frame_len=256)
+    with pytest.raises(ValueError, match="at least 2 frames"):
+        synthetic_y4m_motion_stats(ids, n_frames=1)
+
+
+def test_jpeg_sniff_handles_fill_bytes_and_standalone_markers():
+    """Code-review r05: legal 0xFF fill bytes before a marker desynced
+    the JPEG segment walk (None or garbage dims for valid files)."""
+    from elb_log_etl_enrichment_spark.operators.multimodal import sniff_header
+
+    def seg(marker, body=b""):
+        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+    sof = seg(0xC0, b"\x08" + (480).to_bytes(2, "big") + (640).to_bytes(2, "big") + b"\x03")
+    # SOI + APP0 + fill bytes + SOF
+    jpg = b"\xff\xd8" + seg(0xE0, b"JFIF\x00") + b"\xff\xff\xff" + sof
+    assert sniff_header(jpg) == ("jpeg", 640, 480)
+    # standalone TEM marker (no length field) before the SOF
+    jpg2 = b"\xff\xd8" + b"\xff\x01" + sof
+    assert sniff_header(jpg2) == ("jpeg", 640, 480)
+    # EOI before any SOF: clean None, no garbage walk
+    assert sniff_header(b"\xff\xd8\xff\xd9" + sof) is None

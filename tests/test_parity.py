@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from elb_log_etl_enrichment_spark.operators.features import (
     add_rolling_features,
     extract_time_features,
+    sessionize,
 )
 
 # year-boundary dates where ISO week and weekday conventions diverge
@@ -102,3 +103,40 @@ def test_fingerprint_oracle_parity_on_empty_normalization(spark):
     ).fetchone()
     con.close()
     assert (got.n_docs, got.n_distinct_fp) == want == (4, 1)
+
+
+def test_sessionize_subsecond_gap_boundary(spark):
+    """Gap of 1800.5 s must break the session: second-truncated
+    unix_timestamp would see 1800 and merge."""
+    base = datetime.datetime(2024, 1, 1, 12, 0, 0)
+    df = spark.createDataFrame(
+        [
+            Row(k="a", time=base, eid=0),
+            Row(k="a", time=base + datetime.timedelta(seconds=1800, milliseconds=500), eid=1),
+        ]
+    )
+    out = sessionize(df, key="k", ts="time", tiebreak="eid").orderBy("eid").collect()
+    assert [r.session_number for r in out] == [0, 1]
+    # exact 1800.0s gap: strict > keeps one session (reference semantics)
+    df2 = spark.createDataFrame(
+        [
+            Row(k="a", time=base, eid=0),
+            Row(k="a", time=base + datetime.timedelta(seconds=1800), eid=1),
+        ]
+    )
+    out2 = sessionize(df2, key="k", ts="time", tiebreak="eid").orderBy("eid").collect()
+    assert [r.session_number for r in out2] == [0, 0]
+
+
+def test_sessionize_rejects_string_time_column(spark):
+    """Code-review r05: a string time column silently collapsed every
+    key into one session under non-ANSI (NULL diffs coalesced to 0)."""
+    import pytest
+
+    from elb_log_etl_enrichment_spark.operators.features import sessionize
+
+    df = spark.createDataFrame(
+        [("a", "2024-01-01T12:00:00Z")], "client_ip string, time string"
+    )
+    with pytest.raises(TypeError, match="parse it first"):
+        sessionize(df)

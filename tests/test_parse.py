@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import Row
 
@@ -893,3 +895,19 @@ def test_device_case_sql_reads_ua_module_table(monkeypatch):
     )
     case = qe._device_case_sql("ua")
     assert "SentinelBot" in case and "'Sentinel'" in case
+
+
+def test_ua_broadcast_null_user_agent_classified_other(spark):
+    """A parsed line with NULL user_agent must classify as
+    ('Other','Other') on the broadcast path, matching the inline path."""
+    from elb_log_etl_enrichment_spark.sources.alb_fixtures import make_line
+    from elb_log_etl_enrichment_spark.sources.elb_logs import parse_elb_lines
+
+    # empty quoted UA field parses to NULL (CSV nullValue)
+    line = make_line(datetime.datetime(2025, 5, 26, 12, 0, 0), "10.1.1.1", ua="")
+    df = spark.createDataFrame([Row(value=line)])
+    for broadcast in (False, True):
+        rows = parse_elb_lines(df, ua_via_broadcast=broadcast).collect()
+        assert len(rows) == 1, f"broadcast={broadcast}"
+        assert rows[0].ua_browser_family == "Other", f"broadcast={broadcast}"
+        assert rows[0].ua_os_family == "Other", f"broadcast={broadcast}"

@@ -8,6 +8,7 @@ import glob
 import gzip
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -404,3 +405,103 @@ def test_warm_run_compiles_no_generated_classes(spark, tmp_path):
     before = compiles.getCount()
     run("second")
     assert compiles.getCount() - before == 0
+
+
+class TestFeatureChainTemplate:
+    def test_template_matches_operator_chain(self, spark):
+        """The precompiled template must stay row- and schema-
+        identical to the operator-by-operator chain it collapsed
+        (pins the r9 restructure against drift; the streaming-vs-
+        batch oracle covers the composed pipeline, this covers the
+        chain in isolation with a frozen cache)."""
+        import gzip
+        import os
+        import tempfile
+
+        from elb_log_etl_enrichment_spark.operators.enrich import (
+            enrich_with_geo,
+        )
+        from elb_log_etl_enrichment_spark.operators.features import (
+            add_path_features,
+            add_rolling_features,
+            calculate_processing_times,
+            extract_time_features,
+            sessionize,
+        )
+        from elb_log_etl_enrichment_spark.plans.pipeline import (
+            make_feature_chain_template,
+        )
+        from elb_log_etl_enrichment_spark.sources.alb_fixtures import (
+            fixture_lines_extended,
+        )
+        from elb_log_etl_enrichment_spark.sources.elb_logs import (
+            LOCAL_TZ,
+            filter_categorize,
+            parse_elb_lines,
+        )
+        from elb_log_etl_enrichment_spark.sources.http_geo import (
+            fake_fetch,
+            fetch_geolocations,
+        )
+
+        def operator_chain(parsed, cache):
+            out = filter_categorize(enrich_with_geo(parsed, cache))
+            out = out.withColumn(
+                "time_local", F.from_utc_timestamp(F.col("time"), LOCAL_TZ)
+            )
+            out = extract_time_features(out, ts="time_local")
+            out = calculate_processing_times(out)
+            out = sessionize(
+                out, key="client_ip", ts="time", tiebreak="trace_id"
+            )
+            out = add_rolling_features(out, key="client_ip", ts="time")
+            out = add_path_features(out)
+            return out.drop("time_local")
+
+        base = tempfile.mkdtemp(prefix="tmpl_parity_")
+        lf = os.path.join(base, "x.log.gz")
+        with gzip.open(lf, "wt") as f:
+            f.write("\n".join(fixture_lines_extended()) + "\n")
+        raw = spark.read.text(lf).withColumn(
+            "log_source_file", F.input_file_name()
+        )
+        parsed = parse_elb_lines(raw)
+        ips = (
+            parsed.select("client_ip")
+            .where(F.col("client_ip").isNotNull())
+            .distinct()
+        )
+        # persist so both sides see identical fetch timestamps
+        cache = fetch_geolocations(ips, fetch_fn=fake_fetch).persist()
+        try:
+            cache.count()
+            ref = operator_chain(parsed, cache)
+            got = make_feature_chain_template()(parsed, cache)
+            assert [
+                (f.name, f.dataType.simpleString()) for f in ref.schema
+            ] == [(f.name, f.dataType.simpleString()) for f in got.schema]
+            assert sorted(map(str, ref.collect())) == sorted(
+                map(str, got.collect())
+            )
+        finally:
+            cache.unpersist()
+
+    def test_template_rejects_unparsed_time(self, spark):
+        from elb_log_etl_enrichment_spark.plans.pipeline import (
+            make_feature_chain_template,
+        )
+
+        bad = spark.range(1).selectExpr(
+            "'1.2.3.4' AS client_ip", "'GET / H' AS request",
+            "'ua' AS user_agent", "CAST(200 AS BIGINT) AS elb_status_code",
+            "'x' AS classification_reason", "'t' AS trace_id",
+            "'2025-01-01' AS time", "'/a' AS path",
+            "0.1 AS request_processing_time",
+            "0.1 AS target_processing_time",
+            "0.1 AS response_processing_time",
+        )
+        cache = spark.createDataFrame(
+            [], "client_ip string, countryCode string"
+        )
+        with pytest.raises(TypeError, match="parse it first"):
+            make_feature_chain_template()(bad, cache)

@@ -10,6 +10,7 @@ oracle (results stay right) but catastrophic at scale.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from elb_log_etl_enrichment_spark.plans.audit import plan_stats, plan_text
 
@@ -865,3 +866,322 @@ def test_steady_staleness_rule():
     stale = set(bench._stale_steady_entries(book))
     assert ("pricing_summary" in stale) == dirty
     assert {"no_such_query", "revenue_by_nation", "sessionize_events"} <= stale
+
+
+class TestAuditEnvelopeFuzz:
+    """VERDICT r07 item 8: every error-bound / recall-floor /
+    trace-invariant audit is fed a deliberately corrupted estimate —
+    a wrong slack formula reads as eternal-green, so each gate must
+    demonstrably FLIP on drift past its envelope."""
+
+    def test_equi_depth_rank_gate_flips_on_doubled_estimates(
+        self, spark, monkeypatch
+    ):
+        import pyspark.sql.functions as pf
+
+        orig = pf.percentile_approx
+        monkeypatch.setattr(
+            pf,
+            "percentile_approx",
+            lambda c, p, a=None: F.transform(
+                orig(c, p, a) if a is not None else orig(c, p),
+                lambda x: x * 2,
+            ),
+        )
+        rows = _q(spark, "equi_depth_histogram_orders_approx").collect()
+        assert any(r.rank_ok == 0 for r in rows), rows
+
+    def test_iqr_rank_gate_flips_on_doubled_quartiles(
+        self, spark, monkeypatch
+    ):
+        import pyspark.sql.functions as pf
+
+        orig = pf.percentile_approx
+        monkeypatch.setattr(
+            pf,
+            "percentile_approx",
+            lambda c, p, a=None: (
+                orig(c, p, a) if a is not None else orig(c, p)
+            )
+            * 2
+            + 1e9,
+        )
+        rows = _q(spark, "iqr_outlier_audit_approx").collect()
+        assert rows and all(
+            r.q1_rank_ok == 0 and r.q3_rank_ok == 0 for r in rows
+        ), rows
+
+    def test_approx_aggregates_gates_flip_independently(
+        self, spark, monkeypatch
+    ):
+        import pyspark.sql.functions as pf
+
+        orig_acd = pf.approx_count_distinct
+        monkeypatch.setattr(
+            pf, "approx_count_distinct", lambda c: orig_acd(c) * 2
+        )
+        rows = _q(spark, "approx_aggregates_events").collect()
+        assert rows and all(r.users_est_ok == 0 for r in rows), rows
+        assert all(r.median_rank_ok == 1 for r in rows), rows
+        monkeypatch.undo()
+
+        orig_pa = pf.percentile_approx
+        monkeypatch.setattr(
+            pf,
+            "percentile_approx",
+            lambda c, p, a=None: (
+                orig_pa(c, p, a) if a is not None else orig_pa(c, p)
+            )
+            + 1e12,
+        )
+        rows = _q(spark, "approx_aggregates_events").collect()
+        assert rows and all(r.median_rank_ok == 0 for r in rows), rows
+        assert all(r.users_est_ok == 1 for r in rows), rows
+
+    def test_hll_union_gate_flips_on_mismerged_estimate(
+        self, spark, monkeypatch
+    ):
+        import pyspark.sql.functions as pf
+
+        orig = pf.hll_sketch_estimate
+        monkeypatch.setattr(
+            pf, "hll_sketch_estimate", lambda c: orig(c) * 3
+        )
+        r = _q(spark, "hll_sketch_distinct_users").collect()[0]
+        assert r.merged_est_ok == 0, r
+
+    def test_vocab_quartile_gate_flips_on_skewed_partition(
+        self, spark, monkeypatch
+    ):
+        from elb_log_etl_enrichment_spark.plans import queries_profiling as qp
+
+        orig = qp.doc_quartiles_approx
+        monkeypatch.setattr(
+            qp,
+            "doc_quartiles_approx",
+            lambda d: orig(d).withColumn("q", F.lit(1)),
+        )
+        rows = _q(spark, "vocab_growth_audit_approx").collect()
+        assert any(r.docs_balance_ok == 0 for r in rows), rows
+
+    def test_pca_eigensum_gate_flips_on_scaled_spectrum(
+        self, spark, monkeypatch
+    ):
+        from elb_log_etl_enrichment_spark.operators import linalg
+
+        orig = linalg.pca_spectrum
+        monkeypatch.setattr(
+            linalg,
+            "pca_spectrum",
+            lambda emb, top_k=64: [
+                (c, ev * 2, sh, cu)
+                for c, ev, sh, cu in orig(emb, top_k=top_k)
+            ],
+        )
+        r = _q(spark, "embedding_pca_variance").collect()[0]
+        assert r.eigensum_ok == 0, r
+
+    def test_pca_spectrum_gate_flips_on_shuffled_cumulatives(
+        self, spark, monkeypatch
+    ):
+        from elb_log_etl_enrichment_spark.operators import linalg
+
+        orig = linalg.pca_spectrum
+
+        def corrupt(emb, top_k=64):
+            rows = orig(emb, top_k=top_k)
+            # reverse the cumulative-share column: no longer the
+            # running sum of shares
+            cums = [cu for _c, _ev, _sh, cu in rows][::-1]
+            return [
+                (c, ev, sh, cu2)
+                for (c, ev, sh, _cu), cu2 in zip(rows, cums)
+            ]
+
+        monkeypatch.setattr(linalg, "pca_spectrum", corrupt)
+        r = _q(spark, "embedding_pca_variance").collect()[0]
+        assert r.spectrum_ok == 0, r
+
+    def test_ann_recall_gate_flips_on_empty_and_wrong_approx(self, spark):
+        from elb_log_etl_enrichment_spark.plans.queries_ext import (
+            _ann_recall_audit,
+        )
+
+        empty = spark.createDataFrame([], "query_id long, neighbor long")
+        r = _ann_recall_audit(spark, SF, empty, k=3, floor=0.4).collect()[0]
+        assert r.recall_ok == 0 and r.n_queries > 0, r
+        # wrong neighbors (shifted ids) must not count as hits
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_arrow,
+        )
+        from elb_log_etl_enrichment_spark.sources.tables import load_table
+
+        e = load_table(spark, SF, "embeddings")
+        wrong = (
+            cosine_topk_arrow(e, F.col("vec_id") % 100 == 0, k=3)
+            .select("query_id", (F.col("neighbor") + 100000).alias("neighbor"))
+        )
+        r = _ann_recall_audit(spark, SF, wrong, k=3, floor=0.4).collect()[0]
+        assert r.recall_ok == 0, r
+
+    def test_ann_recall_accounting_immune_to_duplicate_pairs(self, spark):
+        """ADVICE r7: duplicate (query_id, neighbor) pairs in an approx
+        frame must not fan out the join and inflate the recall."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_arrow,
+        )
+        from elb_log_etl_enrichment_spark.plans.queries_ext import (
+            _ann_recall_audit,
+        )
+        from elb_log_etl_enrichment_spark.sources.tables import load_table
+
+        e = load_table(spark, SF, "embeddings")
+        exact = cosine_topk_arrow(e, F.col("vec_id") % 100 == 0, k=3).select(
+            "query_id", "neighbor"
+        )
+        doubled = exact.unionByName(exact)
+        r = _ann_recall_audit(spark, SF, doubled, k=3, floor=0.4).collect()[0]
+        r1 = _ann_recall_audit(spark, SF, exact, k=3, floor=0.4).collect()[0]
+        assert r.recall_ok == 1 and r1.recall_ok == 1
+        assert r.n_queries == r1.n_queries
+
+    def test_bpe_roundtrip_gate_flips_on_corrupt_encoder(
+        self, spark, monkeypatch
+    ):
+        from elb_log_etl_enrichment_spark.operators import bpe
+
+        orig = bpe.bpe_encode_tokens
+
+        def corrupt(vocab, merges, **kw):
+            out = orig(vocab, merges, **kw)
+            return out.withColumn("bpe_sym", F.slice("bpe_sym", 1, 1))
+
+        monkeypatch.setattr(bpe, "bpe_encode_tokens", corrupt)
+        rows = _q(spark, "bpe_encode_stats").collect()
+        assert any(r.roundtrip_ok == 0 for r in rows), rows
+
+    def test_bpe_bounds_gate_flips_on_inflated_counts(
+        self, spark, monkeypatch
+    ):
+        from elb_log_etl_enrichment_spark.operators import bpe
+
+        orig = bpe.bpe_encode_tokens
+
+        def corrupt(vocab, merges, **kw):
+            out = orig(vocab, merges, **kw)
+            return out.withColumn(
+                "n_bpe_tokens", F.col("n_bpe_tokens") + F.lit(1000)
+            )
+
+        monkeypatch.setattr(bpe, "bpe_encode_tokens", corrupt)
+        rows = _q(spark, "bpe_encode_stats").collect()
+        assert rows and all(r.tokens_in_bounds == 0 for r in rows), rows
+
+    def test_footer_minmax_gate_flips_on_divergent_data(
+        self, spark, monkeypatch
+    ):
+        """Feed the audit a data side that disagrees with the footers
+        (a filtered lineitem): the min/max truthfulness flag must
+        flip while the footer-internal counts stay consistent."""
+        from elb_log_etl_enrichment_spark.sources import tables
+
+        orig = tables.load_table
+
+        def corrupt(sess, sf_dir, name, **kw):
+            df = orig(sess, sf_dir, name, **kw)
+            if name == "lineitem":
+                med = df.agg(
+                    F.percentile_approx("l_orderkey", F.lit(0.5))
+                ).collect()[0][0]
+                return df.filter(F.col("l_orderkey") < F.lit(med))
+            return df
+
+        monkeypatch.setattr(tables, "load_table", corrupt)
+        r = _q(spark, "parquet_footer_stats").collect()[0]
+        assert r.footer_minmax_ok == 0, r
+        assert r.values_complete_ok == 1, r
+
+
+def _jvm_nodes(jplan, name: str):
+    """All nodes in a JVM physical-plan tree whose nodeName contains
+    ``name``; descends through the AdaptiveSparkPlan wrapper via its
+    pre-execution initialPlan (which carries the join hints)."""
+    out, stack = [], [jplan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.initialPlan())
+            continue
+        if name in node.nodeName():
+            out.append(node)
+        ch = node.children()
+        for i in range(ch.size()):
+            stack.append(ch.apply(i))
+    return out
+
+
+def test_knn_label_agreement_broadcasts_topk_not_corpus(spark):
+    """VERDICT r03 item 1: the label joins must broadcast the BOUNDED
+    top-k frame (whose subtree carries the vec_id % 100 query-subset
+    filter), never the corpus-sized label projection. Every
+    BroadcastExchange subtree must therefore contain the query filter,
+    and the full-corpus label scan must appear outside all of them."""
+    from elb_log_etl_enrichment_spark.plans.queries import REGISTRY, all_queries
+
+    all_queries()
+    df = REGISTRY["knn_label_agreement"].fn(spark, "/root/testdata/sf0.001")
+    jplan = df._jdf.queryExecution().executedPlan()
+    exchanges = _jvm_nodes(jplan, "BroadcastExchange")
+    assert exchanges, "expected broadcast label joins over the top-k frame"
+    for ex in exchanges:
+        sub = ex.toString()
+        assert "% 100)" in sub, (
+            "BroadcastExchange without the query-subset filter — "
+            "a corpus-sized side is being broadcast:\n" + sub[:2000]
+        )
+
+
+def test_exact_median_iterated_narrowing_bounds_window_input(spark):
+    """VERDICT r03 item 2: exact_median_two_pass must iterate the
+    histogram narrowing so no single-partition window ever ranks raw
+    rows — every Window in the plan must sit above a HashAggregate,
+    and the old per-row row_number rank must be gone. r10: the
+    per-level cumulative windows moved to driver-side integer
+    arithmetic over the collected ≤1024-row histograms (guide §8), so
+    the ONLY window left is the final distinct-value selection."""
+    from elb_log_etl_enrichment_spark.plans.queries import REGISTRY, all_queries
+    from elb_log_etl_enrichment_spark.plans.queries_stats import (
+        _SEL_DEPTH,
+        histogram_narrow,
+    )
+
+    all_queries()
+    df = REGISTRY["exact_median_two_pass"].fn(spark, "/root/testdata/sf0.001")
+    jplan = df._jdf.queryExecution().executedPlan()
+    windows = _jvm_nodes(jplan, "Window")
+    # r10 driver-steered narrowing: only the final distinct-value
+    # selection window survives (levels steer via collected histograms)
+    assert len(windows) == 1, [w.nodeName() for w in windows]
+    for w in windows:
+        assert "row_number" not in w.toString().splitlines()[0]
+        assert _jvm_nodes(w, "HashAggregate"), (
+            "Window over raw rows:\n" + w.toString()[:2000]
+        )
+
+    # functional bound: narrowing over 200k spread-out values leaves a
+    # final bucket within small-constant reach of n/1024 (equi-width
+    # bins over a hash-spread domain; r10's early stop returns the
+    # level-1 bucket once it is driver-histogram-small, so the exact
+    # n/1024 bound no longer applies — 2x covers the Poisson spread)
+    import pyspark.sql.functions as F
+
+    vals = spark.range(200_000).select(
+        (F.col("id") * 2654435761 % 1000003).cast("double").alias("value")
+    )
+    k = vals.agg(F.expr("(count(*) + 1) div 2").alias("k"))
+    bucket, resid = histogram_narrow(vals, k, levels=_SEL_DEPTH)
+    n_bucket = bucket.count()
+    assert n_bucket <= 2 * (200_000 // 1024), n_bucket
+    # the residual rank stays a valid index into the bucket
+    r = resid.first().k
+    assert 1 <= r <= n_bucket

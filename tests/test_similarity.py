@@ -1,5 +1,6 @@
 """Similarity operators (operators/similarity.py): the corpus-count
-cache and the cell-bucketed IVF serving layout.
+cache, the IVF sizing rule and kernel, and the cell-bucketed IVF
+serving layout.
 
 * ``_corpus_count``'s fallback cache lives in a module-scope
   WeakKeyDictionary, not on the DataFrame wrapper: an explicit
@@ -48,6 +49,14 @@ class TestCorpusCountWeakCache:
         del emb
         gc.collect()
         assert len(similarity._FRAME_COUNT_CACHE) == before
+
+    def test_variants_do_not_collide(self, spark):
+        from elb_log_etl_enrichment_spark.operators import similarity
+
+        e = spark.range(10).select(F.col("id").alias("vec_id"))
+        n_all = similarity._corpus_count(e, e, [], None, "all")
+        n_nz = similarity._corpus_count(e.limit(3), e, [], None, "nonzero")
+        assert (n_all, n_nz) == (10, 3)
 
 
 class TestIvfBucketedLayout:
@@ -284,3 +293,127 @@ def test_exact_topk_memo_is_corpus_scoped(spark):
         spark, load_table(spark, "/root/testdata/sf0.001", "embeddings"), pred, 3
     )
     assert a2 is a  # memo hit, not a recompute
+
+
+class TestProbeScaling:
+    def test_sizing_probe_fraction(self):
+        """VERDICT r08 item 4: ⌈3·cells/8⌉ probes — the measured
+        IVFADC+R recall@5 curve at this fraction is 0.80/0.80/0.80/
+        0.838 (sf0.001/0.01/0.1/sf1), monotone-or-flat, vs the 25 %
+        rule's 0.76/0.72/0.68/0.742 sf0.1 dip."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            ivf_sizing,
+        )
+
+        for n in (1, 64, 500, 2000, 20000, 10**9):
+            cells, probe = ivf_sizing(n)
+            assert probe == max(1, -(-3 * cells // 8))
+            assert probe <= cells
+
+    def test_rerank_recall_floor_auto_sizing(self, spark):
+        """Default (auto-sized) IVFADC+R must clear a 0.6 recall@5
+        floor on the fixture corpus — measured 0.80 at the 3/8 rule;
+        the old 25 % rule measured 0.76 here and 0.68 at sf0.1."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_arrow,
+            cosine_topk_ivfpq_rerank,
+        )
+
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        pred = F.col("vec_id") % 100 == 0
+        exact = {
+            (r.query_id, r.neighbor)
+            for r in cosine_topk_arrow(e, pred, k=5)
+            .select("query_id", "neighbor")
+            .collect()
+        }
+        got = {
+            (r.query_id, r.neighbor)
+            for r in cosine_topk_ivfpq_rerank(e, pred, k=5)
+            .select("query_id", "neighbor")
+            .collect()
+        }
+        assert len(exact & got) / len(exact) >= 0.6
+
+    def test_ivf_sizing_rule_pins(self):
+        """√N clamped to [8, 256], ~37.5 % probe fraction (raised
+        from 25 % in r9 — VERDICT r08 item 4: the probe ceiling bound
+        IVFADC+R recall before the rerank budget; the measured rerank
+        recall@5 curve at 3/8 is 0.80/0.80/0.80/0.838 across
+        sf0.001/0.01/0.1/sf1, monotone-or-flat — see ivf_sizing's
+        docstring); sf1 must stay ≥ sf0.1."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            ivf_sizing,
+        )
+
+        assert ivf_sizing(500) == (22, 9)
+        assert ivf_sizing(2000) == (45, 17)
+        assert ivf_sizing(20000) == (141, 53)
+        assert ivf_sizing(1) == (8, 3)  # lower clamp
+        assert ivf_sizing(10**9) == (256, 96)  # expression-size clamp
+
+    def test_adaptive_ivf_recall_on_small_corpus(self, spark):
+        """Defaults (no explicit geometry) resolve via the rule and
+        clear the registered audit's 0.4 floor with margin."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_arrow,
+            cosine_topk_ivf,
+        )
+        from elb_log_etl_enrichment_spark.sources.tables import load_table
+
+        e = load_table(spark, SF, "embeddings")
+        pred = F.col("vec_id") % 100 == 0
+        exact = {
+            (r.query_id, r.neighbor)
+            for r in cosine_topk_arrow(e, pred, k=3).collect()
+        }
+        hits = {
+            (r.query_id, r.neighbor)
+            for r in cosine_topk_ivf(e, pred, k=3).collect()
+        }
+        assert exact
+        assert len(hits & exact) / len(exact) >= 0.6
+
+
+class TestIvfArrowKernel:
+    def test_full_probe_matches_exact_topk(self, spark):
+        """With n_probe = n_cells the probed-cell mask allows every
+        candidate, so the IVF result must equal the exact Arrow top-k
+        pair-for-pair — pins the r9 masked-matmul kernel against the
+        exact kernel it extends (candidate semantics, self-exclusion,
+        rounded-cosine ranking and tie-breaks)."""
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_arrow,
+            cosine_topk_ivf,
+        )
+
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        pred = F.col("vec_id") % 100 == 0
+        exact = sorted(
+            map(
+                tuple,
+                cosine_topk_arrow(e, pred, k=4)
+                .select("query_id", "rnk", "neighbor")
+                .collect(),
+            )
+        )
+        full = sorted(
+            map(
+                tuple,
+                cosine_topk_ivf(e, pred, k=4, n_cells=8, n_probe=8)
+                .select("query_id", "rnk", "neighbor")
+                .collect(),
+            )
+        )
+        assert exact and full == exact
+
+    def test_ivf_deterministic_across_calls(self, spark):
+        from elb_log_etl_enrichment_spark.operators.similarity import (
+            cosine_topk_ivf,
+        )
+
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        pred = F.col("vec_id") % 50 == 0
+        a = sorted(map(tuple, cosine_topk_ivf(e, pred, k=3).collect()))
+        b = sorted(map(tuple, cosine_topk_ivf(e, pred, k=3).collect()))
+        assert a == b and a

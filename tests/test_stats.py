@@ -332,3 +332,26 @@ def test_rfm_segments_partition_all_customers(spark):
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
     ).collect()[0][0]
     assert sum(r.total_cents for r in rows) == total
+
+
+def test_hll_sketch_merge_consistency(spark):
+    """The 100 TB distinct-count contract: per-group HLL sketches
+    unioned must estimate the SAME value as one global sketch, and
+    both must sit within a few percent of the exact distinct count."""
+    from pyspark.sql import functions as F
+
+    from elb_log_etl_enrichment_spark.sources.tables import load_table
+
+    e = load_table(spark, "/root/testdata/sf0.01", "events")
+    exact = e.select("user_id").distinct().count()
+    global_est = e.agg(
+        F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).cast("long")
+    ).first()[0]
+    merged_est = (
+        e.groupBy("event_type")
+        .agg(F.hll_sketch_agg("user_id").alias("sk"))
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).cast("long"))
+        .first()[0]
+    )
+    assert merged_est == global_est  # merge-invariance, not just closeness
+    assert abs(global_est - exact) / exact < 0.05

@@ -7,6 +7,7 @@ import glob
 import gzip
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
@@ -531,6 +532,31 @@ def test_all_garbage_batch_leaves_no_empty_ingest_dir(spark, tmp_path):
     assert glob.glob(os.path.join(sink_root, "ingest_batch=*"))
 
 
+def test_empty_batch_cleanup_failure_releases_fetch_frame(
+    spark, tmp_path, monkeypatch
+):
+    """The empty-batch cleanup runs after the sink write and before the
+    async finalize(); when it raises, finalize() must still run, so the
+    batch's persisted geo-fetch frame is released and the persistent-
+    RDD count returns to its pre-tick value."""
+    from elb_log_etl_enrichment_spark.streaming import elb_stream
+
+    def probe_fails(*_args):
+        raise IOError("injected part-file probe failure")
+
+    # an all-garbage batch has no observation row, so the cleanup falls
+    # back to the part-file probe
+    monkeypatch.setattr(elb_stream, "fs_has_part_files", probe_fails)
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    _write_gz(str(logs / "junk.log.gz"), ["garbage one", "garbage two", ""])
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="injected part-file probe failure"):
+        stream_elb_pipeline(spark, str(logs / "*.gz"), str(tmp_path / "out"))
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_stage_two_batches_orders_files_by_mtime(spark, tmp_path):
     """VERDICT r05 item 4: the single paced availableNow run replaces
     the two-run ingest shape, so FileStreamSource MUST process the
@@ -685,3 +711,43 @@ def test_sized_shuffle_partitions_rejects_nesting(spark):
     with sized_shuffle_partitions(spark, 4):  # reusable after clean exit
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+class TestSizedShufflePartitionRestore:
+    def test_failed_first_restore_still_restores_aqe(self, spark):
+        from elb_log_etl_enrichment_spark.streaming.stream import (
+            sized_shuffle_partitions,
+        )
+
+        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        real_set = spark.conf.set
+        state = {"raised": False}
+
+        def flaky_set(key, value):
+            # raise exactly once: on the exit-path restore of
+            # shuffle.partitions back to its previous value
+            if (
+                key == "spark.sql.shuffle.partitions"
+                and str(value) == str(prev_parts)
+                and not state["raised"]
+            ):
+                state["raised"] = True
+                raise RuntimeError("simulated py4j failure")
+            return real_set(key, value)
+
+        import unittest.mock as mock
+
+        with mock.patch.object(spark.conf, "set", flaky_set):
+            with pytest.raises(RuntimeError, match="simulated"):
+                with sized_shuffle_partitions(spark, 7):
+                    pass
+        assert state["raised"]
+        # the AQE restore must have run despite the first failure
+        assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
+        # repair the conf the simulated failure left behind
+        real_set("spark.sql.shuffle.partitions", prev_parts)
+        # and the re-entrancy latch must be released
+        with sized_shuffle_partitions(spark, 5):
+            pass
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts

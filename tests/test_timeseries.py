@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elb_log_etl_enrichment_spark.operators.asof import asof_join_backward
 from elb_log_etl_enrichment_spark.operators.timeseries import (
     gapfill_locf,
     ohlc_bars,
@@ -377,3 +379,84 @@ def test_watermark_lateness_hand_case(spark, tmp_path):
     assert out[10] == (1, 50_000)
     assert out[60] == (0, 50_000)
     assert out[300] == (0, 50_000)
+
+
+def test_asof_payload_not_torn_across_right_rows(spark):
+    """last(ignorenulls) per column would stitch (a=1, b=2) from two
+    different right rows; the struct fill must return the latest row
+    as-is: (a=NULL, b=2)."""
+    left = spark.createDataFrame([Row(k=1, t=3)])
+    right = spark.createDataFrame(
+        [Row(k=1, rt=1, a=1, b=None), Row(k=1, rt=2, a=None, b=2)],
+        schema="k long, rt long, a long, b long",
+    )
+    out = asof_join_backward(
+        left, right, left_on="k", right_on="k",
+        left_time="t", right_time="rt", payload_cols=["a", "b"],
+    ).collect()
+    assert len(out) == 1
+    assert out[0].a is None and out[0].b == 2  # the t=2 row, untorn
+
+
+def test_asof_null_keys_and_times_never_match(spark):
+    """Code-review r05 (reproduced): NULL left keys used to pair with
+    NULL right keys through the window's NULL partition, violating
+    SQL/DuckDB ASOF semantics where NULL never matches."""
+    from elb_log_etl_enrichment_spark.operators.asof import (
+        asof_join_backward,
+        asof_join_forward,
+    )
+
+    left = spark.createDataFrame(
+        [(None, 5), (1, 5), (1, None)], "k int, t int"
+    )
+    right = spark.createDataFrame(
+        [(None, 3, 99), (1, 3, 7), (1, None, 55)], "k int, rt int, pay int"
+    )
+    back = {
+        (r["k"], r["t"]): r["pay"]
+        for r in asof_join_backward(
+            left, right, "k", "k", "t", "rt", ["pay"]
+        ).collect()
+    }
+    assert back[(None, 5)] is None  # NULL key: no match
+    assert back[(1, 5)] == 7  # real match unaffected
+    assert back[(1, None)] is None  # NULL time: no match
+    fwd = {
+        (r["k"], r["t"]): r["pay"]
+        for r in asof_join_forward(
+            left, right, "k", "k", "t", "rt", ["pay"]
+        ).collect()
+    }
+    assert fwd[(None, 5)] is None
+    assert fwd[(1, None)] is None
+
+
+def test_asof_rejects_payload_collision_and_bad_tiebreak(spark):
+    """Code-review r05 (reproduced): a payload column sharing a left
+    column name silently NULLed the left column and emitted a
+    duplicate; a right_tiebreak not carried through the union raised
+    UNRESOLVED_COLUMN (or silently no-opped). Both now fail loudly /
+    work without being listed in payload_cols."""
+    import pytest
+
+    from elb_log_etl_enrichment_spark.operators.asof import asof_join_backward
+
+    left = spark.createDataFrame([(1, 5, 111)], "k int, t int, pay int")
+    right = spark.createDataFrame([(1, 3, 7, 2)], "k int, rt int, pay int, tb int")
+    with pytest.raises(ValueError, match="already exist in the left frame"):
+        asof_join_backward(left, right, "k", "k", "t", "rt", ["pay"])
+    with pytest.raises(ValueError, match="not a right-frame column"):
+        asof_join_backward(
+            left.drop("pay"), right, "k", "k", "t", "rt", ["pay"],
+            right_tiebreak="nope",
+        )
+    # tiebreak WITHOUT being a payload col: greatest tb wins on ties
+    right2 = spark.createDataFrame(
+        [(1, 3, 7, 2), (1, 3, 8, 9)], "k int, rt int, pay int, tb int"
+    )
+    out = asof_join_backward(
+        left.drop("pay"), right2, "k", "k", "t", "rt", ["pay"],
+        right_tiebreak="tb",
+    ).collect()
+    assert out[0]["pay"] == 8

@@ -467,3 +467,57 @@ class TestBpeOracleIndependence:
         monkeypatch.setattr(bpe, "bpe_encode_tokens", lying_encode)
         row = queries_training.bpe_merge_table(spark, SF).collect()[0]
         assert row["n_merges_ok"] == 0
+
+
+class TestBpeMergeOkFlag:
+    def test_degenerate_corpus_flag_green(self, spark, tmp_path):
+        """A corpus that exhausts pairs before 12 merges yields
+        n_merges_ok == 1 (legal early stop), matching the oracle's
+        constant — the r8 oracle hardcoded 12 and mismatched here."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from elb_log_etl_enrichment_spark.plans.queries import (
+            REGISTRY,
+            all_queries,
+        )
+
+        all_queries()
+        # single 2-char word: exactly 1 merge possible, then exhausted
+        t = pa.table(
+            {
+                "doc_id": pa.array([1], pa.int64()),
+                "source": pa.array(["s"]),
+                "lang_hint": pa.array(["en"]),
+                "text": pa.array(["ab"]),
+                "quality_hint": pa.array([0.5], pa.float64()),
+            }
+        )
+        pq.write_table(t, str(tmp_path / "documents.parquet"))
+        row = REGISTRY["bpe_merge_table"].fn(spark, str(tmp_path)).collect()[0]
+        assert row["n_merges_ok"] == 1
+        assert (row["first_left"], row["first_right"]) == ("a", "b")
+
+    def test_wrong_early_stop_flag_red(self, spark):
+        """Audit-envelope fuzz: a trainer that stops early WITHOUT
+        exhaustion must flip the flag to 0 (the audit is a real gate,
+        not eternal-green)."""
+        from unittest import mock
+
+        from elb_log_etl_enrichment_spark.operators import bpe
+        from elb_log_etl_enrichment_spark.plans.queries import (
+            REGISTRY,
+            all_queries,
+        )
+
+        all_queries()
+        real_train = bpe.bpe_train
+
+        def broken_train(words, n_merges=12, **kw):
+            return real_train(words, n_merges=3, **kw)  # premature stop
+
+        # the query imports bpe_train at call time, so patch the
+        # defining module
+        with mock.patch.object(bpe, "bpe_train", broken_train):
+            row = REGISTRY["bpe_merge_table"].fn(spark, SF).collect()[0]
+        assert row["n_merges_ok"] == 0
