@@ -466,12 +466,14 @@ def main() -> None:
     if os.path.exists(steady_path):
         with open(steady_path) as fh:
             steady_book = json.load(fh)
-        # only entries measured at THIS run's sf_dir: a steady number
-        # from a different scale next to these timings would send perf
-        # triage comparing across data sizes (code-review r05 finding)
+        # only entries measured at THIS run's sf_dir and core count: a
+        # steady number from a different scale or local[N] next to these
+        # timings would send perf triage comparing unlike runs (the
+        # runner's core default is the host's, this CLI's is 32)
         steady_book = {
             n: rec for n, rec in steady_book.items()
-            if (n in timings or n in sec_timings) and rec.get("sf_dir") == sf_dir
+            if (n in timings or n in sec_timings)
+            and rec.get("sf_dir") == sf_dir and rec.get("cpus") == cpus
         }
         # staleness rule (VERDICT r06 item 5): a steady stamp is only
         # trustworthy while the query's defining module is unchanged

@@ -25,8 +25,8 @@ Modes:
   steadies, their ratio and load1 to ``--out`` (default
   ``/tmp/ab_pairs.json``). Moderate steal leaves the ratio roughly
   intact where it swings solo numbers 3-4x.
-* ``scaling [q ...] --cpus LOW,...,HIGH`` runs one child per (query,
-  cores), all counts back to back per query, and records per-count
+* ``scaling [q ...] --cpus LOW,...,HIGH`` (at least two counts) runs
+  one child per (query, cores), all counts back to back per query, and records per-count
   entries plus ``steady(LOW) / steady(HIGH)`` as ``ratio_low_over_high``
   in ``--out`` (default ``BENCH.scaling.json``). Run it on data big
   enough to parallelize: at sf0.1 nearly every query sits on the
@@ -46,9 +46,9 @@ Usage:
 
 ``SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) and
 ``SPARK_GRAFT_CPUS`` (default: the cores this process may run on) are
-the variables ``bench.py`` reads; ``--cpus`` overrides the core count
-of the child JVMs, while the shuffle width stays ``SPARK_GRAFT_CPUS``
-in every child, as in ``bench.py``.
+the variables ``bench.py`` reads; every child JVM runs ``local[N]`` at
+that core count, except in ``scaling``, whose ``--cpus`` sets ``N`` per
+child while the shuffle width stays ``SPARK_GRAFT_CPUS``.
 """
 
 from __future__ import annotations
@@ -63,6 +63,7 @@ import tempfile
 import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CHILD_TIMEOUT_S = 600
 
 DEFAULT_OUT = {
     "steady": os.path.join(REPO_ROOT, "BENCH.steady.json"),
@@ -167,12 +168,18 @@ def run_child(
     """Run ``name`` from the checkout at ``root`` in a fresh JVM. Per
     run: wall ``s``, its wall-clock window ``t0_ms``/``t1_ms``, and the
     codegen ``classes`` compiled with their ``compile_ms``. None (with
-    the child's stderr tail) when the child fails."""
-    proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, root, name, sf_dir, cpus, str(warm),
-         "1" if noop else "", event_dir],
-        capture_output=True, text=True, cwd=root,
-    )
+    the child's stderr tail) when the child fails or outlives
+    ``CHILD_TIMEOUT_S``, so one hung JVM cannot stall a whole run."""
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", _CHILD, root, name, sf_dir, cpus,
+             str(warm), "1" if noop else "", event_dir],
+            capture_output=True, text=True, cwd=root, timeout=CHILD_TIMEOUT_S,
+        )
+    except subprocess.TimeoutExpired:
+        sys.stderr.write(f"{name}@{cpus}c ({root}): child timed out after "
+                         f"{CHILD_TIMEOUT_S} s\n")
+        return None
     for line in proc.stdout.splitlines():
         if line.startswith("RUNNER_JSON:"):
             return json.loads(line[len("RUNNER_JSON:"):])
@@ -353,12 +360,6 @@ def _parser() -> argparse.ArgumentParser:
     common = argparse.ArgumentParser(add_help=False)
     common.add_argument("--warm", type=int, default=2,
                         help="warm runs per child after the cold run")
-    common.add_argument(
-        "--cpus", default=None,
-        help="core counts, comma-separated: one local[N] JVM per count "
-             "(default $SPARK_GRAFT_CPUS, else the cores this process "
-             "may run on); only scaling takes more than one",
-    )
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     sub = ap.add_subparsers(dest="mode", required=True)
     modes = {m: sub.add_parser(m, parents=[common])
@@ -385,6 +386,10 @@ def _parser() -> argparse.ArgumentParser:
     modes["scaling"].add_argument(
         "names", nargs="*", help=f"queries (default: {len(SCALING_QUERIES)} "
                                  "shuffle-heavy ones)")
+    modes["scaling"].add_argument(
+        "--cpus", required=True,
+        help="two or more core counts, comma-separated (e.g. 8,32): one "
+             "local[N] JVM per count")
     modes["profile"].add_argument("name")
     modes["profile"].add_argument("--noop", action="store_true",
                                   help="write to the noop sink instead of .count()")
@@ -398,13 +403,14 @@ def main() -> None:
     if not os.path.isdir(sf_dir):
         ap.error(f"SPARK_GRAFT_SF_DIR={sf_dir} is not a directory "
                  "(scripts/make_sf1.py builds an sf1 copy)")
+    cpus = default_cpus()
     # the children size their shuffles from this, as bench.py's do
-    os.environ.setdefault("SPARK_GRAFT_CPUS", default_cpus())
-    cpu_list = sorted((c.strip() for c in (args.cpus or default_cpus()).split(",")),
-                      key=int)  # numeric: ratio_low_over_high is first/last
-    if args.mode != "scaling" and len(cpu_list) != 1:
-        ap.error(f"{args.mode} takes one --cpus value")
-    cpus = cpu_list[0]
+    os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)
+    if args.mode == "scaling":
+        cpu_list = sorted((c.strip() for c in args.cpus.split(",")),
+                          key=int)  # numeric: ratio_low_over_high is first/last
+        if len(cpu_list) < 2:
+            ap.error("scaling needs at least two --cpus counts, e.g. --cpus 8,32")
 
     if args.mode == "profile":
         event_dir = tempfile.mkdtemp(prefix="spark-events-")
@@ -473,7 +479,7 @@ def main() -> None:
                 r = _time(REPO_ROOT, name, sf_dir, c, args.warm)
                 if r is not None:
                     rec["cpus"][c] = r
-            if len(rec["cpus"]) == len(cpu_list) >= 2:
+            if len(rec["cpus"]) == len(cpu_list):
                 lo, hi = cpu_list[0], cpu_list[-1]
                 s_lo, s_hi = rec["cpus"][lo]["steady"], rec["cpus"][hi]["steady"]
                 rec["ratio_low_over_high"] = round(s_lo / s_hi, 2) if s_hi else None

@@ -109,3 +109,32 @@ def test_default_cpus_follows_the_host_unless_set(monkeypatch):
     assert qr.default_cpus() == str(len(os.sched_getaffinity(0)))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert qr.default_cpus() == "3"
+
+
+@pytest.mark.parametrize("argv", [["scaling"], ["scaling", "--cpus", "4"]])
+def test_scaling_without_two_core_counts_stops_before_writing(
+    argv, tmp_path, monkeypatch
+):
+    out = tmp_path / "scaling.json"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))
+    monkeypatch.setattr(qr.sys, "argv", ["query_runner.py", *argv, "--out", str(out)])
+    monkeypatch.setattr(qr, "run_child", lambda *a, **k: pytest.fail("child ran"))
+    with pytest.raises(SystemExit) as exc:
+        qr.main()
+    assert exc.value.code == 2
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("mode", [["steady", "q"], ["ab", "--old", "/x", "q"],
+                                  ["profile", "q"]])
+def test_only_scaling_takes_a_core_count_flag(mode):
+    with pytest.raises(SystemExit):
+        qr._parser().parse_args([*mode, "--cpus", "2"])
+
+
+def test_a_hung_child_counts_as_a_failed_one(monkeypatch):
+    def hang(cmd, **kw):
+        raise qr.subprocess.TimeoutExpired(cmd, kw["timeout"])
+
+    monkeypatch.setattr(qr.subprocess, "run", hang)
+    assert qr.run_child("/repo", "q", "/sf", "2", 1) is None
