@@ -11,15 +11,17 @@ matching the reference's ``'Other'`` fallback for unrecognized agents
 os ``Other``, tests/test_elb_logs.py:26).
 
 Scale note: pandas UDF = one Arrow batch per ~10k rows crossing the
-JVM/Python boundary, ~10-100× cheaper than a row-at-a-time UDF; for
-100 TB runs consider pre-aggregating distinct UA strings first (UA
-cardinality ≪ row count) and broadcast-joining the result back.
+JVM/Python boundary, ~10-100× cheaper than a row-at-a-time UDF. UA
+cardinality is far below row count, so each UDF classifies every
+DISTINCT value of a batch once (``pd.factorize``) and spreads the
+answers back to the rows.
 """
 
 from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -150,10 +152,20 @@ def classify_device(ua: str | None) -> str:
     return _first_match(_DEVICE_RULES, ua, trim=True)
 
 
+def _distinct_classes(classify, ua: pd.Series) -> tuple[np.ndarray, list]:
+    """``classify`` applied once per distinct value of the batch:
+    ``(codes, table)`` where row i's class is ``table[codes[i]]``. The
+    table's last entry is the NULL class, which ``factorize``'s -1
+    code picks."""
+    codes, uniques = pd.factorize(ua)
+    return codes, [classify(v) for v in uniques] + [classify(None)]
+
+
 @F.pandas_udf(UA_STRUCT)
 def _ua_classify_udf(ua: pd.Series) -> pd.DataFrame:
-    out = [classify_ua(v) for v in ua]
-    return pd.DataFrame(out, columns=["browser", "os"])
+    codes, table = _distinct_classes(classify_ua, ua)
+    classes = pd.DataFrame(table, columns=["browser", "os"])
+    return classes.take(codes).reset_index(drop=True)
 
 
 def ua_classify(col: Column) -> Column:
@@ -163,7 +175,8 @@ def ua_classify(col: Column) -> Column:
 
 @F.pandas_udf(StringType())
 def _device_classify_udf(ua: pd.Series) -> pd.Series:
-    return pd.Series([classify_device(v) for v in ua])
+    codes, table = _distinct_classes(classify_device, ua)
+    return pd.Series(table, dtype=object).take(codes).reset_index(drop=True)
 
 
 def device_classify(col: Column) -> Column:

@@ -6,20 +6,15 @@ of per-IP geolocation lookups, joined back onto the log table.
 Spark shape: ``distinct → left_anti join → (HTTP fan-out) → upsert →
 broadcast left join``. The cache side is one row per distinct client
 IP — orders of magnitude smaller than the log table — so the
-enrichment join is an explicit ``broadcast()`` hash join: zero shuffle
-of the 100 TB fact side.
+enrichment join (the first step of
+``plans.pipeline.make_feature_chain_template``) is an explicit
+``broadcast()`` hash join: zero shuffle of the 100 TB fact side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def enrich_with_geo(logs: DataFrame, geo: DataFrame, key: str = "client_ip") -> DataFrame:
-    """Left broadcast equi-join logs ⟕ geo on ``client_ip``
-    (reference merge_geocachedf_with_elbdf, elb_logs.py:231-238, J1)."""
-    return logs.join(F.broadcast(geo), on=key, how="left")
 
 
 def new_keys(logs: DataFrame, cache: DataFrame, key: str = "client_ip") -> DataFrame:

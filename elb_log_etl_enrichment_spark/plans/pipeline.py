@@ -27,116 +27,74 @@ from pyspark.sql import functions as F
 from ..operators.aggregate import bot_traffic, error_summary, hourly_geo_aggregates
 from ..operators.dedup import upsert_keep_latest
 from ..operators.enrich import new_keys
+from ..operators.features import (
+    calendar_columns,
+    path_columns,
+    processing_time_total,
+    rolling_columns,
+    session_columns,
+)
 from ..sinks.writers import write_cleaned_logs, write_csv, write_parquet
-from ..sources.elb_logs import LOCAL_TZ, parse_elb_lines, read_raw_lines
+from ..sources.elb_logs import (
+    LOCAL_TZ,
+    category_columns,
+    keep_predicate,
+    parse_elb_lines,
+    read_raw_lines,
+)
 from ..sources.geo_cache import load_geo_cache, update_geo_cache
 from ..sources.http_geo import fake_fetch, fetch_geolocations
 
 
 def make_feature_chain_template() -> Callable[[DataFrame, DataFrame], DataFrame]:
-    """Precompiled steps 3-6 (VERDICT r08 item 2): every Column and
-    WindowSpec of the enrich/filter/feature chain is built ONCE and
-    closed over; applying the returned ``(parsed, cache) → enriched``
-    costs 5 Dataset constructions (join, filter, 3 ``withColumns``
-    batches split only at genuine column dependencies) instead of the
-    ~15 the operator-by-operator chain performs.
+    """Steps 3-6 of the reference main() as one prebuilt template:
+    ``(parsed, cache) → enriched``.
 
-    Why it exists: Datasets analyze EAGERLY at construction, so a
+    The expressions live in their builders: the keep predicate and
+    category columns in ``sources.elb_logs``, the calendar, processing,
+    session, rolling and path columns in ``operators.features``. This
+    function builds each Column and WindowSpec once, groups them into
+    ``withColumns`` stages split only where a column reads one added
+    by an earlier stage, and closes over them. Applying the template
+    costs 5 Dataset constructions: the broadcast geo join, the filter
+    and 3 ``withColumns``.
+
+    Why prebuilt: Datasets analyze EAGERLY at construction, so a
     micro-batch pipeline that rebuilds the chain per batch pays the
     whole py4j + re-analysis tower (~0.6-0.8 s/batch measured at
     cron-tick scale) for a plan that is identical across batches —
     Column/WindowSpec objects are immutable unresolved expressions,
     reusable across same-schema frames. The stream builds this
     template once per run and the batch pipeline once per call, both
-    through :func:`enrich_and_featurize`, so the two cannot drift
-    (their parity is additionally pinned by the streaming-vs-batch
-    oracle).
+    through :func:`enrich_and_featurize`.
 
-    Semantics are unchanged from the operator chain
-    (`filter_categorize` ∘ `enrich_with_geo`, then time / processing /
-    session / rolling / path features): ``time_local`` — dropped at
-    the end of the old chain — is inlined into the calendar features
-    (Catalyst's projection collapse produced exactly that plan), and
-    the sessionize intermediates that fed later columns stay
-    materialized as columns in the same order, so the output schema is
-    byte-identical.
+    Calendar features read the US/Eastern wall clock
+    (``from_utc_timestamp(time)``, reference elb_logs.py:83,295-303)
+    inline, so no ``time_local`` column is added; windows order by the
+    underlying instant.
     """
-    from ..sources.elb_logs import HEALTH_CHECK_PATTERN, categorize_status
-    from pyspark.sql import Window
-
     key, ts, tiebreak = "client_ip", "time", "trace_id"
-    gap_minutes = 30
 
-    pred = (
-        F.col(key).isNotNull()
-        & F.col("request").isNotNull()
-        & ~F.coalesce(
-            F.lower(F.col("user_agent")).rlike(HEALTH_CHECK_PATTERN),
-            F.lit(False),
-        )
-    )
-    # reference extracts calendar features from US/Eastern wall-clock
-    # (elb_logs.py:83,295-303); windows order by the underlying instant.
-    t_local = F.from_utc_timestamp(F.col(ts), LOCAL_TZ)
-    total = sum(
-        (
-            F.coalesce(F.col(c), F.lit(0.0))
-            for c in (
-                "request_processing_time",
-                "target_processing_time",
-                "response_processing_time",
-            )
-        ),
-        F.lit(0.0),
-    )
+    pred = keep_predicate()
+    ms = F.unix_millis(F.col(ts))
     # trace_id is per-request-unique → deterministic order among rows
     # with identical timestamps (SURVEY.md §7.4 trap 7)
-    w = Window.partitionBy(key).orderBy(F.col(ts), F.col(tiebreak))
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ms = F.unix_millis(F.col(ts))
-    diff_ms = F.coalesce(ms - F.lag(ms, 1).over(w), F.lit(0))
-    roll_base = Window.partitionBy(key).orderBy(ms)
-    w_count = roll_base.rangeBetween(-300 * 1000, 0)
-    w_avg = roll_base.rangeBetween(-3600 * 1000, 0)
-    p = F.coalesce(F.col("path"), F.lit(""))
-    segs = F.split(p, "/")
-
-    # no inter-dict dependencies within a withColumns call; split only
-    # where a column genuinely references one added earlier
+    sess_b, cols_c, sess_d = session_columns(
+        key, ms, [F.col(ts), F.col(tiebreak)], gap_minutes=30
+    )
     cols_b = {
-        "status_code_type": categorize_status(F.col("elb_status_code")),
-        "waf_blocked": F.coalesce(
-            F.lower(F.col("classification_reason")).rlike("waf|blocked|deny"),
-            F.lit(False),
-        ),
-        "request_year": F.year(t_local),
-        "request_month": F.month(t_local),
-        "request_day": F.dayofmonth(t_local),
-        "request_hour": F.hour(t_local),
-        "request_day_of_week": F.date_format(t_local, "EEEE"),
-        "request_day_of_week_num": F.weekday(t_local),
-        "request_week_of_year": F.weekofyear(t_local),
-        "total_processing_time": total,
-        "time_diff_s": diff_ms / 1000.0,
-        "new_session": (diff_ms > gap_minutes * 60 * 1000).cast("int"),
-    }
-    cols_c = {
-        "session_number": F.sum("new_session").over(cum).cast("long"),
+        **category_columns(),
+        **calendar_columns(F.from_utc_timestamp(F.col(ts), LOCAL_TZ)),
+        "total_processing_time": processing_time_total(),
+        **sess_b,
     }
     cols_d = {
-        "session_id": F.concat(
-            F.col(key).cast("string"),
-            F.lit("_s"),
-            F.col("session_number").cast("string"),
+        **sess_d,
+        **rolling_columns(
+            key, ms, count_col="request", avg_col="total_processing_time",
+            count_window_s=300, avg_window_s=3600,
         ),
-        "rolling_5min_request_count":
-            F.count(F.col("request")).over(w_count).cast("long"),
-        "rolling_1h_avg_processing":
-            F.avg(F.col("total_processing_time")).over(w_avg),
-        "path_depth": F.size(F.filter(segs, lambda x: x != "")),
-        "path_main_segment": F.when(
-            F.size(segs) > 1, segs.getItem(1)
-        ).otherwise(""),
+        **path_columns(),
     }
 
     def apply_chain(parsed: DataFrame, cache: DataFrame) -> DataFrame:

@@ -124,18 +124,15 @@ def get_spark(
     """Build (or fetch) the engine SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    The shuffle width is ``shuffle_partitions``, else
+    ``SPARK_GRAFT_CPUS``, else the session's default parallelism.
     """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus and cpus.isdigit() else 32
-
+        master = f"local[{cpus or '*'}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         # Static: sizes the JVM-wide codegen cache (module docstring).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
@@ -153,4 +150,11 @@ def get_spark(
         builder = builder.config(key, value)
     for key, value in conf.items():
         builder = builder.config(key, value)
-    return ensure_engine_confs(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = (
+            int(cpus) if cpus and cpus.isdigit()
+            else spark.sparkContext.defaultParallelism
+        )
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return ensure_engine_confs(spark)

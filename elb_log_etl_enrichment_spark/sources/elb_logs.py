@@ -75,10 +75,13 @@ BOT_PATTERN = (
 #: Health-check agents filtered out of analytics (elb_logs.py:245-248).
 HEALTH_CHECK_PATTERN = "datadog|healthchecker|kube-probe|aws-elb"
 
+#: ALB timestamp layout (elb_logs.py:83), in Spark datetime pattern form.
+ALB_TIME_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
+
 _FLOAT_COLS = ["request_processing_time", "target_processing_time", "response_processing_time"]
 _INT_COLS = ["elb_status_code", "target_status_code", "received_bytes", "sent_bytes"]
 
-#: Typed schema of the parsed table (drives downstream Catalyst plans).
+#: Typed schema of the parsed table, in ``parse_elb_lines``' column order.
 PARSED_SCHEMA = StructType(
     [StructField("type", StringType()), StructField("time", TimestampType()),
      StructField("elb", StringType()), StructField("client_ip_port", StringType()),
@@ -119,34 +122,42 @@ def _int_guard(c: str) -> Column:
     return F.when(col.rlike(r"^[0-9]+$"), col.cast("long")).alias(c)
 
 
-def parse_elb_lines(
-    lines: DataFrame, value_col: str = "value", ua_via_broadcast: bool = False
-) -> DataFrame:
+def _record(value: Column) -> Column:
+    """One log line as the ``from_csv`` struct of its 29 raw fields:
+    space separator + double-quote quoting is the ALB grammar."""
+    return F.from_csv(value, RAW_DDL, {"sep": " ", "quote": '"', "mode": "PERMISSIVE"})
+
+
+def _alb_time(rec: Column) -> Column:
+    """Strict ``time`` parse (elb_logs.py:83): NULL unless it matches."""
+    return F.to_timestamp(rec.getField("time"), ALB_TIME_FORMAT)
+
+
+def _accepted(rec: Column) -> Column:
+    """The parser's accept rule over the ``from_csv`` struct: the
+    trailing field is present (arity guard, elb_logs.py:77-78) and
+    ``time`` parses (strict-time drop, elb_logs.py:130-132)."""
+    return rec.getField("classification_reason").isNotNull() & _alb_time(rec).isNotNull()
+
+
+def parse_elb_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """Parse raw log lines into the typed 36-column table.
 
     Single whole-stage-codegen projection; no Python UDF except the
     user-agent family classifier (P11, the reference's `user_agents`
-    dependency) which is an Arrow-batched pandas UDF.
-
-    ``ua_via_broadcast=True`` is the 100 TB hot-path variant: UA
-    cardinality is orders of magnitude below row count, so the pandas
-    UDF runs once per DISTINCT UA string and the result is
-    broadcast-joined back — the fact side never crosses the
-    JVM/Python boundary. Identical output (tested).
+    dependency), an Arrow-batched pandas UDF that classifies each
+    distinct UA string once per batch.
     """
     has_lineage = "log_source_file" in lines.columns
-    rec = F.from_csv(
-        F.col(value_col), RAW_DDL,
-        {"sep": " ", "quote": '"', "mode": "PERMISSIVE"},
+    # lines failing the accept rule are corrupt_records' rows
+    df = lines.withColumn("r", _record(F.col(value_col))).filter(
+        _accepted(F.col("r"))
     )
-    df = lines.withColumn("r", rec)
 
-    cols: list[Column] = []
-    for c in ["type", "elb", "client_ip_port", "target_ip_port"]:
+    # built in PARSED_SCHEMA order
+    cols = [F.col("r.type").alias("type"), _alb_time(F.col("r")).alias("time")]
+    for c in ["elb", "client_ip_port", "target_ip_port"]:
         cols.append(F.col(f"r.{c}").alias(c))
-    # strict timestamp: elb_logs.py:83 — non-matching lines dropped below.
-    time_col = F.to_timestamp(F.col("r.time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-    cols.append(time_col.alias("time"))
     for c in _FLOAT_COLS:
         # '-' sentinel → NULL (elb_logs.py:94-95); cast of other
         # non-numerics also NULLs (non-ANSI), strictly more tolerant.
@@ -161,7 +172,7 @@ def parse_elb_lines(
     rct = F.col("r.request_creation_time")
     cols.append(
         F.coalesce(
-            F.to_timestamp(rct, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"),
+            F.to_timestamp(rct, ALB_TIME_FORMAT),
             F.to_timestamp(rct, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"),
             F.to_timestamp(rct),
         ).alias("request_creation_time")
@@ -196,53 +207,21 @@ def parse_elb_lines(
         F.parse_url(url, F.lit("QUERY")).alias("query_params"),
     ]
 
-    # bot flag (P12, elb_logs.py:122-126)
-    bot_col = F.coalesce(
-        F.lower(F.col("r.user_agent")).rlike(BOT_PATTERN), F.lit(False)
-    ).alias("is_bot")
-    deferred_ua = False
-    if ua_via_broadcast:
-        # UA families joined in after the projection (see below)
-        deferred_ua = True
-        cols.append(bot_col)
-    else:
-        # UA classification (P11, elb_logs.py:119-121) inline
-        ua = ua_classify(F.col("r.user_agent"))
-        cols += [
-            ua.getField("browser").alias("ua_browser_family"),
-            ua.getField("os").alias("ua_os_family"),
-            bot_col,
-        ]
+    # UA classification (P11, elb_logs.py:119-121) and bot flag (P12,
+    # elb_logs.py:122-126)
+    ua = ua_classify(F.col("r.user_agent"))
+    cols += [
+        ua.getField("browser").alias("ua_browser_family"),
+        ua.getField("os").alias("ua_os_family"),
+        F.coalesce(
+            F.lower(F.col("r.user_agent")).rlike(BOT_PATTERN), F.lit(False)
+        ).alias("is_bot"),
+    ]
     if has_lineage:
         cols.append(F.col("log_source_file"))
     else:
         cols.append(F.lit("inline").alias("log_source_file"))
-
-    parsed = df.select(*cols)
-    # arity guard (elb_logs.py:77-78): short lines leave the trailing
-    # column NULL; strict-time failures drop the line (elb_logs.py:130-132).
-    parsed = parsed.filter(
-        F.col("classification_reason").isNotNull() & F.col("time").isNotNull()
-    )
-    if deferred_ua:
-        ua_map = parsed.select("user_agent").distinct()
-        ua = ua_classify(F.col("user_agent"))
-        ua_map = ua_map.select(
-            "user_agent",
-            ua.getField("browser").alias("ua_browser_family"),
-            ua.getField("os").alias("ua_os_family"),
-        )
-        parsed = parsed.join(F.broadcast(ua_map), on="user_agent", how="left")
-        # NULL user_agent never matches the equality join; the inline
-        # path classifies NULL as ('Other','Other') — keep parity.
-        parsed = parsed.withColumns(
-            {
-                "ua_browser_family": F.coalesce("ua_browser_family", F.lit("Other")),
-                "ua_os_family": F.coalesce("ua_os_family", F.lit("Other")),
-            }
-        )
-    # present the canonical column order either way
-    return parsed.select([f.name for f in PARSED_SCHEMA.fields])
+    return df.select(*cols)
 
 
 def corrupt_records(lines: DataFrame, value_col: str = "value") -> DataFrame:
@@ -252,19 +231,13 @@ def corrupt_records(lines: DataFrame, value_col: str = "value") -> DataFrame:
     instead of grepping logs).
 
     Accounting invariant: ``parsed_count + corrupt_count == line
-    count``, with NO silent third bucket — blank/whitespace-only lines
-    (a truncated object, whitespace corruption) land HERE too
-    (code-review r05: they used to be excluded, so a corruption flood
-    of empty lines was invisible to the quarantine alert)."""
-    rec = F.from_csv(
-        F.col(value_col), RAW_DDL, {"sep": " ", "quote": '"', "mode": "PERMISSIVE"}
-    )
-    t = F.to_timestamp(rec.getField("time"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-    bad = rec.getField("classification_reason").isNull() | t.isNull()
+    count``, with NO silent third bucket: this is the complement of
+    :func:`parse_elb_lines`' accept rule, so blank/whitespace-only
+    lines (a truncated object, whitespace corruption) land HERE too."""
     out_cols = [F.col(value_col).alias("raw_line")]
     if "log_source_file" in lines.columns:
         out_cols.append(F.col("log_source_file"))
-    return lines.filter(bad | (F.trim(F.col(value_col)) == "")).select(*out_cols)
+    return lines.filter(~_accepted(_record(F.col(value_col)))).select(*out_cols)
 
 
 def categorize_status(code: Column) -> Column:
@@ -281,23 +254,26 @@ def categorize_status(code: Column) -> Column:
     )
 
 
-def filter_categorize(df: DataFrame) -> DataFrame:
-    """Filters + categorical columns (reference elb_logs.py:241-257):
-    drop null ip/request rows (F1), drop health-check agents (F2), add
-    ``status_code_type`` (P13) and ``waf_blocked`` (P14)."""
+def keep_predicate() -> Column:
+    """Rows kept for analytics (reference elb_logs.py:241-248): non-null
+    ``client_ip`` and ``request`` (F1), not a health-check agent (F2)."""
     return (
-        df.filter(F.col("client_ip").isNotNull() & F.col("request").isNotNull())
-        .filter(
-            ~F.coalesce(
-                F.lower(F.col("user_agent")).rlike(HEALTH_CHECK_PATTERN), F.lit(False)
-            )
-        )
-        .withColumn("status_code_type", categorize_status(F.col("elb_status_code")))
-        .withColumn(
-            "waf_blocked",
-            F.coalesce(
-                F.lower(F.col("classification_reason")).rlike("waf|blocked|deny"),
-                F.lit(False),
-            ),
+        F.col("client_ip").isNotNull()
+        & F.col("request").isNotNull()
+        & ~F.coalesce(
+            F.lower(F.col("user_agent")).rlike(HEALTH_CHECK_PATTERN),
+            F.lit(False),
         )
     )
+
+
+def category_columns() -> dict[str, Column]:
+    """Categorical columns (reference elb_logs.py:250-257):
+    ``status_code_type`` (P13) and ``waf_blocked`` (P14)."""
+    return {
+        "status_code_type": categorize_status(F.col("elb_status_code")),
+        "waf_blocked": F.coalesce(
+            F.lower(F.col("classification_reason")).rlike("waf|blocked|deny"),
+            F.lit(False),
+        ),
+    }

@@ -35,9 +35,7 @@ def main() -> None:
 
     all_queries()
     sf_dir = default_sf_dir()
-    cpus = default_cpus()
-    os.environ.setdefault("SPARK_GRAFT_CPUS", cpus)  # shuffle width
-    spark = get_spark(app_name="explain-dump", master=f"local[{cpus}]")
+    spark = get_spark(app_name="explain-dump", master=f"local[{default_cpus()}]")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out, exist_ok=True)
 

@@ -96,10 +96,12 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from oracle_harness import duckdb_connection
+    from query_runner import default_cpus
 
+    cpus = default_cpus()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

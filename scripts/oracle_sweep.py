@@ -25,11 +25,13 @@ sys.path.insert(
 
 def main() -> None:
     from pyspark.sql import SparkSession
+    from query_runner import default_cpus
 
+    cpus = default_cpus()
     spark = (
-        SparkSession.builder.master("local[16]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", cpus)
         # sf1 sweeps OOM the default 1g driver heap (broadcast builds);
         # match get_spark's sizing, overridable like bench.py
         .config(

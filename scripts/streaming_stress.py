@@ -106,6 +106,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     from pyspark.sql import SparkSession
+    from query_runner import default_cpus
 
     from elb_log_etl_enrichment_spark.session import ensure_engine_confs
     from elb_log_etl_enrichment_spark.streaming.stream import (
@@ -113,10 +114,11 @@ def main() -> None:
         view_purchase_join_stream,
     )
 
+    cpus = default_cpus()
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", cpus)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

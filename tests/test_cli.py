@@ -47,20 +47,28 @@ def test_cli_usage_error():
 def test_python_workers_find_the_package_from_any_cwd(tmp_path):
     """A caller with the package only on its own sys.path, run from a
     cwd outside the checkout, must still run a pandas-function query:
-    get_spark puts the package's parent on the Python workers' path."""
+    get_spark puts the package's parent on the Python workers' path.
+    With no shuffle width given and SPARK_GRAFT_CPUS unset, the width
+    is the session's parallelism (2 on ``local[2]``)."""
     script = (
         "import sys\n"
         f"sys.path.insert(0, {REPO!r})\n"
         "from elb_log_etl_enrichment_spark.session import get_spark\n"
         "from elb_log_etl_enrichment_spark.plans.queries_ext import elb_error_report\n"
-        "spark = get_spark(master='local[2]', shuffle_partitions=2)\n"
+        "spark = get_spark(master='local[2]')\n"
+        "print(spark.conf.get('spark.sql.shuffle.partitions'))\n"
         "print(elb_error_report(spark, '').count())\n"
         "spark.stop()\n"
     )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")
+    }
     proc = subprocess.run(
         [sys.executable, "-c", script],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert int(proc.stdout.strip().splitlines()[-1]) > 0
+    width, count = proc.stdout.strip().splitlines()[-2:]
+    assert width == "2"
+    assert int(count) > 0

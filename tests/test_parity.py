@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from elb_log_etl_enrichment_spark.operators.features import (
     add_rolling_features,
-    extract_time_features,
+    calendar_columns,
     sessionize,
 )
 
@@ -30,7 +30,7 @@ def test_weekday_and_iso_week_match_pandas(spark):
     )
     out = {
         r.time.date().isoformat(): r
-        for r in extract_time_features(df).collect()
+        for r in df.withColumns(calendar_columns(F.col("time"))).collect()
     }
     for d in BOUNDARY_DATES:
         ts = pd.Timestamp(d)

@@ -9,8 +9,10 @@ import pytest
 from pyspark.sql import Row
 
 from elb_log_etl_enrichment_spark.sources.elb_logs import (
+    PARSED_SCHEMA,
     categorize_status,
-    filter_categorize,
+    category_columns,
+    keep_predicate,
     parse_elb_lines,
 )
 
@@ -36,7 +38,11 @@ def _parse(spark, lines):
 
 
 def test_parse_real_elb_log_line(spark):
-    rows = _parse(spark, [GOLDEN_LINE]).collect()
+    parsed = _parse(spark, [GOLDEN_LINE])
+    assert [(f.name, f.dataType) for f in parsed.schema] == [
+        (f.name, f.dataType) for f in PARSED_SCHEMA
+    ]
+    rows = parsed.collect()
     assert len(rows) == 1
     r = rows[0]
     # golden expectations (reference tests/test_elb_logs.py:22-27)
@@ -93,20 +99,6 @@ def test_parse_log_line_with_missing_fields(spark):
     assert _parse(spark, [truncated]).count() == 0
 
 
-def test_ua_broadcast_variant_is_identical(spark):
-    """The distinct-UA broadcast path (the 100 TB variant) must yield
-    byte-identical rows to the inline pandas-UDF path."""
-    from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
-
-    df = spark.createDataFrame([Row(value=ln) for ln in fixture_lines()])
-    inline = parse_elb_lines(df).collect()
-    broadcast = parse_elb_lines(df, ua_via_broadcast=True).collect()
-    key = lambda r: (r.time, r.client_ip, r.request)  # noqa: E731
-    assert sorted(map(str, sorted(inline, key=key))) == sorted(
-        map(str, sorted(broadcast, key=key))
-    )
-
-
 def test_corrupt_records_accounting(spark):
     from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
     from elb_log_etl_enrichment_spark.sources.elb_logs import corrupt_records
@@ -122,17 +114,20 @@ def test_corrupt_records_accounting(spark):
     assert bad == 3  # blank + 'not a log line' + truncated header line
 
 
-def test_filter_categorize_drops_health_checks_and_flags_waf(spark):
+def test_keep_predicate_drops_health_checks_and_flags_waf(spark):
+    def keep_and_categorize(parsed):
+        return parsed.filter(keep_predicate()).withColumns(category_columns())
+
     parsed = _parse(spark, [GOLDEN_LINE])
     # Datadog UA is a health-check agent (elb_logs.py:245-248) → dropped
-    assert filter_categorize(parsed).count() == 0
+    assert keep_and_categorize(parsed).count() == 0
     # non-healthcheck browser line passes and gets categorized
     browser_line = GOLDEN_LINE.replace(
         '"Datadog Agent/7.54.0"',
         '"Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 '
         '(KHTML, like Gecko) Chrome/124.0.0.0 Safari/537.36"',
     )
-    out = filter_categorize(_parse(spark, [browser_line])).collect()
+    out = keep_and_categorize(_parse(spark, [browser_line])).collect()
     assert len(out) == 1
     assert out[0].status_code_type == "2xx_Success"
     assert out[0].waf_blocked is False
@@ -897,17 +892,41 @@ def test_device_case_sql_reads_ua_module_table(monkeypatch):
     assert "SentinelBot" in case and "'Sentinel'" in case
 
 
-def test_ua_broadcast_null_user_agent_classified_other(spark):
-    """A parsed line with NULL user_agent must classify as
-    ('Other','Other') on the broadcast path, matching the inline path."""
+def test_null_user_agent_classified_other(spark):
+    """A parsed line with NULL user_agent classifies as
+    ('Other','Other'): the NULL class of the per-batch distinct table."""
     from elb_log_etl_enrichment_spark.sources.alb_fixtures import make_line
     from elb_log_etl_enrichment_spark.sources.elb_logs import parse_elb_lines
 
     # empty quoted UA field parses to NULL (CSV nullValue)
     line = make_line(datetime.datetime(2025, 5, 26, 12, 0, 0), "10.1.1.1", ua="")
     df = spark.createDataFrame([Row(value=line)])
-    for broadcast in (False, True):
-        rows = parse_elb_lines(df, ua_via_broadcast=broadcast).collect()
-        assert len(rows) == 1, f"broadcast={broadcast}"
-        assert rows[0].ua_browser_family == "Other", f"broadcast={broadcast}"
-        assert rows[0].ua_os_family == "Other", f"broadcast={broadcast}"
+    rows = parse_elb_lines(df).collect()
+    assert len(rows) == 1
+    assert rows[0].user_agent is None
+    assert rows[0].ua_browser_family == "Other"
+    assert rows[0].ua_os_family == "Other"
+
+
+def test_ua_udfs_classify_each_distinct_value_once(monkeypatch):
+    """The UA and device UDFs classify every distinct value of a batch
+    once (NULL included) and spread the answers back by row."""
+    import pandas as pd
+
+    from elb_log_etl_enrichment_spark.functions import ua
+
+    seen = []
+    monkeypatch.setattr(
+        ua, "classify_ua", lambda v: (seen.append(v), (f"b{v}", f"o{v}"))[1]
+    )
+    monkeypatch.setattr(ua, "classify_device", lambda v: f"d{v}")
+    batch = pd.Series(["x", None, "y", "x", None, "x"], dtype=object)
+    out = ua._ua_classify_udf.func(batch)
+    assert sorted(seen, key=str) == [None, "x", "y"]
+    assert out.to_dict("list") == {
+        "browser": ["bx", "bNone", "by", "bx", "bNone", "bx"],
+        "os": ["ox", "oNone", "oy", "ox", "oNone", "ox"],
+    }
+    assert ua._device_classify_udf.func(batch).tolist() == [
+        "dx", "dNone", "dy", "dx", "dNone", "dx"
+    ]

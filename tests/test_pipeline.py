@@ -409,23 +409,21 @@ def test_warm_run_compiles_no_generated_classes(spark, tmp_path):
 
 class TestFeatureChainTemplate:
     def test_template_matches_operator_chain(self, spark):
-        """The precompiled template must stay row- and schema-
-        identical to the operator-by-operator chain it collapsed
-        (pins the r9 restructure against drift; the streaming-vs-
-        batch oracle covers the composed pipeline, this covers the
-        chain in isolation with a frozen cache)."""
+        """The template's stage split and its inlined ``time_local``
+        must give the same rows and schema as applying the builders one
+        stage at a time with the ``sessionize``/``add_rolling_features``
+        operators (the streaming-vs-batch oracle covers the composed
+        pipeline, this covers the chain in isolation with a frozen
+        cache)."""
         import gzip
         import os
         import tempfile
 
-        from elb_log_etl_enrichment_spark.operators.enrich import (
-            enrich_with_geo,
-        )
         from elb_log_etl_enrichment_spark.operators.features import (
-            add_path_features,
             add_rolling_features,
-            calculate_processing_times,
-            extract_time_features,
+            calendar_columns,
+            path_columns,
+            processing_time_total,
             sessionize,
         )
         from elb_log_etl_enrichment_spark.plans.pipeline import (
@@ -436,7 +434,8 @@ class TestFeatureChainTemplate:
         )
         from elb_log_etl_enrichment_spark.sources.elb_logs import (
             LOCAL_TZ,
-            filter_categorize,
+            category_columns,
+            keep_predicate,
             parse_elb_lines,
         )
         from elb_log_etl_enrichment_spark.sources.http_geo import (
@@ -445,17 +444,20 @@ class TestFeatureChainTemplate:
         )
 
         def operator_chain(parsed, cache):
-            out = filter_categorize(enrich_with_geo(parsed, cache))
+            out = parsed.join(F.broadcast(cache), on="client_ip", how="left")
+            out = out.filter(keep_predicate()).withColumns(category_columns())
             out = out.withColumn(
                 "time_local", F.from_utc_timestamp(F.col("time"), LOCAL_TZ)
             )
-            out = extract_time_features(out, ts="time_local")
-            out = calculate_processing_times(out)
+            out = out.withColumns(calendar_columns(F.col("time_local")))
+            out = out.withColumn(
+                "total_processing_time", processing_time_total()
+            )
             out = sessionize(
                 out, key="client_ip", ts="time", tiebreak="trace_id"
             )
             out = add_rolling_features(out, key="client_ip", ts="time")
-            out = add_path_features(out)
+            out = out.withColumns(path_columns())
             return out.drop("time_local")
 
         base = tempfile.mkdtemp(prefix="tmpl_parity_")
