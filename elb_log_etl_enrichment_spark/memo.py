@@ -25,10 +25,25 @@ rather than recompute. Same-app evictions therefore just drop the
 memo reference; the ContextCleaner reclaims the blocks once the last
 Python/JVM reference to the frame is garbage-collected, and a stopped
 app's blocks die with its JVM either way.
+
+``scratch_dir`` is the on-disk counterpart: the one owner of the
+per-query scratch directories (streaming checkpoints, round-trip
+sinks, rollup state, staged stream sources, the shared ELB geo
+cache). Each call returns a new empty directory and removes the one
+it last returned for the same ``(prefix, key)``, so a returned lazy
+frame stays readable until the same query runs again with the same
+key. All of them live under one per-process root, which an ``atexit``
+hook removes when the process that created it exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import itertools
+import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 
@@ -123,3 +138,40 @@ class PersistSlot:
     def hold(self, *frames) -> None:
         """Keep ``frames`` persisted until the next ``release()``."""
         self._frames.extend(frames)
+
+
+_SCRATCH_LOCK = threading.Lock()
+#: (pid, path) of the scratch root; a forked child makes its own
+_scratch_root: tuple[int, str] | None = None
+#: (prefix, key) -> the directory scratch_dir last returned for it
+_scratch_last: dict[tuple[str, str], str] = {}
+_scratch_seq = itertools.count()
+
+
+def scratch_dir(prefix: str, key: str = "") -> str:
+    """A new empty directory named ``prefix<n>`` under this process's
+    scratch root; the directory last returned for the same
+    ``(prefix, key)`` is removed first. Freshness matters to callers:
+    a reused streaming checkpoint marks its source files processed
+    and drains an empty batch."""
+    global _scratch_root
+    with _SCRATCH_LOCK:
+        pid = os.getpid()
+        if _scratch_root is None or _scratch_root[0] != pid:
+            _scratch_root = (pid, tempfile.mkdtemp(prefix="elb_etl_scratch_"))
+            _scratch_last.clear()  # a forked child's copy names parent dirs
+        old = _scratch_last.pop((prefix, key), None)
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+        path = os.path.join(_scratch_root[1], f"{prefix}{next(_scratch_seq)}")
+        os.mkdir(path)
+        _scratch_last[(prefix, key)] = path
+        return path
+
+
+@atexit.register
+def _remove_scratch_root() -> None:
+    # only the creating pid: a forked child's exit keeps the parent's
+    # state. rmtree unlinks symlinks (staged sources), never follows.
+    if _scratch_root is not None and _scratch_root[0] == os.getpid():
+        shutil.rmtree(_scratch_root[1], ignore_errors=True)

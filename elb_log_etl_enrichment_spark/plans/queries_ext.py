@@ -12,29 +12,9 @@ import time
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..memo import PersistSlot
+from ..memo import PersistSlot, scratch_dir
 from ..operators.multimodal import attach_payload, decode_media
 from .queries import REGISTRY, _t, register
-
-#: per-query checkpoint memo (name → last dir); see _fresh_checkpoint
-_CKPT_DIRS: dict[str, str] = {}
-
-
-def _fresh_checkpoint(name: str) -> str:
-    """New checkpoint dir per invocation — a REUSED checkpoint would
-    mark the source files already-processed and drain an empty batch,
-    so freshness is semantically required; the previous invocation's
-    dir is removed so repeated registry runs don't accumulate state."""
-    import os
-    import shutil
-
-    old = _CKPT_DIRS.get(name)
-    if old and os.path.isdir(old):
-        shutil.rmtree(old, ignore_errors=True)
-    new = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    _CKPT_DIRS[name] = new
-    return new
-
 
 #: session-scoped SHARED geo cache for the batch ELB fixture queries:
 #: applicationId → cache path. The three cache-using fixture queries
@@ -55,8 +35,6 @@ _GEO_CACHE_SHARED: dict[str, str] = {}
 def _elb_fixture_enriched(spark: SparkSession) -> DataFrame:
     """The extended ELB fixture corpus, parsed and geo-enriched through
     the shared session cache (see ``_GEO_CACHE_SHARED``)."""
-    import shutil
-
     from ..operators.enrich import new_keys
     from ..plans.pipeline import make_feature_chain_template
     from ..session import ensure_engine_confs
@@ -74,14 +52,10 @@ def _elb_fixture_enriched(spark: SparkSession) -> DataFrame:
     app = spark.sparkContext.applicationId
     path = _GEO_CACHE_SHARED.get(app)
     if path is None:
-        for stale in [k for k in _GEO_CACHE_SHARED if k != app]:
-            old = _GEO_CACHE_SHARED.pop(stale, None)  # dead-session dirs
-            if old:
-                shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="elb_geo_cache_shared_"),
-            "cache.parquet",
-        )
+        # one key for every app: a new session's dir replaces the dead
+        # session's, so their memo entries go too
+        _GEO_CACHE_SHARED.clear()
+        path = os.path.join(scratch_dir("elb_geo_cache_shared_"), "cache.parquet")
         delta = fetch_geolocations(new_keys(parsed, load_geo_cache(spark, path)))
         # the cache starts empty, so the keep-latest merge is the delta
         update_geo_cache(spark, delta, path, merged=delta)
@@ -907,7 +881,7 @@ def streaming_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, sf_dir)
     sessions = sessionized_stream(events, gap="30 minutes")
-    ckpt = _fresh_checkpoint("sessionize")
+    ckpt = scratch_dir("ckpt_", "sessionize")
     result = run_available_now(
         sessions, spark, "mem_stream_sessions", ckpt, state_partitions=8
     )
@@ -939,7 +913,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, sf_dir)
     hourly = hourly_stream_agg(events)
-    ckpt = _fresh_checkpoint("hourly")
+    ckpt = scratch_dir("ckpt_", "hourly")
     result = run_available_now(
         hourly, spark, "mem_stream_hourly", ckpt, state_partitions=8
     )
@@ -982,7 +956,7 @@ def streaming_dedup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
         events.select("user_id", "event_type", "ts"),
         keys=["user_id", "event_type"],
     )
-    ckpt = _fresh_checkpoint("stream_dedup")
+    ckpt = scratch_dir("ckpt_", "stream_dedup")
     result = run_available_now(
         dd, spark, "mem_stream_dedup", ckpt, output_mode="append",
         state_partitions=8,
@@ -1022,7 +996,7 @@ def streaming_dedup_hourly_active_users(
 
     events = read_events_stream(spark, sf_dir)
     out = dedup_then_hourly_users(events)
-    ckpt = _fresh_checkpoint("dedup_hourly")
+    ckpt = scratch_dir("ckpt_", "dedup_hourly")
     result = run_available_now(
         out, spark, "mem_stream_dedup_hourly", ckpt, output_mode="update",
         state_partitions=8,
@@ -1075,7 +1049,7 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, sf_dir)
     joined = view_purchase_join_stream(events, max_gap="30 minutes").drop("view_ts")
-    ckpt = _fresh_checkpoint("vp_join")
+    ckpt = scratch_dir("ckpt_", "vp_join")
     return run_available_now(
         joined, spark, "mem_stream_vp_join", ckpt, output_mode="append",
         state_partitions=8,
@@ -1734,7 +1708,7 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
 
     events = read_events_stream(spark, sf_dir)
     totals = stateful_user_totals(events)
-    ckpt = _fresh_checkpoint("stateful")
+    ckpt = scratch_dir("ckpt_", "stateful")
     sink = run_available_now(
         totals, spark, "mem_stream_stateful", ckpt, output_mode="update"
     )
@@ -1900,7 +1874,7 @@ def streaming_elb_pipeline_hourly(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming.elb_stream import stream_elb_pipeline
 
     ensure_engine_confs(spark)
-    base = _fresh_checkpoint("elb_stream_pipeline")
+    base = scratch_dir("ckpt_", "elb_stream_pipeline")
     logs = os.path.join(base, "logs")
     os.makedirs(logs, exist_ok=True)
     out = os.path.join(base, "out")
@@ -2137,7 +2111,7 @@ def streaming_static_nation_counts(spark: SparkSession, sf_dir: str) -> DataFram
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    ckpt = _fresh_checkpoint("static_join")
+    ckpt = scratch_dir("ckpt_", "static_join")
     return run_available_now(
         agg, spark, "mem_stream_static", ckpt, state_partitions=8
     )
@@ -2229,7 +2203,7 @@ def streaming_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
             "sum_value",
         )
     )
-    ckpt = _fresh_checkpoint("sliding")
+    ckpt = scratch_dir("ckpt_", "sliding")
     return run_available_now(
         agg, spark, "mem_stream_sliding", ckpt, state_partitions=8
     )
@@ -2626,7 +2600,7 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, sf_dir)
     bars = ohlc_stream(events)
-    ckpt = _fresh_checkpoint("ohlc")
+    ckpt = scratch_dir("ckpt_", "ohlc")
     result = run_available_now(
         bars, spark, "mem_stream_ohlc", ckpt, state_partitions=8
     )
@@ -2950,7 +2924,7 @@ def streaming_ingest_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stream import ingest_dedup_stream
 
     ensure_engine_confs(spark)
-    base = _fresh_checkpoint("ingest_dedup")
+    base = scratch_dir("ckpt_", "ingest_dedup")
     src = os.path.join(base, "src")
     index = os.path.join(base, "digest_index.parquet")
     ck = os.path.join(base, "ck")
@@ -3177,7 +3151,7 @@ def streaming_neardup_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFram
     from ..streaming.stream import neardup_ingest_stream
 
     ensure_engine_confs(spark)
-    base = _fresh_checkpoint("neardup_ingest")
+    base = scratch_dir("ckpt_", "neardup_ingest")
     src = os.path.join(base, "src")
     index = os.path.join(base, "band_index.parquet")
     ck = os.path.join(base, "ck")
@@ -3222,7 +3196,6 @@ def streaming_neardup_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFram
 # is lossless for longs, doubles, strings AND microsecond timestamps
 # (the fragile one: JSON carries them as ISO-8601 text).
 # --------------------------------------------------------------------------
-_JSONL_DIRS: dict[str, str] = {}
 
 
 @register(
@@ -3248,15 +3221,8 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an explicit micros format: Spark's default JSON writer stops
     at milliseconds, which would silently truncate `ts` — exactly the
     class of bug this query exists to catch."""
-    import os
-    import shutil
-
     ev = _t(spark, sf_dir, "events")
-    old = _JSONL_DIRS.get(sf_dir)
-    if old and os.path.isdir(old):
-        shutil.rmtree(old, ignore_errors=True)
-    path = tempfile.mkdtemp(prefix="jsonl_rt_")
-    _JSONL_DIRS[sf_dir] = path
+    path = scratch_dir("jsonl_rt_", sf_dir)
     ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
     (
         ev.select("event_id", "ts", "user_id", "event_type", "value")
@@ -3298,7 +3264,6 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stores them natively; CSV carries them as formatted text with the
 # same micros pattern the JSONL query uses).
 # --------------------------------------------------------------------------
-_FMT_DIRS: dict[str, str] = {}
 
 
 @register(
@@ -3323,9 +3288,6 @@ def format_matrix_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestampFormat because its default parser stops at the pattern's
     precision. The aggregate is per-format global, so the verification
     moves 2 rows no matter the corpus size."""
-    import os
-    import shutil
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -3336,12 +3298,7 @@ def format_matrix_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
     parts = []
     for fmt in ("csv", "orc"):
-        key = f"{sf_dir}|{fmt}"
-        old = _FMT_DIRS.get(key)
-        if old and os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-        path = tempfile.mkdtemp(prefix=f"fmt_rt_{fmt}_")
-        _FMT_DIRS[key] = path
+        path = scratch_dir(f"fmt_rt_{fmt}_", sf_dir)
         w = ev.write.mode("overwrite")
         if fmt == "csv":
             w.option("header", True).option("timestampFormat", ts_fmt).csv(path)
@@ -3380,26 +3337,6 @@ def format_matrix_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # intact, the earliest day's values doubled) hash-proves both that the
 # backfill landed and that no other partition was dropped.
 # --------------------------------------------------------------------------
-_BACKFILL_DIRS: dict[str, str] = {}
-
-
-def _cleanup_backfill_dirs() -> None:
-    """atexit hook (VERDICT r08 item 5): each sf_dir's CURRENT
-    backfill tempdir is kept alive for re-reads within the session,
-    so the last one per corpus survives until interpreter exit —
-    remove them then instead of leaking /tmp/backfill_* per sweep."""
-    import shutil
-
-    for path in _BACKFILL_DIRS.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _BACKFILL_DIRS.clear()
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_cleanup_backfill_dirs)
-
-
 @register(
     "partition_backfill_stats",
     sql="""
@@ -3433,20 +3370,13 @@ def partition_backfill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition replaced exactly itself (`n_days` pins that the other
     partitions survived — static overwrite would have truncated
     them)."""
-    import os
-    import shutil
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         "value",
         F.date_trunc("day", F.col("ts")).cast("date").alias("dt"),
     )
-    old = _BACKFILL_DIRS.get(sf_dir)
-    if old and os.path.isdir(old):
-        shutil.rmtree(old, ignore_errors=True)
-    path = tempfile.mkdtemp(prefix="backfill_")
-    _BACKFILL_DIRS[sf_dir] = path
+    path = scratch_dir("backfill_", sf_dir)
     ev.write.partitionBy("dt").mode("overwrite").parquet(path)
 
     d0 = ev.agg(F.min("dt")).collect()[0][0]
@@ -3889,7 +3819,7 @@ def streaming_view_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 
     events = read_events_stream(spark, sf_dir)
     joined = view_purchase_join_stream(events, max_gap="30 minutes", how="left_outer")
-    ckpt = _fresh_checkpoint("vp_outer_join")
+    ckpt = scratch_dir("ckpt_", "vp_outer_join")
     # state_partitions sized to state volume (~25 MB peak across both
     # join sides — r6: 32 stores spent ~5 s/batch on open/commit alone)
     out = run_available_now(
@@ -3954,7 +3884,7 @@ def streaming_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, sf_dir)
     s = timeout_sessionized_stream(events)
-    ckpt = _fresh_checkpoint("timeout_sessions")
+    ckpt = scratch_dir("ckpt_", "timeout_sessions")
     # keyed state is user-count-sized (≤ a few thousand open sessions
     # at this corpus) — size the store count to it, not to the batch
     # shuffle width (see run_available_now's state_partitions note)

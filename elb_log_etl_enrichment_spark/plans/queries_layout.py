@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import scratch_dir
 from .queries import _t, register
 from .queries_sampling import hash_bucket, _sql_bucket
 
@@ -505,7 +506,6 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Write-audit-publish: transactional batch publish, digest-proven
 # --------------------------------------------------------------------------
-_WAP_DIRS: dict[str, str] = {}
 
 
 def _lp(expr: str) -> str:
@@ -549,17 +549,11 @@ def write_audit_publish_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ``sinks/writers.write_audit_publish``).
     """
     import os
-    import shutil
-    import tempfile
 
     from ..sinks.writers import AuditFailure, write_audit_publish
     from ..sinks.writers import _stable_row_digest
 
-    base = _WAP_DIRS.get(sf_dir)
-    if base and os.path.isdir(base):
-        shutil.rmtree(base, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="wap_")
-    _WAP_DIRS[sf_dir] = base
+    base = scratch_dir("wap_", sf_dir)
     final = os.path.join(base, "published")
     rejected = os.path.join(base, "rejected")
 
@@ -925,7 +919,6 @@ def parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Streaming WAP: exactly-once micro-batch publishes, digest-proven
 # --------------------------------------------------------------------------
-_SWAP_DIRS: dict[str, str] = {}
 
 
 @register(
@@ -969,19 +962,13 @@ def streaming_wap_publish_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
     import os
-    import shutil
-    import tempfile
 
     from ..session import ensure_engine_confs
     from ..sinks.writers import write_audit_publish, _stable_row_digest
     from ..streaming.stream import read_events_stream
 
     ensure_engine_confs(spark)
-    base = _SWAP_DIRS.get(sf_dir)
-    if base and os.path.isdir(base):
-        shutil.rmtree(base, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="swap_")
-    _SWAP_DIRS[sf_dir] = base
+    base = scratch_dir("swap_", sf_dir)
     ckpt = os.path.join(base, "ckpt")
     pub_root = os.path.join(base, "published")
 

@@ -226,11 +226,11 @@ def streaming_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
         tws_user_stats,
     )
-    from .queries_ext import _fresh_checkpoint
+    from ..memo import scratch_dir
 
     events = read_events_stream(spark, sf_dir)
     stats = tws_user_stats(events)
-    ckpt = _fresh_checkpoint("tws_stateful")
+    ckpt = scratch_dir("ckpt_", "tws_stateful")
     return run_available_now(
         stats, spark, "mem_stream_tws", ckpt, output_mode="update"
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..memo import PersistSlot
+from ..memo import PersistSlot, scratch_dir
 from ..operators.timeseries import gapfill_locf, ohlc_bars, time_weighted_avg
 from .queries import _t, register
 
@@ -649,7 +649,6 @@ def batch_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-checked against the oracle's one-shot recompute over all
 # events, proving 3 incremental runs ≡ 1 full batch.
 # --------------------------------------------------------------------------
-_ROLLUP_DIRS: dict[str, str] = {}
 
 
 @register(
@@ -676,15 +675,9 @@ def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     query returns the final state with read-time derived averages and
     must hash-match a single full recompute."""
     import os
-    import shutil
-    import tempfile
 
     ev = _t(spark, sf_dir, "events")
-    base = _ROLLUP_DIRS.get(sf_dir)
-    if base and os.path.isdir(base):
-        shutil.rmtree(base, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="rollup_state_")
-    _ROLLUP_DIRS[sf_dir] = base
+    base = scratch_dir("rollup_state_", sf_dir)
 
     keys = [
         F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("hour_start_ms"),
@@ -741,7 +734,6 @@ def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2-minute cron that rereads everything (reference elb_logs.py:351)
 # and one that stays 2 minutes at 100 TB.
 # --------------------------------------------------------------------------
-_JOIN_ROLLUP_DIRS: dict[str, str] = {}
 
 #: persisted dim frames from the PREVIOUS incremental_join_rollup call
 #: (released at the next call's entry — the memo.PersistSlot discipline;
@@ -776,8 +768,6 @@ def incremental_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-before-overwrite reason as ``incremental_hourly_rollup``.
     """
     import os
-    import shutil
-    import tempfile
 
     _JOIN_ROLLUP_SLOT.release()
     # the dim side joins against every delta run: project it to the
@@ -791,11 +781,7 @@ def incremental_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _JOIN_ROLLUP_SLOT.hold(o)
     li = _t(spark, sf_dir, "lineitem")
-    base = _JOIN_ROLLUP_DIRS.get(sf_dir)
-    if base and os.path.isdir(base):
-        shutil.rmtree(base, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="join_rollup_state_")
-    _JOIN_ROLLUP_DIRS[sf_dir] = base
+    base = scratch_dir("join_rollup_state_", sf_dir)
 
     rev = F.col("l_extendedprice").cast("decimal(18,6)") * (
         F.lit(1) - F.col("l_discount").cast("decimal(18,6)")

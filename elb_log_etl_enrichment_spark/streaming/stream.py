@@ -23,7 +23,6 @@ streams run in bounded memory.
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 from contextlib import contextmanager
 
@@ -39,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..hadoop_fs import fs_publish, fs_recover, hadoop_path_exists, staging_path
+from ..memo import scratch_dir
 from ..session import ensure_engine_confs
 
 
@@ -164,7 +164,7 @@ def read_events_stream(
         # one staging dir instead of leaking a tempdir per call
         staged = _STAGED_DIRS.get(path)
         if staged is None or not os.path.isdir(staged):
-            staged = tempfile.mkdtemp(prefix="events_stream_")
+            staged = scratch_dir("events_stream_", path)
             os.symlink(path, os.path.join(staged, "events.parquet"))
             _STAGED_DIRS[path] = staged
         path = staged

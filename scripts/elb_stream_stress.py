@@ -25,6 +25,7 @@ import glob
 import gzip
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -82,63 +83,68 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     base = tempfile.mkdtemp(prefix="elb_stream_stress_")
-    logs = os.path.join(base, "logs")
-    out = os.path.join(base, "out")
-    os.makedirs(logs)
+    try:
+        logs = os.path.join(base, "logs")
+        out = os.path.join(base, "out")
+        os.makedirs(logs)
 
-    def cleaned_count() -> int:
-        files = glob.glob(
-            os.path.join(out, "cleaned_logs", "**", "*.parquet"), recursive=True
-        )
-        if not files:
-            return 0
-        return spark.read.parquet(os.path.join(out, "cleaned_logs")).count()
+        def cleaned_count() -> int:
+            files = glob.glob(
+                os.path.join(out, "cleaned_logs", "**", "*.parquet"), recursive=True
+            )
+            if not files:
+                return 0
+            return spark.read.parquet(os.path.join(out, "cleaned_logs")).count()
 
-    report = []
-    prev = 0
-    for tick in range(ticks):
-        lines = tick_lines(tick, scale)
-        with gzip.open(os.path.join(logs, f"t{tick}.log.gz"), "wt") as f:
-            f.write("\n".join(lines) + "\n")
+        report = []
+        prev = 0
+        for tick in range(ticks):
+            lines = tick_lines(tick, scale)
+            with gzip.open(os.path.join(logs, f"t{tick}.log.gz"), "wt") as f:
+                f.write("\n".join(lines) + "\n")
+            t0 = time.perf_counter()
+            # tick-sized batches: the r7 per-batch shuffle sizing knob in
+            # its production (cron-cadence) shape
+            stream_elb_pipeline(
+                spark, os.path.join(logs, "*.gz"), out,
+                batch_shuffle_partitions=4,
+            )
+            wall = round(time.perf_counter() - t0, 2)
+            n = cleaned_count()
+            report.append(
+                {"tick": tick, "lines_in": len(lines), "new_rows": n - prev, "wall_s": wall}
+            )
+            prev = n
+            print(json.dumps(report[-1]), flush=True)
+
+        # idle tick: nothing new landed -> exactly-once means zero work
         t0 = time.perf_counter()
-        # tick-sized batches: the r7 per-batch shuffle sizing knob in
-        # its production (cron-cadence) shape
         stream_elb_pipeline(
-            spark, os.path.join(logs, "*.gz"), out,
-            batch_shuffle_partitions=4,
+            spark, os.path.join(logs, "*.gz"), out, batch_shuffle_partitions=4
         )
-        wall = round(time.perf_counter() - t0, 2)
-        n = cleaned_count()
-        report.append(
-            {"tick": tick, "lines_in": len(lines), "new_rows": n - prev, "wall_s": wall}
+        idle = {
+            "tick": "idle",
+            "new_rows": cleaned_count() - prev,
+            "wall_s": round(time.perf_counter() - t0, 2),
+        }
+        print(json.dumps(idle), flush=True)
+        cache = spark.read.parquet(
+            os.path.join(out, "ip_geolocation_cache.parquet")
         )
-        prev = n
-        print(json.dumps(report[-1]), flush=True)
-
-    # idle tick: nothing new landed -> exactly-once means zero work
-    t0 = time.perf_counter()
-    stream_elb_pipeline(
-        spark, os.path.join(logs, "*.gz"), out, batch_shuffle_partitions=4
-    )
-    idle = {
-        "tick": "idle",
-        "new_rows": cleaned_count() - prev,
-        "wall_s": round(time.perf_counter() - t0, 2),
-    }
-    print(json.dumps(idle), flush=True)
-    cache = spark.read.parquet(os.path.join(out, "ip_geolocation_cache.parquet"))
-    print(
-        json.dumps(
-            {
-                "total_cleaned": prev,
-                "geo_cache_ips": cache.count(),
-                "walls": [r["wall_s"] for r in report],
-                "idle_wall_s": idle["wall_s"],
-                "idle_new_rows": idle["new_rows"],
-            }
-        ),
-        flush=True,
-    )
+        print(
+            json.dumps(
+                {
+                    "total_cleaned": prev,
+                    "geo_cache_ips": cache.count(),
+                    "walls": [r["wall_s"] for r in report],
+                    "idle_wall_s": idle["wall_s"],
+                    "idle_new_rows": idle["new_rows"],
+                }
+            ),
+            flush=True,
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 if __name__ == "__main__":

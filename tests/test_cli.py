@@ -49,7 +49,8 @@ def test_python_workers_find_the_package_from_any_cwd(tmp_path):
     cwd outside the checkout, must still run a pandas-function query:
     get_spark puts the package's parent on the Python workers' path.
     With no shuffle width given and SPARK_GRAFT_CPUS unset, the width
-    is the session's parallelism (2 on ``local[2]``)."""
+    is the session's parallelism (2 on ``local[2]``). The query's
+    scratch dirs (the shared geo cache) are gone once the child exits."""
     script = (
         "import sys\n"
         f"sys.path.insert(0, {REPO!r})\n"
@@ -60,10 +61,13 @@ def test_python_workers_find_the_package_from_any_cwd(tmp_path):
         "print(elb_error_report(spark, '').count())\n"
         "spark.stop()\n"
     )
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
     env = {
         k: v for k, v in os.environ.items()
         if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")
     }
+    env["TMPDIR"] = str(tmp)
     proc = subprocess.run(
         [sys.executable, "-c", script],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
@@ -72,3 +76,4 @@ def test_python_workers_find_the_package_from_any_cwd(tmp_path):
     width, count = proc.stdout.strip().splitlines()[-2:]
     assert width == "2"
     assert int(count) > 0
+    assert [p.name for p in tmp.iterdir() if p.is_dir()] == []

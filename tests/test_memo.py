@@ -8,6 +8,9 @@ artifact keys rest on (artifacts.py).
   make any later action on the held reference fail instead of
   recompute). Cross-app evictions still unpersist.
 * ``PersistSlot`` releases the previous call's frames.
+* ``scratch_dir`` replaces a ``(prefix, key)``'s previous dir, removes
+  its root at exit in the creating process only, and is the package's
+  only ``tempfile.mkdtemp`` caller.
 * In-place part-file mutation must invalidate the memoized plan.
 * ``stat_fingerprint`` goes through the Hadoop FS API, so a schemed
   corpus (``viewfs://`` mounted over local files: a non-``file:``
@@ -20,11 +23,14 @@ artifact keys rest on (artifacts.py).
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import time
 
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class TestMemoSameAppEviction:
@@ -428,13 +434,68 @@ class TestMemoHygiene:
         # only cross-app; see test_memo.TestMemoSameAppEviction
         assert evicted == []
 
-    def test_backfill_dirs_atexit_cleanup(self, tmp_path):
-        from elb_log_etl_enrichment_spark.plans import queries_ext as qe
+    def test_scratch_dir_replaces_previous_and_root_removed_at_exit(
+        self, tmp_path
+    ):
+        """``scratch_dir`` in a fresh interpreter that imports only
+        memo.py: the second call for a ``(prefix, key)`` removes the
+        first dir, another key's dir survives, a forked child that
+        exits through ``sys.exit`` (atexit runs) leaves the parent's
+        root in place (one that used the helper removes only its own
+        root), and the parent's root is gone after the parent exits."""
+        script = (
+            "import os, sys\n"
+            f"sys.path.insert(0, {REPO!r})\n"
+            "from elb_log_etl_enrichment_spark import memo\n"
+            "assert 'pyspark' not in sys.modules\n"
+            "a = memo.scratch_dir('ckpt_', 'q')\n"
+            "open(os.path.join(a, 'f'), 'w').close()\n"
+            "b = memo.scratch_dir('ckpt_', 'q')\n"
+            "other = memo.scratch_dir('ckpt_', 'r')\n"
+            "assert not os.path.exists(a), a\n"
+            "assert os.listdir(b) == [] and os.path.isdir(other)\n"
+            "root = os.path.dirname(b)\n"
+            "for use_scratch in (False, True):\n"
+            "    pid = os.fork()\n"
+            "    if pid == 0:\n"
+            "        if use_scratch:\n"
+            "            c = memo.scratch_dir('ckpt_', 'q')\n"
+            "            print('child', os.path.dirname(c), flush=True)\n"
+            "        sys.exit(0)\n"
+            "    os.waitpid(pid, 0)\n"
+            "    assert os.path.isdir(b) and os.path.isdir(other)\n"
+            "print('parent', root, flush=True)\n"
+        )
+        env = dict(os.environ, TMPDIR=str(tmp_path))
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            env=env, capture_output=True, text=True, timeout=60,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        roots = dict(line.split(" ", 1) for line in proc.stdout.splitlines())
+        assert roots["child"] != roots["parent"]
+        assert os.path.dirname(roots["parent"]) == str(tmp_path)
+        assert list(tmp_path.iterdir()) == []
 
-        d = tmp_path / "backfill_fake"
-        d.mkdir()
-        (d / "part").write_bytes(b"x")
-        qe._BACKFILL_DIRS["__test__"] = str(d)
-        qe._cleanup_backfill_dirs()
-        assert not d.exists()
-        assert qe._BACKFILL_DIRS == {}
+    def test_only_memo_makes_temp_dirs(self):
+        """Per-query scratch dirs come from ``memo.scratch_dir`` (one
+        root, removed at exit); a module-local ``tempfile.mkdtemp``
+        would leak its dirs again."""
+        import ast
+
+        pkg = os.path.join(REPO, "elb_log_etl_enrichment_spark")
+        offenders = []
+        for root, _dirs, files in os.walk(pkg):
+            for f in files:
+                path = os.path.join(root, f)
+                if not f.endswith(".py") or path == os.path.join(pkg, "memo.py"):
+                    continue
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                offenders += [
+                    f"{path}:{n.lineno}"
+                    for n in ast.walk(tree)
+                    if (isinstance(n, ast.Attribute) and n.attr == "mkdtemp")
+                    or (isinstance(n, ast.alias) and n.name == "mkdtemp")
+                ]
+        assert offenders == []

@@ -408,7 +408,7 @@ def test_warm_run_compiles_no_generated_classes(spark, tmp_path):
 
 
 class TestFeatureChainTemplate:
-    def test_template_matches_operator_chain(self, spark):
+    def test_template_matches_operator_chain(self, spark, tmp_path):
         """The template's stage split and its inlined ``time_local``
         must give the same rows and schema as applying the builders one
         stage at a time with the ``sessionize``/``add_rolling_features``
@@ -416,8 +416,6 @@ class TestFeatureChainTemplate:
         pipeline, this covers the chain in isolation with a frozen
         cache)."""
         import gzip
-        import os
-        import tempfile
 
         from elb_log_etl_enrichment_spark.operators.features import (
             add_rolling_features,
@@ -460,8 +458,7 @@ class TestFeatureChainTemplate:
             out = out.withColumns(path_columns())
             return out.drop("time_local")
 
-        base = tempfile.mkdtemp(prefix="tmpl_parity_")
-        lf = os.path.join(base, "x.log.gz")
+        lf = str(tmp_path / "x.log.gz")
         with gzip.open(lf, "wt") as f:
             f.write("\n".join(fixture_lines_extended()) + "\n")
         raw = spark.read.text(lf).withColumn(
