@@ -6,6 +6,7 @@ plus the streaming, multimodal and full-ELB-pipeline entries.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import time
 
@@ -3466,6 +3467,29 @@ def _source_fingerprint(sf_dir: str, spark=None) -> str | None:
     return stat_fingerprint(paths, extra=(os.path.abspath(sf_dir),))
 
 
+#: name prefix of the persisted co-bucketed layout dirs in gettempdir()
+_BUCKETED_PREFIX = "spark_graft_bucketed_"
+
+
+def _remove_orphan_layouts(root: str) -> None:
+    """Delete each ``spark_graft_bucketed_*`` dir under ``root`` whose
+    recorded source corpus (its ``_SOURCE`` file, a local absolute
+    path) no longer exists: no later run can reuse it, as with a
+    pytest ``tmp_path`` corpus. A dir without a record, or recording
+    a remote URI, is kept."""
+    for name in os.listdir(root):
+        if not name.startswith(_BUCKETED_PREFIX):
+            continue
+        layout = os.path.join(root, name)
+        try:
+            with open(os.path.join(layout, "_SOURCE"), encoding="utf-8") as fh:
+                src = fh.read().strip()
+        except OSError:
+            continue
+        if os.path.isabs(src) and not os.path.exists(src):
+            shutil.rmtree(layout, ignore_errors=True)
+
+
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Register orders + lineitem as co-bucketed external tables and
     return their catalog names. The bucketed files are a PERSISTED
@@ -3474,20 +3498,17 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     fingerprint, reused across sessions while the sources are
     byte-identical, rewritten the moment they change (r7 — the
     per-session tempdir paid the full two-table write on every new
-    process for the same unchanged inputs)."""
+    process for the same unchanged inputs). Writing a new layout
+    records its source next to ``_FINGERPRINT`` and first removes the
+    layouts whose source is gone (``_remove_orphan_layouts``)."""
     import hashlib
-    import os
-    import shutil
-    import tempfile
 
     sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     t_orders, t_lineitem = f"bj_orders_{sfx}", f"bj_lineitem_{sfx}"
     if _BUCKET_DIRS.get(sf_dir) and spark.catalog.tableExists(t_orders):
         return t_orders, t_lineitem
     fp = _source_fingerprint(sf_dir, spark=spark)
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bucketed_{sfx}"
-    )
+    base = os.path.join(tempfile.gettempdir(), f"{_BUCKETED_PREFIX}{sfx}")
     stamp = os.path.join(base, "_FINGERPRINT")
     reuse = False
     try:
@@ -3495,8 +3516,14 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             reuse = fh.read().strip() == fp
     except OSError:
         reuse = False
-    if not reuse and os.path.isdir(base):
+    if not reuse:
         shutil.rmtree(base, ignore_errors=True)
+        _remove_orphan_layouts(tempfile.gettempdir())
+        os.makedirs(base, exist_ok=True)
+        # a local corpus is recorded by its absolute path, which the
+        # sweep can check; a URI is recorded as given and never swept
+        with open(os.path.join(base, "_SOURCE"), "w", encoding="utf-8") as fh:
+            fh.write(os.path.abspath(sf_dir) if os.path.isdir(sf_dir) else sf_dir)
     _BUCKET_DIRS[sf_dir] = base
     for name, frame, key in (
         (t_orders, _t(spark, sf_dir, "orders"), "o_orderkey"),

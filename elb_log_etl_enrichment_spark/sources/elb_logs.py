@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.ua import ua_classify
+from ..memo import memo_put
 
 #: AWS ALB access-log columns, in file order (reference elb_logs.py:44-53).
 ELB_COLUMNS = [
@@ -140,6 +141,12 @@ def _accepted(rec: Column) -> Column:
     return rec.getField("classification_reason").isNotNull() & _alb_time(rec).isNotNull()
 
 
+#: (applicationId, value_col, has_lineage) -> the Columns of
+#: ``parse_elb_lines``; per application because the projection embeds
+#: the UA pandas UDF, which is bound to its SparkContext
+_PARSE_COLUMNS: dict = {}
+
+
 def parse_elb_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """Parse raw log lines into the typed 36-column table.
 
@@ -147,13 +154,28 @@ def parse_elb_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     user-agent family classifier (P11, the reference's `user_agents`
     dependency), an Arrow-batched pandas UDF that classifies each
     distinct UA string once per batch.
+
+    The Columns are built once per Spark application (they are
+    immutable unresolved expressions, valid for every frame with the
+    same line schema), so a call costs the 3 Dataset constructions
+    only: the ``from_csv`` struct, the accept filter, the projection.
     """
     has_lineage = "log_source_file" in lines.columns
+    key = (lines.sparkSession.sparkContext.applicationId, value_col, has_lineage)
+    built = _PARSE_COLUMNS.get(key)
+    if built is None:
+        built = _parse_columns(value_col, has_lineage)
+        memo_put(_PARSE_COLUMNS, key, built, cap=4)
+    record, accepted, cols = built
     # lines failing the accept rule are corrupt_records' rows
-    df = lines.withColumn("r", _record(F.col(value_col))).filter(
-        _accepted(F.col("r"))
-    )
+    return lines.withColumn("r", record).filter(accepted).select(*cols)
 
+
+def _parse_columns(
+    value_col: str, has_lineage: bool
+) -> tuple[Column, Column, list[Column]]:
+    """``parse_elb_lines``' Columns: the ``from_csv`` struct ``r`` of
+    ``value_col``, the accept predicate over it and the projection."""
     # built in PARSED_SCHEMA order
     cols = [F.col("r.type").alias("type"), _alb_time(F.col("r")).alias("time")]
     for c in ["elb", "client_ip_port", "target_ip_port"]:
@@ -221,7 +243,7 @@ def parse_elb_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
         cols.append(F.col("log_source_file"))
     else:
         cols.append(F.lit("inline").alias("log_source_file"))
-    return df.select(*cols)
+    return _record(F.col(value_col)), _accepted(F.col("r")), cols
 
 
 def corrupt_records(lines: DataFrame, value_col: str = "value") -> DataFrame:

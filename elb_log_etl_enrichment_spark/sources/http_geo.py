@@ -1,13 +1,26 @@
 """Rate-limited HTTP geolocation fan-out (SURVEY.md §2.1 S9).
 
 The reference loops serially over new IPs calling ip-api.com with a
-0.6 s sleep (elb_logs.py:166-209, 413-419) — a ≤100 lookups/min
-ceiling. Here the fan-out is a ``mapInPandas`` table function: each
-partition issues its own throttled request stream, so aggregate
-throughput scales with the ``parallelism`` knob (a ``repartition``
-of the distinct key set — see the in-function note for why coalesce
-is specifically wrong here) while still honoring a per-partition
-rate limit.
+0.6 s sleep after each call (elb_logs.py:166-209, 413-419) — a
+≤100 lookups/min ceiling, and every lookup's latency paid in turn.
+Here the fan-out is a ``mapInPandas`` table function: the distinct
+key set is ``repartition``-ed over ``parallelism`` partitions (see
+the in-function note for why coalesce is specifically wrong here),
+and each partition runs its IPs through :func:`lookup_partition`:
+
+* at most :data:`MAX_IN_FLIGHT` lookups in flight per partition, on
+  a thread pool, so a transport's latency overlaps instead of adding
+  up per IP;
+* ``rate_limit_s`` is a START-TO-START spacing: a lookup starts no
+  sooner than ``rate_limit_s`` after the previous one of its
+  partition started, so each partition's request rate stays
+  ≤ 1/``rate_limit_s`` (the reference's sleep-after-call gave the
+  same ceiling) and the aggregate rate ≤ ``parallelism /
+  rate_limit_s``;
+* rows come back in input order.
+
+``fetch_fn`` is therefore called from several threads at once and
+must be thread-safe; ``fake_fetch`` and ``http_fetch`` are.
 
 The HTTP transport is injectable: tests (and this offline container)
 use a deterministic fake; the real transport is only constructed on
@@ -17,8 +30,10 @@ row (elb_logs.py:186-209).
 
 from __future__ import annotations
 
+import threading
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,6 +42,9 @@ from .geo_cache import GEO_SCHEMA
 
 #: fields mirrored from the ip-api.com response (elb_logs.py:167,174-184)
 _FIELDS = ["countryCode", "countryName", "regionName", "city", "lat", "lon", "isp"]
+
+#: lookups in flight at once per partition (the lookup pool's size)
+MAX_IN_FLIGHT = 16
 
 
 def error_sentinel(ip: str) -> dict:
@@ -81,6 +99,44 @@ def http_fetch(ip: str) -> dict:  # pragma: no cover - network edge
         return error_sentinel(ip)
 
 
+def lookup_partition(
+    ips: Sequence[str],
+    fetch_fn: Callable[[str], dict],
+    rate_limit_s: float = 0.0,
+) -> list[dict]:
+    """Look up one partition's ``ips``: at most :data:`MAX_IN_FLIGHT`
+    ``fetch_fn`` calls in flight, each started no sooner than
+    ``rate_limit_s`` after the previous start (0 = no pacing). Returns
+    one row per IP in input order, each stamped with
+    ``api_fetch_timestamp`` when its lookup returned. An exception
+    from ``fetch_fn`` cancels the lookups not yet started and is
+    raised."""
+    if not ips:
+        return []
+    pace = threading.Lock()
+    next_start = time.monotonic()
+
+    def lookup(ip: str) -> dict:
+        nonlocal next_start
+        if rate_limit_s:
+            # sleeping under the lock queues the other threads behind
+            # this start, so starts are spaced one by one
+            with pace:
+                wait = next_start - time.monotonic()
+                if wait > 0:
+                    time.sleep(wait)
+                next_start = time.monotonic() + rate_limit_s
+        row = dict(fetch_fn(ip))
+        row["api_fetch_timestamp"] = pd.Timestamp.now(tz="UTC").tz_localize(None)
+        return row
+
+    pool = ThreadPoolExecutor(max_workers=min(MAX_IN_FLIGHT, len(ips)))
+    try:
+        return list(pool.map(lookup, ips))
+    finally:
+        pool.shutdown(cancel_futures=True)
+
+
 def fetch_geolocations(
     new_ips: DataFrame,
     fetch_fn: Callable[[str], dict] = fake_fetch,
@@ -94,15 +150,21 @@ def fetch_geolocations(
     session timezone is pinned to UTC, so a machine-local stamp would
     shift the cache's last-write-wins ordering across hosts/DST).
 
-    ``rate_limit_s`` defaults to the REFERENCE's 0.6 s inter-call
-    sleep (elb_logs.py:419) whenever the real ip-api transport is in
-    use — callers that forget to throttle must not hammer the free
-    tier into 429s, whose Error sentinel rows the cache would then
-    persist and never refetch (code-review r05 finding). Injected
-    offline transports default to unthrottled.
+    Each of the ``parallelism`` partitions looks its IPs up through
+    :func:`lookup_partition`: at most :data:`MAX_IN_FLIGHT` lookups in
+    flight, each started no sooner than ``rate_limit_s`` after the
+    partition's previous start. So ``fetch_fn`` must be thread-safe
+    (``fake_fetch`` and ``http_fetch`` are), and the aggregate request
+    rate is ≤ ``parallelism / rate_limit_s`` (free-tier etiquette:
+    keep it under the provider cap).
 
-    ``parallelism`` bounds concurrent API clients (free-tier etiquette:
-    keep ``parallelism / rate_limit_s`` under the provider cap).
+    ``rate_limit_s`` defaults to the REFERENCE's 0.6 s spacing
+    (elb_logs.py:419) whenever the real ip-api transport is in use —
+    callers that forget to throttle must not hammer the free tier
+    into 429s, whose Error sentinel rows the cache would then persist
+    and never refetch (code-review r05 finding). Injected offline
+    transports default to unthrottled, so their latency overlaps up
+    to the in-flight bound.
 
     ``row_count_acc`` (optional SparkContext accumulator): incremented
     by the number of rows each task EMITS, so a caller that
@@ -116,18 +178,13 @@ def fetch_geolocations(
     if rate_limit_s is None:
         rate_limit_s = 0.6 if fetch_fn is http_fetch else 0.0
 
-    def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ip in pdf["client_ip"]:
-                row = dict(fetch_fn(ip))
-                row["api_fetch_timestamp"] = pd.Timestamp.now(
-                    tz="UTC"
-                ).tz_localize(None)
-                rows.append(row)
-                if rate_limit_s:
-                    time.sleep(rate_limit_s)
-            if row_count_acc is not None and rows:
+    def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the whole partition in one call, so the pacing and the
+        # in-flight bound hold across its Arrow batches
+        ips = [ip for pdf in batches for ip in pdf["client_ip"]]
+        rows = lookup_partition(ips, fetch_fn, rate_limit_s)
+        if rows:
+            if row_count_acc is not None:
                 row_count_acc.add(len(rows))
             yield pd.DataFrame(
                 rows, columns=["client_ip", *_FIELDS, "api_fetch_timestamp"]
@@ -141,5 +198,5 @@ def fetch_geolocations(
     # The repartition shuffle it saves carries only the distinct new
     # key set — trivial next to a serialized join.
     return new_ips.repartition(max(parallelism, 1)).mapInPandas(
-        fetch_batches, schema=GEO_SCHEMA
+        fetch_partition, schema=GEO_SCHEMA
     )

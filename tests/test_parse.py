@@ -65,6 +65,30 @@ def test_parse_real_elb_log_line(spark):
     assert r.request_creation_time is not None
 
 
+def test_second_parse_reuses_the_session_columns(spark, monkeypatch):
+    """parse_elb_lines builds its Columns once per application: a
+    repeat call over a frame of the same schema makes only the Dataset
+    constructions' py4j calls (763 when the projection was rebuilt on
+    every call)."""
+    from py4j.java_gateway import JavaMember
+
+    lines = spark.createDataFrame([Row(value=GOLDEN_LINE)])
+    first = parse_elb_lines(lines)
+    calls = [0]
+    call = JavaMember.__call__
+
+    def counting(self, *args):
+        calls[0] += 1
+        return call(self, *args)
+
+    monkeypatch.setattr(JavaMember, "__call__", counting)
+    second = parse_elb_lines(lines)
+    monkeypatch.undo()
+    assert calls[0] < 60, calls[0]
+    assert second.schema == first.schema
+    assert second.collect() == first.collect()
+
+
 def test_categorize_status(spark):
     df = spark.createDataFrame(
         [Row(code=100), Row(code=200), Row(code=300), Row(code=404),

@@ -408,6 +408,13 @@ def test_warm_run_compiles_no_generated_classes(spark, tmp_path):
 
 
 class TestFeatureChainTemplate:
+    def test_template_is_built_once_per_process(self, spark):
+        from elb_log_etl_enrichment_spark.plans.pipeline import (
+            make_feature_chain_template,
+        )
+
+        assert make_feature_chain_template() is make_feature_chain_template()
+
     def test_template_matches_operator_chain(self, spark, tmp_path):
         """The template's stage split and its inlined ``time_local``
         must give the same rows and schema as applying the builders one
@@ -504,3 +511,99 @@ class TestFeatureChainTemplate:
         )
         with pytest.raises(TypeError, match="parse it first"):
             make_feature_chain_template()(bad, cache)
+
+
+class TestLookupPartition:
+    """``http_geo.lookup_partition``, the per-partition lookup loop of
+    ``fetch_geolocations``, against a fake transport that sleeps and
+    records start times and concurrency. No JVM."""
+
+    @staticmethod
+    def _ips(n):
+        return [f"10.{i // 65536}.{i // 256 % 256}.{i % 256}" for i in range(n)]
+
+    @staticmethod
+    def _transport(latency_s):
+        import threading
+        import time
+
+        lock = threading.Lock()
+        seen = {"starts": [], "live": 0, "peak": 0}
+
+        def fetch(ip):
+            with lock:
+                seen["starts"].append(time.monotonic())
+                seen["live"] += 1
+                seen["peak"] = max(seen["peak"], seen["live"])
+            time.sleep(latency_s)
+            with lock:
+                seen["live"] -= 1
+            return fake_fetch(ip)
+
+        return fetch, seen
+
+    def test_rows_come_back_in_input_order(self):
+        import time
+
+        from elb_log_etl_enrichment_spark.sources.http_geo import lookup_partition
+
+        ips = self._ips(64)
+        rank = {ip: i for i, ip in enumerate(ips)}
+
+        def fetch(ip):
+            # later IPs return first
+            time.sleep(0.0005 * (len(ips) - rank[ip]))
+            return fake_fetch(ip)
+
+        rows = lookup_partition(ips, fetch)
+        assert [r["client_ip"] for r in rows] == ips
+        assert rows == [
+            {**fake_fetch(ip), "api_fetch_timestamp": r["api_fetch_timestamp"]}
+            for ip, r in zip(ips, rows)
+        ]
+        assert lookup_partition([], fetch) == []
+
+    def test_at_most_max_in_flight(self):
+        from elb_log_etl_enrichment_spark.sources.http_geo import (
+            MAX_IN_FLIGHT,
+            lookup_partition,
+        )
+
+        assert MAX_IN_FLIGHT == 16
+        fetch, seen = self._transport(0.02)
+        assert len(lookup_partition(self._ips(100), fetch)) == 100
+        assert 1 < seen["peak"] <= MAX_IN_FLIGHT
+
+    def test_rate_limit_spaces_the_starts(self):
+        from elb_log_etl_enrichment_spark.sources.http_geo import lookup_partition
+
+        rate_limit_s = 0.02
+        # latency above the spacing, so lookups overlap while paced
+        fetch, seen = self._transport(0.05)
+        lookup_partition(self._ips(12), fetch, rate_limit_s)
+        starts = sorted(seen["starts"])
+        gaps = [b - a for a, b in zip(starts, starts[1:])]
+        # the pacer stamps a start just before it calls fetch_fn; the
+        # fake's own stamp may lag it by thread-switch jitter
+        assert min(gaps) >= rate_limit_s - 1e-3, gaps
+        assert seen["peak"] > 1
+
+    def test_fetch_error_fails_the_call(self):
+        import time
+
+        from elb_log_etl_enrichment_spark.sources.http_geo import lookup_partition
+
+        ips = self._ips(500)
+        calls = []
+
+        def fetch(ip):
+            calls.append(ip)
+            if ip == ips[0]:
+                raise RuntimeError("transport down")
+            time.sleep(0.005)
+            return fake_fetch(ip)
+
+        with pytest.raises(RuntimeError, match="transport down"):
+            lookup_partition(ips, fetch)
+        # the lookups not yet started are cancelled
+        assert len(calls) < len(ips)

@@ -370,6 +370,40 @@ def test_zorder_writes_empty_and_all_null_frames(spark, tmp_path):
     assert spark.read.parquet(out2).count() == 5
 
 
+def test_orphan_bucketed_layouts_are_removed(tmp_path):
+    """A persisted co-bucketed layout whose recorded source corpus is
+    gone can never be reused, so the next layout write removes it.
+    Layouts of a live corpus, of a remote URI or without a record
+    stay, and so does anything not named like a layout."""
+    from elb_log_etl_enrichment_spark.plans.queries_ext import (
+        _remove_orphan_layouts,
+    )
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+
+    def layout(name, source):
+        d = tmp_path / f"spark_graft_bucketed_{name}"
+        (d / "bj_orders_x").mkdir(parents=True)
+        (d / "_FINGERPRINT").write_text("fp")
+        if source is not None:
+            (d / "_SOURCE").write_text(source)
+        return d
+
+    live = layout("live", str(corpus))
+    gone = layout("gone", str(tmp_path / "deleted_corpus"))
+    unrecorded = layout("unrecorded", None)
+    remote = layout("remote", "s3a://bucket/sf1")
+    other = tmp_path / "not_a_layout"
+    other.mkdir()
+    (other / "_SOURCE").write_text(str(tmp_path / "deleted_corpus"))
+
+    _remove_orphan_layouts(str(tmp_path))
+    assert not gone.exists()
+    assert live.is_dir() and unrecorded.is_dir() and remote.is_dir()
+    assert other.is_dir() and corpus.is_dir()
+
+
 def test_bucketed_layout_persists_and_invalidates(spark, tmp_path):
     """r7: the co-bucketed join layout is a persisted artifact —
     reused across sessions while the source fingerprint matches
@@ -413,6 +447,8 @@ def test_bucketed_layout_persists_and_invalidates(spark, tmp_path):
     n1 = spark.table(t_l).count()
     base, m1 = bucket_file_mtimes()
     assert n1 > 0 and m1
+    with open(os.path.join(base, "_SOURCE"), encoding="utf-8") as fh:
+        assert fh.read() == os.path.abspath(sf_dir)
 
     # fresh "session": same sources -> DDL-only reuse, files untouched
     reset_session_state()
