@@ -60,13 +60,14 @@ def main() -> int:
                 "output_dir": out,
             }
         else:
+            from .hadoop_fs import hadoop_path_exists
             from .streaming.elb_stream import stream_elb_pipeline
 
             stream_elb_pipeline(spark, logs, out, geo_cache_path=cache, fetch_fn=fetch_fn)
             cleaned = os.path.join(out, "cleaned_logs")
             rows = (
                 spark.read.parquet(cleaned).count()
-                if os.path.isdir(cleaned)
+                if hadoop_path_exists(spark, cleaned)
                 else 0
             )
             summary = {"mode": mode, "rows_total": rows, "output_dir": out}

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import bot_traffic, error_summary, hourly_geo_aggregates
-from ..operators.dedup import upsert_keep_latest
 from ..operators.enrich import new_keys
 from ..operators.features import (
     calendar_columns,
@@ -133,8 +132,7 @@ def enrich_and_featurize(
     the cache commit is deferred to ``finalize()``. The fetched IPs are
     disjoint from the snapshot (``new_keys`` anti-joins that same
     snapshot), so their union IS the keep-latest merge: the join side
-    needs no upsert shuffle, and the merge is only built when
-    ``finalize()`` commits.
+    needs no upsert shuffle.
 
     The fetched frame is persisted and first materialized INSIDE the
     caller's first sink job (the broadcast build of the geo side),
@@ -143,14 +141,15 @@ def enrich_and_featurize(
     a job either. ``finalize()`` commits the fetched DELTA through
     ``update_geo_cache`` (an O(delta) append, or the compaction
     rewrite of the merge) and skips the write when nothing was fetched
-    (idle-run contract: no unseen IPs, no write). It must be called
-    after the enriched frame has been materialized, and always
-    unpersists the fetch buffer. If the caller never materialized the
-    frame (an error-path finalize after a sink failure that died
-    before the broadcast build), the tally is 0 and the commit is
-    skipped: the error path must not START fetch work on an
-    already-unhealthy cluster. A crash between sink commit and cache
-    commit degrades to a refetch next run, never a corrupt cache.
+    (idle-run contract: no unseen IPs, no write). Callers run it
+    through :func:`write_then_commit`, after the enriched frame has
+    been materialized; it always unpersists the fetch buffer. If the
+    caller never materialized the frame (an error-path finalize after
+    a sink failure that died before the broadcast build), the tally is
+    0 and the commit is skipped: the error path must not START fetch
+    work on an already-unhealthy cluster. A crash between sink commit
+    and cache commit degrades to a refetch next run, never a corrupt
+    cache.
 
     SINGLE-WRITER ASSUMPTION: ``finalize()`` commits a delta computed
     against the cache snapshot loaded at call time. Another writer
@@ -172,14 +171,34 @@ def enrich_and_featurize(
     def finalize() -> None:
         try:
             if fetch_tally.value > 0:
-                merged = upsert_keep_latest(
-                    cache, fetched, ["client_ip"], "api_fetch_timestamp"
-                )
-                update_geo_cache(spark, fetched, geo_cache_path, merged)
+                update_geo_cache(spark, fetched, geo_cache_path)
         finally:
             fetched.unpersist()
 
     return enriched, finalize
+
+
+def write_then_commit(
+    write_sinks: Callable[[], None], finalize: Callable[[], None]
+) -> None:
+    """The one commit rule of a batch run and of a stream micro-batch:
+    run ``write_sinks()``, then ``finalize()`` the geo-cache commit in
+    line (reference elb_logs.py:413-419: the cache update is one step
+    of the run). A commit error fails the run; in a stream it fails
+    the micro-batch before its checkpoint entry is written, so the
+    rerun replays the batch and refetches only the IPs whose rows did
+    not land. When the sinks raise, ``finalize()`` still runs, since it
+    frees the fetch buffer, but its own error is swallowed so the SINK
+    error stays the raised one."""
+    try:
+        write_sinks()
+    except BaseException:
+        try:
+            finalize()
+        except Exception:
+            pass
+        raise
+    finalize()
 
 
 def _reports(enriched: DataFrame) -> dict[str, DataFrame]:
@@ -191,6 +210,28 @@ def _reports(enriched: DataFrame) -> dict[str, DataFrame]:
         "bot_detail": bot_detail,
         "bot_summary": bot_summary,
     }
+
+
+def _write_sinks(enriched: DataFrame, output_dir: str) -> None:
+    """The five sink writes in the reference's layout (Step 7)."""
+    reports = _reports(enriched)
+    write_cleaned_logs(enriched, os.path.join(output_dir, "cleaned_logs"))
+    write_parquet(
+        reports["hourly"],
+        os.path.join(output_dir, "aggregated_stats", "hourly_traffic_by_geo.parquet"),
+    )
+    write_csv(
+        reports["errors"],
+        os.path.join(output_dir, "reports", "error_summary_geo.csv"),
+    )
+    write_parquet(
+        reports["bot_detail"],
+        os.path.join(output_dir, "reports", "bot_traffic_details.parquet"),
+    )
+    write_csv(
+        reports["bot_summary"],
+        os.path.join(output_dir, "reports", "bot_traffic_by_origin_summary.csv"),
+    )
 
 
 def run_pipeline(
@@ -236,38 +277,9 @@ def run_pipeline(
         F.count_if(F.col("countryCode").isNull()).alias("n_geo_missing"),
     )
     try:
-        reports = _reports(observed)
-        write_cleaned_logs(observed, os.path.join(output_dir, "cleaned_logs"))
-        write_parquet(
-            reports["hourly"],
-            os.path.join(
-                output_dir, "aggregated_stats", "hourly_traffic_by_geo.parquet"
-            ),
-        )
-        write_csv(
-            reports["errors"],
-            os.path.join(output_dir, "reports", "error_summary_geo.csv"),
-        )
-        write_parquet(
-            reports["bot_detail"],
-            os.path.join(output_dir, "reports", "bot_traffic_details.parquet"),
-        )
-        write_csv(
-            reports["bot_summary"],
-            os.path.join(output_dir, "reports", "bot_traffic_by_origin_summary.csv"),
-        )
-    except BaseException:
-        # finalize() frees the fetch buffer on the error path too, but
-        # its own failure is swallowed so the SINK error stays the
-        # raised one (same contract as elb_stream)
-        try:
-            finalize()
-        except Exception:
-            pass
-        raise
+        write_then_commit(lambda: _write_sinks(observed, output_dir), finalize)
     finally:
         enriched.unpersist()
-    finalize()
     # The returned frames are re-planned over the COMMITTED cache: the
     # sink plan's geo side holds the fetch, so recomputing it (after
     # the caller unpersists, or on eviction) would call fetch_fn again

@@ -58,8 +58,7 @@ def _elb_fixture_enriched(spark: SparkSession) -> DataFrame:
         _GEO_CACHE_SHARED.clear()
         path = os.path.join(scratch_dir("elb_geo_cache_shared_"), "cache.parquet")
         delta = fetch_geolocations(new_keys(parsed, load_geo_cache(spark, path)))
-        # the cache starts empty, so the keep-latest merge is the delta
-        update_geo_cache(spark, delta, path, merged=delta)
+        update_geo_cache(spark, delta, path)
         _GEO_CACHE_SHARED[app] = path  # registered only once filled
     return make_feature_chain_template()(parsed, load_geo_cache(spark, path))
 

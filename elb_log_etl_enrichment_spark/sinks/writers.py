@@ -19,26 +19,17 @@ from ..hadoop_fs import (
 CLEANED_PARTITIONS = ["request_year", "request_month", "request_day", "countryCode"]
 
 
-def write_cleaned_logs(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-) -> None:
+def write_cleaned_logs(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Partitioned parquet sink (S5, elb_logs.py:343-349).
 
-    ``max_records_per_file`` caps file size (rolls a new file past the
-    cap). For the opposite problem — many tasks each dribbling a tiny
-    file into every partition directory (the 100 TB "small files"
-    killer) — repartition on the partition columns first so each
-    Hive partition is written by one task::
+    Against many tasks each dribbling a tiny file into every partition
+    directory (the 100 TB "small files" killer), repartition on the
+    partition columns first so each Hive partition is written by one
+    task::
 
         write_cleaned_logs(df.repartition(*CLEANED_PARTITIONS), path)
     """
-    w = df.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.partitionBy(*CLEANED_PARTITIONS).parquet(path)
+    df.write.mode(mode).partitionBy(*CLEANED_PARTITIONS).parquet(path)
 
 
 def write_parquet(

@@ -18,6 +18,7 @@ from pyspark.sql.types import (
 from pyspark.sql.utils import AnalysisException
 
 from ..hadoop_fs import fs_data_files, fs_publish, fs_recover, staging_path
+from ..operators.dedup import upsert_keep_latest
 
 #: reference elb_logs.py:157-160 + the client_ip index column.
 GEO_SCHEMA = StructType(
@@ -66,33 +67,30 @@ GEO_CACHE_COMPACT_FILES = 64
 GEO_CACHE_TARGET_FILE_BYTES = 512 * 1024 * 1024
 
 
-def update_geo_cache(
-    spark: SparkSession, delta: DataFrame, cache_path: str, merged: DataFrame
-) -> None:
+def update_geo_cache(spark: SparkSession, delta: DataFrame, cache_path: str) -> None:
     """Commit a fetched ``delta`` of NEW keys into the cache — the one
     commit entry point of every caller (reference
-    update_geolocation_cache, elb_logs.py:212-228, S8/J4). ``merged``
-    is the keep-latest merge of the cache snapshot and ``delta``
-    (``upsert_keep_latest``); it is only written when compaction fires.
+    update_geolocation_cache, elb_logs.py:212-228, S8/J4).
 
     The delta is DISJOINT from the cache by construction — ``new_keys``
-    anti-joins the run's IPs against the same snapshot ``merged`` was
-    built from, and the cache has a single writer — so
-    ``upsert_keep_latest(cache, delta)`` ≡ ``cache ∪ delta`` and
-    appending the delta (:func:`append_geo_cache_delta`) commits the
-    merge's content for O(delta) bytes: no cache scan, no upsert
-    shuffle, no swap.
+    anti-joins the run's IPs against the cache snapshot, and the cache
+    has a single writer — so ``upsert_keep_latest(cache, delta)`` ≡
+    ``cache ∪ delta`` and appending the delta
+    (:func:`append_geo_cache_delta`) commits the merge's content for
+    O(delta) bytes: no cache scan, no upsert shuffle, no swap.
 
     Compaction backstop: one small file per fetching run accumulates
     forever, so when the directory holds ``GEO_CACHE_COMPACT_FILES``
     data files MORE than the ideal count for its byte size (total bytes
-    / ``GEO_CACHE_TARGET_FILE_BYTES``, min 1) the commit rewrites
-    ``merged`` instead (:func:`commit_geo_cache`), repartitioned to
-    that ideal count — reader listing/open costs stay O(ideal +
-    threshold) files while the amortized write stays O(delta +
-    cache/threshold). Trigger and rewrite width derive from the same
-    listing, so a cache whose HEALTHY layout is wider than the
-    threshold keeps appending instead of rewriting itself every run.
+    / ``GEO_CACHE_TARGET_FILE_BYTES``, min 1) the commit instead builds
+    the keep-latest merge of the cache and ``delta`` and rewrites it
+    (:func:`commit_geo_cache`), repartitioned to that ideal count —
+    reader listing/open costs stay O(ideal + threshold) files while the
+    amortized write stays O(delta + cache/threshold). Only that branch
+    builds the merge, so an appending run pays no merge analysis.
+    Trigger and rewrite width derive from the same listing, so a cache
+    whose HEALTHY layout is wider than the threshold keeps appending
+    instead of rewriting itself every run.
 
     Callers skip the call when nothing was fetched (a run with no
     unseen IPs — the steady state of a mature deployment — writes
@@ -102,6 +100,10 @@ def update_geo_cache(
     n_files, n_bytes = fs_data_files(spark, cache_path)
     ideal = max(1, -(-n_bytes // GEO_CACHE_TARGET_FILE_BYTES))
     if n_files >= ideal + GEO_CACHE_COMPACT_FILES:
+        merged = upsert_keep_latest(
+            load_geo_cache(spark, cache_path), delta,
+            ["client_ip"], "api_fetch_timestamp",
+        )
         commit_geo_cache(spark, merged.repartition(ideal), cache_path)
     else:
         append_geo_cache_delta(spark, delta, cache_path)

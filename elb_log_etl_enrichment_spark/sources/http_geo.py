@@ -4,19 +4,16 @@ The reference loops serially over new IPs calling ip-api.com with a
 0.6 s sleep after each call (elb_logs.py:166-209, 413-419) — a
 ≤100 lookups/min ceiling, and every lookup's latency paid in turn.
 Here the fan-out is a ``mapInPandas`` table function: the distinct
-key set is ``repartition``-ed over ``parallelism`` partitions (see
-the in-function note for why coalesce is specifically wrong here),
-and each partition runs its IPs through :func:`lookup_partition`:
+key set is ``repartition``-ed into one partition (see the in-function
+note for why coalesce is specifically wrong here), which runs its IPs
+through :func:`lookup_partition`:
 
-* at most :data:`MAX_IN_FLIGHT` lookups in flight per partition, on
-  a thread pool, so a transport's latency overlaps instead of adding
-  up per IP;
+* at most :data:`MAX_IN_FLIGHT` lookups in flight, on a thread pool,
+  so a transport's latency overlaps instead of adding up per IP;
 * ``rate_limit_s`` is a START-TO-START spacing: a lookup starts no
-  sooner than ``rate_limit_s`` after the previous one of its
-  partition started, so each partition's request rate stays
-  ≤ 1/``rate_limit_s`` (the reference's sleep-after-call gave the
-  same ceiling) and the aggregate rate ≤ ``parallelism /
-  rate_limit_s``;
+  sooner than ``rate_limit_s`` after the previous one started, so the
+  request rate stays ≤ 1/``rate_limit_s`` (the reference's
+  sleep-after-call gave the same ceiling);
 * rows come back in input order.
 
 ``fetch_fn`` is therefore called from several threads at once and
@@ -140,8 +137,6 @@ def lookup_partition(
 def fetch_geolocations(
     new_ips: DataFrame,
     fetch_fn: Callable[[str], dict] = fake_fetch,
-    rate_limit_s: float | None = None,
-    parallelism: int = 1,
     row_count_acc=None,
 ) -> DataFrame:
     """Distributed, throttled lookup of geolocation rows for a frame of
@@ -150,21 +145,16 @@ def fetch_geolocations(
     session timezone is pinned to UTC, so a machine-local stamp would
     shift the cache's last-write-wins ordering across hosts/DST).
 
-    Each of the ``parallelism`` partitions looks its IPs up through
-    :func:`lookup_partition`: at most :data:`MAX_IN_FLIGHT` lookups in
-    flight, each started no sooner than ``rate_limit_s`` after the
-    partition's previous start. So ``fetch_fn`` must be thread-safe
-    (``fake_fetch`` and ``http_fetch`` are), and the aggregate request
-    rate is ≤ ``parallelism / rate_limit_s`` (free-tier etiquette:
-    keep it under the provider cap).
-
-    ``rate_limit_s`` defaults to the REFERENCE's 0.6 s spacing
-    (elb_logs.py:419) whenever the real ip-api transport is in use —
-    callers that forget to throttle must not hammer the free tier
-    into 429s, whose Error sentinel rows the cache would then persist
-    and never refetch (code-review r05 finding). Injected offline
-    transports default to unthrottled, so their latency overlaps up
-    to the in-flight bound.
+    The keys go through one :func:`lookup_partition` call: at most
+    :data:`MAX_IN_FLIGHT` lookups in flight, so ``fetch_fn`` must be
+    thread-safe (``fake_fetch`` and ``http_fetch`` are). With the real
+    ip-api transport each lookup starts no sooner than the REFERENCE's
+    0.6 s after the previous start (elb_logs.py:419), so the request
+    rate stays ≤ 1/0.6 s, 100 lookups/min, the reference's ceiling: an
+    unpaced burst would hammer the free tier into 429s, whose Error
+    sentinel rows the cache would then persist and never refetch
+    (code-review r05 finding). Injected offline transports are
+    unpaced, so their latency overlaps up to the in-flight bound.
 
     ``row_count_acc`` (optional SparkContext accumulator): incremented
     by the number of rows each task EMITS, so a caller that
@@ -175,8 +165,7 @@ def fetch_geolocations(
     are discarded by Spark, so a nonzero value always means some
     successful task emitted rows.
     """
-    if rate_limit_s is None:
-        rate_limit_s = 0.6 if fetch_fn is http_fetch else 0.0
+    rate_limit_s = 0.6 if fetch_fn is http_fetch else 0.0
 
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # the whole partition in one call, so the pacing and the
@@ -190,13 +179,11 @@ def fetch_geolocations(
                 rows, columns=["client_ip", *_FIELDS, "api_fetch_timestamp"]
             )
 
-    # repartition, not coalesce — even for the serial default (r8
-    # code-review): coalesce(1) is a NARROW dependency, so it would
-    # collapse the entire upstream reduce stage (the distinct final
-    # aggregate and the anti-join probe against a possibly
-    # multi-million-row cache) into one task, not just the fetch.
-    # The repartition shuffle it saves carries only the distinct new
-    # key set — trivial next to a serialized join.
-    return new_ips.repartition(max(parallelism, 1)).mapInPandas(
-        fetch_partition, schema=GEO_SCHEMA
-    )
+    # repartition, not coalesce (r8 code-review): coalesce(1) is a
+    # NARROW dependency, so it would collapse the entire upstream
+    # reduce stage (the distinct final aggregate and the anti-join
+    # probe against a possibly multi-million-row cache) into one task,
+    # not just the fetch. The repartition shuffle it saves carries
+    # only the distinct new key set — trivial next to a serialized
+    # join.
+    return new_ips.repartition(1).mapInPandas(fetch_partition, schema=GEO_SCHEMA)

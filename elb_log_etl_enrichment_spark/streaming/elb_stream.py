@@ -15,14 +15,13 @@ directory so a foreachBatch replay never duplicates sink rows.
 from __future__ import annotations
 
 import os
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..hadoop_fs import fs_delete, fs_has_part_files
-from ..plans.pipeline import enrich_and_featurize
+from ..plans.pipeline import enrich_and_featurize, write_then_commit
 from ..session import ensure_engine_confs
 from .stream import sized_shuffle_partitions
 from ..sinks.writers import CLEANED_PARTITIONS, write_cleaned_logs
@@ -51,12 +50,18 @@ def stream_elb_pipeline(
     (sink written, checkpoint not). Writing each batch by OVERWRITE
     into its deterministic ``ingest_batch=<batch_id>`` directory makes
     the replay idempotent — the second attempt clobbers the first's
-    partial output instead of appending next to it. Readers see
+    partial output instead of adding files next to it. Readers see
     ``ingest_batch`` as one more discovered partition column above the
     reference layout; partition pruning on the original keys still
-    applies. The geo-cache side effect is replay-safe: a replayed
-    batch anti-joins against the cache, so IPs whose rows already
-    landed are neither fetched nor appended again.
+    applies.
+
+    Each micro-batch commits its geo-cache delta in line, after its
+    sink write and before its checkpoint entry
+    (``plans.pipeline.write_then_commit``, the batch run's rule too).
+    A failed commit fails the batch, so the rerun replays it: the sink
+    overwrites its own ``ingest_batch`` directory, and the batch
+    anti-joins against the cache, so IPs whose rows already landed are
+    neither fetched nor written again and only the rest are refetched.
 
     ``max_files_per_trigger`` paces the file source (one availableNow
     run splits the backlog into per-file micro-batches, mtime order)
@@ -74,10 +79,11 @@ def stream_elb_pipeline(
     and 32-wide exchanges over a few thousand rows are pure
     stage-scheduling overhead (~20% of per-batch cost at fixture
     scale, measured r7). Same per-job sizing a 100 TB deployment
-    applies per stream, and the same single-threaded-session contract
-    as ``stream.run_available_now``: the conf is mutated for the
-    stream's lifetime and restored after ``awaitTermination``; no
-    other plan may compile on this session concurrently.
+    applies per stream, and the same session contract as
+    ``stream.run_available_now``: the conf is mutated for the stream's
+    lifetime (the cache commits included) and restored after
+    ``awaitTermination``; no other plan may compile on this session
+    concurrently.
     """
     ensure_engine_confs(spark)
     geo_cache_path = geo_cache_path or os.path.join(
@@ -95,57 +101,34 @@ def stream_elb_pipeline(
     parsed = parse_elb_lines(lines)
     sink_root = os.path.join(output_dir, "cleaned_logs")
 
-    # deferred geo-cache commits in flight: [(thread, err_holder)].
-    # finalize() runs ASYNC after a successful sink commit (r10,
-    # VERDICT r9 item 2): the ~0.5 s cache stage-and-swap overlaps the
-    # stream's own between-batch machinery (checkpoint WAL, next batch
-    # schedule) instead of extending the tick. Ordering is preserved —
-    # _drain_pending() joins before the NEXT batch loads the cache
-    # from disk, and before stream_elb_pipeline returns — so callers
-    # and successor batches always see the committed cache; the
-    # single-writer contract (pipeline.py) is unchanged. Crash
-    # contract: dying after the checkpoint advanced but before the
-    # async commit landed loses ONLY the cache rows (next run
-    # refetches those IPs — the cache is a cache); sink rows stay
-    # exactly-once via the idempotent ingest_batch overwrite. A commit
-    # error surfaces at the next join point and fails the stream — by
-    # then the batch's checkpoint may have advanced, which degrades to
-    # the same refetch, never corruption.
-    pending: list = []
-
-    def _drain_pending() -> None:
-        while pending:
-            t, err = pending.pop()
-            t.join()
-            if err:
-                raise err[0]
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        _drain_pending()  # prior cache commit must land before load
         # one pass feeds the geo-cache fetch AND the sink — unpersisted,
         # each of those re-parsed the batch's files
         batch = batch.persist()
         try:
             # the geo fetch materializes inside the sink job's
             # broadcast build instead of a standalone probe job, and
-            # the cache write runs after the sink commit
+            # the cache commit runs after the sink commit, before this
+            # batch's checkpoint entry
             enriched, finalize = enrich_and_featurize(
                 spark, batch, geo_cache_path, fetch_fn
             )
-            # r10 (VERDICT r9 item 2): the per-batch emptiness probe
-            # (`batch.take(1)`) was one extra Spark job per micro-batch
-            # just to decide whether to write. The row count now rides
-            # the sink job itself as an observed metric, so the common
-            # non-empty tick pays zero probe jobs. The rare all-empty-
-            # files batch (an idle tick schedules NO batch at all, so
-            # this is only a new file with zero parseable rows) writes
-            # a rows-less ingest_batch dir and immediately removes it —
-            # the "no empty ingest dirs" contract holds at rest; a
-            # crash inside that window leaves an empty dir that adds
-            # zero rows to any reader and is clobbered on replay.
-            obs = Observation()
             target = os.path.join(sink_root, f"ingest_batch={batch_id}")
-            try:
+
+            def write_sink() -> None:
+                # r10 (VERDICT r9 item 2): the per-batch emptiness probe
+                # (`batch.take(1)`) was one extra Spark job per
+                # micro-batch just to decide whether to write. The row
+                # count now rides the sink job itself as an observed
+                # metric, so the common non-empty tick pays zero probe
+                # jobs. The rare all-empty-files batch (an idle tick
+                # schedules NO batch at all, so this is only a new file
+                # with zero parseable rows) writes a rows-less
+                # ingest_batch dir and immediately removes it — the "no
+                # empty ingest dirs" contract holds at rest; a crash
+                # inside that window leaves an empty dir that adds zero
+                # rows to any reader and is clobbered on replay.
+                obs = Observation()
                 # repartition on the Hive partition columns so each
                 # leaf directory is written by exactly ONE task (r10):
                 # unrepartitioned, every shuffle task dribbles a file
@@ -154,10 +137,7 @@ def stream_elb_pipeline(
                 # small-file debt compounds every tick forever. The
                 # extra tick-sized shuffle is inside measurement noise
                 # locally (3 A/B pairs); a pathologically hot leaf
-                # serializing one task is bounded by the tick size
-                # here — batch callers with hot leaves should pass
-                # max_records_per_file / salt instead (see
-                # write_cleaned_logs's docstring).
+                # serializing one task is bounded by the tick size.
                 write_cleaned_logs(
                     enriched.observe(obs, F.count(F.lit(1)).alias("n"))
                     .repartition(*CLEANED_PARTITIONS),
@@ -185,36 +165,8 @@ def stream_elb_pipeline(
                     batch_rows = int(fs_has_part_files(spark, target))
                 if batch_rows == 0:
                     fs_delete(spark, target)
-            except BaseException:
-                # finalize() when the sink write or the empty-batch
-                # cleanup throws (r8 code-review: the success-only call
-                # leaked one persisted fetch frame per failed batch) —
-                # but SWALLOW its own failure so the batch's error
-                # stays the raised one (r8 second review: a bare
-                # finally let an also-failing cache swap on the same
-                # unhealthy cluster replace the root cause). finalize's
-                # internal try/finally frees the persisted frame even
-                # when the cache write dies.
-                try:
-                    finalize()
-                except Exception:
-                    pass
-                raise
-            else:
-                err: list = []
 
-                def _run_finalize() -> None:
-                    try:
-                        finalize()
-                    except BaseException as e:  # surfaced at next join
-                        err.append(e)
-
-                t = threading.Thread(
-                    target=_run_finalize,
-                    name=f"geo-cache-finalize-{batch_id}",
-                )
-                t.start()
-                pending.append((t, err))
+            write_then_commit(write_sink, finalize)
         finally:
             batch.unpersist()
 
@@ -224,15 +176,4 @@ def stream_elb_pipeline(
         .trigger(availableNow=True)
     )
     with sized_shuffle_partitions(spark, batch_shuffle_partitions):
-        # drain INSIDE the sized-conf scope: a still-running async
-        # commit must execute under the stream's shuffle sizing, not
-        # the restored session width
-        try:
-            writer.start().awaitTermination()
-        except BaseException:
-            try:
-                _drain_pending()
-            except Exception:
-                pass  # the stream error stays the root cause
-            raise
-        _drain_pending()
+        writer.start().awaitTermination()

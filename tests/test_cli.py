@@ -9,12 +9,17 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_cli_stream_mode_end_to_end(tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_cli_stream_mode_end_to_end(tmp_path, scheme):
+    """The row count reads the sink through the Hadoop FS API, so a
+    ``file://`` output URI counts its rows like a plain path."""
     logs = tmp_path / "logs"
     logs.mkdir()
     with gzip.open(logs / "a.log.gz", "wt") as f:
@@ -22,7 +27,7 @@ def test_cli_stream_mode_end_to_end(tmp_path):
     env = dict(
         os.environ,
         ELB_LOGS_PATH=str(logs / "*.gz"),
-        ELB_OUTPUT_DIR=str(tmp_path / "out"),
+        ELB_OUTPUT_DIR=scheme + str(tmp_path / "out"),
         SPARK_GRAFT_CPUS="4",
     )
     proc = subprocess.run(

@@ -250,13 +250,14 @@ def _assert_stream_matches_batch(spark, tmp_path, out, files):
     assert _leftovers(cache) == []
 
 
-def test_stream_kill_in_async_compaction_replays_exactly_once(
+def test_stream_kill_in_compaction_replays_exactly_once(
     spark, tmp_path, monkeypatch, local_fs
 ):
-    """Kill the async ``finalize()`` of a compacting stream tick
-    between its two renames, then rerun on the same checkpoint. The
-    IPs only the first file holds prove the old cache was recovered,
-    not lost."""
+    """Kill the cache commit of a compacting stream tick between its
+    two renames, then rerun on the same checkpoint. The kill fails the
+    micro-batch, so it surfaces as the stream's error. The IPs only
+    the first file holds prove the old cache was recovered, not
+    lost."""
     monkeypatch.setattr(geo_cache, "GEO_CACHE_COMPACT_FILES", 0)  # tick 2 compacts
     logs = tmp_path / "logs"
     logs.mkdir()
@@ -271,7 +272,7 @@ def test_stream_kill_in_async_compaction_replays_exactly_once(
     stream_elb_pipeline(spark, str(logs / "*.gz"), out)  # appends the cache
     _write_gz(str(logs / "f1.log.gz"), files[1], now - 60)
     disarm = _arm(monkeypatch, "between_renames")
-    with pytest.raises(Killed):
+    with pytest.raises(Exception, match="between_renames"):
         stream_elb_pipeline(spark, str(logs / "*.gz"), out)
     disarm()
     assert not os.path.exists(cache) and os.path.exists(cache + "._old")
@@ -317,6 +318,33 @@ def test_stream_kill_after_sink_write_replays_exactly_once(
     assert [os.path.basename(d) for d in glob.glob(os.path.join(sink, "ingest_batch=*"))] == [
         "ingest_batch=0"
     ]
+    _assert_stream_matches_batch(spark, tmp_path, out, files)
+
+
+def test_stream_cache_commit_failure_replays_the_batch(spark, tmp_path, monkeypatch):
+    """A cache append that fails after the sink write fails the tick
+    before its checkpoint entry, so a rerun with no new file replays
+    the batch: the cache ends with every fixture IP and the sink with
+    every row exactly once."""
+    real = geo_cache.append_geo_cache_delta
+
+    def fails_once(*args):
+        monkeypatch.setattr(geo_cache, "append_geo_cache_delta", real)
+        raise Killed("cache_append")
+
+    monkeypatch.setattr(geo_cache, "append_geo_cache_delta", fails_once)
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    out = str(tmp_path / "out")
+    files = [fixture_lines()]
+    _write_gz(str(logs / "f0.log.gz"), files[0])
+    with pytest.raises(Exception, match="cache_append"):
+        stream_elb_pipeline(spark, str(logs / "*.gz"), out)
+
+    stream_elb_pipeline(spark, str(logs / "*.gz"), out)
+    cache = os.path.join(out, "ip_geolocation_cache.parquet")
+    assert len({r.client_ip for r in load_geo_cache(spark, cache).collect()}) == 4
+    assert spark.read.parquet(os.path.join(out, "cleaned_logs")).count() == 22
     _assert_stream_matches_batch(spark, tmp_path, out, files)
 
 

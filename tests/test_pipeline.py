@@ -186,7 +186,6 @@ def test_geo_cache_empty_update_skips_rewrite(spark, tmp_path):
     write, no staging dir (a run with no unseen IPs must not write to
     a web-scale cache) — while a non-empty delta still lands through
     update_geo_cache."""
-    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
     from elb_log_etl_enrichment_spark.plans.pipeline import enrich_and_featurize
     from elb_log_etl_enrichment_spark.sources.elb_logs import parse_elb_lines
     from elb_log_etl_enrichment_spark.sources.geo_cache import update_geo_cache
@@ -207,10 +206,8 @@ def test_geo_cache_empty_update_skips_rewrite(spark, tmp_path):
     assert not os.path.exists(cache_path + "._staging")
 
     # a non-empty delta still merges
-    old = load_geo_cache(spark, cache_path)
     newer = _geo_rows(spark, ["5.6.7.8"], "2026-01-01 00:00:00")
-    merged = upsert_keep_latest(old, newer, ["client_ip"], "api_fetch_timestamp")
-    update_geo_cache(spark, newer, cache_path, merged)
+    update_geo_cache(spark, newer, cache_path)
     got = {r.client_ip for r in load_geo_cache(spark, cache_path).collect()}
     assert got == {"10.0.9.9", "10.1.1.1", "10.2.2.2", "10.3.3.3", "5.6.7.8"}
 
@@ -232,7 +229,7 @@ def test_append_delta_commits_merge_identical_content(spark, tmp_path):
     old = load_geo_cache(spark, cache_path)
     delta = _geo_rows(spark, ["3.3.3.3"], "2026-01-01 00:02:00")
     merged = upsert_keep_latest(old, delta, ["client_ip"], "api_fetch_timestamp")
-    update_geo_cache(spark, delta, cache_path, merged)
+    update_geo_cache(spark, delta, cache_path)
 
     got = load_geo_cache(spark, cache_path)
     assert got.count() == 3
@@ -251,19 +248,13 @@ def test_append_delta_compacts_past_ideal_plus_threshold(spark, tmp_path, monkey
     every run). At fixture scale ideal == 1, so with a threshold of 1
     a 2-file directory compacts back to ONE file whose content is the
     merge."""
-    from elb_log_etl_enrichment_spark.operators.dedup import upsert_keep_latest
     from elb_log_etl_enrichment_spark.sources import geo_cache
 
     monkeypatch.setattr(geo_cache, "GEO_CACHE_COMPACT_FILES", 1)
     cache_path = str(tmp_path / "cache.parquet")
 
     def step(ip: str, ts: str) -> None:
-        old = load_geo_cache(spark, cache_path)
-        delta = _geo_rows(spark, [ip], ts)
-        merged = upsert_keep_latest(
-            old, delta, ["client_ip"], "api_fetch_timestamp"
-        )
-        geo_cache.update_geo_cache(spark, delta, cache_path, merged)
+        geo_cache.update_geo_cache(spark, _geo_rows(spark, [ip], ts), cache_path)
 
     # build through the append path so the file count is deterministic
     # (coalesce(1): exactly one file per step; a commit_geo_cache base

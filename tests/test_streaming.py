@@ -536,7 +536,7 @@ def test_empty_batch_cleanup_failure_releases_fetch_frame(
     spark, tmp_path, monkeypatch
 ):
     """The empty-batch cleanup runs after the sink write and before the
-    async finalize(); when it raises, finalize() must still run, so the
+    cache commit; when it raises, finalize() must still run, so the
     batch's persisted geo-fetch frame is released and the persistent-
     RDD count returns to its pre-tick value."""
     from elb_log_etl_enrichment_spark.streaming import elb_stream
