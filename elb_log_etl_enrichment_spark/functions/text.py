@@ -37,6 +37,13 @@ def tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(TOKEN_RE), 0)
 
 
+def prefix_digest(text: Column) -> Column:
+    """md5 of the first 8 tokens: the C4-style leading-boilerplate key
+    of the ingest-dedup digest index (the oracle SQL spells out the
+    same formula)."""
+    return F.md5(F.concat_ws(" ", F.slice(tokens(text), 1, 8)))
+
+
 def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("long")
 

@@ -1,7 +1,8 @@
 """Scheme-aware filesystem primitives and the ONE directory-replace
-protocol shared by every state store (geo cache, ingest index,
-write-audit-publish sink). Every call goes through the JVM Hadoop
-FileSystem API, so the same code serves ``file://``, ``viewfs://``,
+protocol shared by every state store: ``sources.keyed_store`` (the
+geo cache and both ingest indexes) and the write-audit-publish sink.
+Every call goes through the JVM Hadoop FileSystem API, so the same
+code serves ``file://``, ``viewfs://``,
 ``s3a://`` and ``hdfs://`` URIs; a local-only ``os``/``shutil`` twin
 silently mis-handles every remote scheme.
 

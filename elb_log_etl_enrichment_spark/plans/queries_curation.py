@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_RE
+from ..functions.text import TOKEN_RE, prefix_digest
 from ..operators.text_dedup import shingles
 from .queries import _t, register
 
@@ -702,12 +702,8 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index, exactly the geo-cache upsert pattern
     (sources/geo_cache.py) applied to content digests."""
     d = _t(spark, sf_dir, "documents")
-    prefix = F.concat_ws(
-        " ",
-        F.slice(F.regexp_extract_all("text", F.lit(TOKEN_RE), F.lit(0)), 1, 8),
-    )
     tagged = d.select(
-        "doc_id", "source", F.md5(prefix).alias("digest"),
+        "doc_id", "source", prefix_digest(F.col("text")).alias("digest"),
         (F.col("doc_id") % 5 == 0).alias("is_batch"),
     )
     batch = tagged.filter(F.col("is_batch")).drop("is_batch").persist()

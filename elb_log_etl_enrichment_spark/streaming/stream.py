@@ -37,9 +37,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..hadoop_fs import fs_publish, fs_recover, hadoop_path_exists, staging_path
 from ..memo import scratch_dir
 from ..session import ensure_engine_confs
+from ..sources import keyed_store
 
 
 @contextmanager
@@ -560,13 +560,12 @@ def ingest_dedup_stream(
     spark: SparkSession,
     index_path: str,
     checkpoint_dir: str,
-    prefix_tokens: int = 8,
     batch_shuffle_partitions: int | None = None,
 ) -> None:
     """Streaming continuous-ingestion dedup: per micro-batch, classify
     incoming documents against the PERSISTED digest index (the
     streaming twin of ``plans.queries_curation.incremental_ingest_dedup``,
-    same C4-style 8-token prefix digest), append only the newly
+    same ``functions.text.prefix_digest``), append only the newly
     ingested survivors' digests back to the index, and land per-batch
     stats next to it.
 
@@ -587,9 +586,7 @@ def ingest_dedup_stream(
     — same knob, same single-threaded-session contract)."""
     writer = (
         docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _digest_ingest_upsert(
-                batch, batch_id, index_path, prefix_tokens
-            )
+            lambda batch, batch_id: _digest_ingest_upsert(batch, batch_id, index_path)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -598,58 +595,23 @@ def ingest_dedup_stream(
         writer.start().awaitTermination()
 
 
-def compact_ingest_index(
-    spark: SparkSession, index_path: str, target_files: int = 8
-) -> int:
-    """Rewrite an append-grown ingest index (digest or band index —
-    one small parquet file lands per micro-batch, the classic
-    small-files accretion) into ``target_files`` files, preserving
-    every row INCLUDING ``batch_id`` (replay safety survives
-    compaction: history probes filter on batch_id values, which the
-    rewrite never touches). Returns the compacted row count.
-
-    Staged and installed by ``hadoop_fs.fs_publish`` (rename-aside,
-    any scheme) like the geo-cache compaction (the sink would otherwise
-    truncate its own input); run it BETWEEN ticks — the cron cadence's
-    idle window — never while a foreachBatch commit is in flight. This
-    function and :func:`_index_history` recover before they read, so a
-    crash never turns into an empty history; on object stores an
-    outside reader can still see the two-rename not-found window."""
-    fs_recover(spark, index_path)
-    if not hadoop_path_exists(spark, index_path):
-        return 0
-    idx = spark.read.parquet(index_path)
-    staging = staging_path(index_path)
-    idx.repartition(target_files).write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    fs_publish(spark, index_path)
-    return n
+#: the two ingest index layouts, each row tagged with its writing batch
+DIGEST_INDEX_SCHEMA = "digest STRING, batch_id BIGINT"
+BAND_INDEX_SCHEMA = "band INT, band_key STRING, batch_id BIGINT"
 
 
 def _index_history(
-    spark: SparkSession, index_path: str, batch_id: int, empty: DataFrame
+    spark: SparkSession, index_path: str, batch_id: int, schema: str
 ) -> DataFrame:
     """The persisted ingest index as REPLAY-SAFE history: rows written
     by earlier batches only (``batch_id < current``). A missing index
-    (the very first batch) returns the typed ``empty`` template; any
-    OTHER read failure raises — in particular an index that lacks the
-    ``batch_id`` column (written by a pre-replay-safety build, or not
-    an ingest index at all) must fail LOUDLY, because silently treating
-    it as empty history would reclassify every historical duplicate as
-    newly ingested and re-append its keys (code-review r05 finding:
-    the old blanket ``except Exception`` did exactly that).
-
-    Existence is probed through the Hadoop FileSystem API, not
-    ``os.path.exists`` (code-review r05): a local-only probe returns
-    False for EVERY ``s3a://``/``hdfs://`` index, silently replaying
-    the exact failure mode above on remote stores. ``getFileSystem``
-    raises loudly for an unresolvable scheme, which is what we want.
-    An interrupted compaction is recovered first
-    (``hadoop_fs.fs_recover``) for the same reason."""
-    fs_recover(spark, index_path)
-    if not hadoop_path_exists(spark, index_path):
-        return empty
-    idx = spark.read.parquet(index_path)
+    reads as an empty ``schema`` frame. An index that lacks the
+    ``batch_id`` column (a pre-replay-safety build, or not an ingest
+    index) fails LOUDLY: read as empty history it would reclassify
+    every historical duplicate as newly ingested and re-append its
+    keys. So the read infers its schema: an imposed one would read the
+    missing column as NULLs."""
+    idx = keyed_store.read_or_empty(spark, index_path, schema, infer_schema=True)
     if "batch_id" not in idx.columns:
         raise ValueError(
             f"ingest index at {index_path} has no batch_id column "
@@ -659,12 +621,27 @@ def _index_history(
     return idx.filter(F.col("batch_id") < batch_id)
 
 
-def _digest_ingest_upsert(
-    batch: DataFrame,
-    batch_id: int,
-    index_path: str,
-    prefix_tokens: int = 8,
+def _commit_ingest_batch(
+    stats: DataFrame, fresh: DataFrame, batch_id: int, index_path: str, schema: str
 ) -> None:
+    """Land batch ``batch_id``'s stats next to the index (never inside
+    it, whatever the trailing slash), then commit its ``fresh`` rows
+    through ``keyed_store.commit``. Its compaction keeps every row,
+    ``batch_id`` included, so the history filter holds after a rewrite.
+    Stats first: a compacting commit deletes the files this batch's
+    history probe read. A replay stays safe: the stats overwrite their
+    own ``batch=<id>`` directory."""
+    spark = fresh.sparkSession
+    stats.write.mode("overwrite").parquet(
+        f"{index_path.rstrip('/')}_stats/batch={batch_id}"
+    )
+    keyed_store.commit(
+        spark, fresh, index_path,
+        lambda: keyed_store.read_or_empty(spark, index_path, schema).unionByName(fresh),
+    )
+
+
+def _digest_ingest_upsert(batch: DataFrame, batch_id: int, index_path: str) -> None:
     """One replay-safe micro-batch step of ``ingest_dedup_stream``.
 
     Idempotence under foreachBatch replay (driver dies after the
@@ -674,25 +651,14 @@ def _digest_ingest_upsert(
     computes the SAME classification; re-appended index rows are
     exact duplicates the distinct/semi-join probes ignore; and the
     stats row overwrites its own ``batch=<id>`` directory rather than
-    appending a sibling."""
+    appending a sibling (:func:`_commit_ingest_batch`)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from ..functions.text import TOKEN_RE
+    from ..functions.text import prefix_digest
 
     b_spark = batch.sparkSession
-    prefix = F.concat_ws(
-        " ",
-        F.slice(
-            F.regexp_extract_all("text", F.lit(TOKEN_RE), F.lit(0)),
-            1,
-            prefix_tokens,
-        ),
-    )
-    digests = batch.select("doc_id", F.md5(prefix).alias("digest")).persist()
-    hist = _index_history(
-        b_spark, index_path, batch_id, digests.select("digest").limit(0)
-    ).select("digest")
+    digests = batch.select("doc_id", prefix_digest(F.col("text")).alias("digest")).persist()
+    hist = _index_history(b_spark, index_path, batch_id, DIGEST_INDEX_SCHEMA).select("digest")
     matched = (
         hist.join(
             F.broadcast(digests.select("digest").distinct()),
@@ -721,16 +687,17 @@ def _digest_ingest_upsert(
             ~F.col("in_hist") & (F.col("doc_id") == F.col("survivor"))
         ).cast("long").alias("n_ingested"),
     ).select(F.lit(batch_id).cast("long").alias("batch_id"), "*")
+    # repartition(1), not the store's bare coalesce(1): this distinct
+    # rides the window's own partitioning, so a narrow coalesce would
+    # run the whole window stage as one task
     fresh = (
         cls.filter(~F.col("in_hist") & (F.col("doc_id") == F.col("survivor")))
         .select("digest")
         .distinct()
         .withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .repartition(1)
     )
-    fresh.write.mode("append").parquet(index_path)
-    stats.write.mode("overwrite").parquet(
-        os.path.join(index_path + "_stats", f"batch={batch_id}")
-    )
+    _commit_ingest_batch(stats, fresh, batch_id, index_path, DIGEST_INDEX_SCHEMA)
     digests.unpersist()
 
 
@@ -799,7 +766,6 @@ def _neardup_ingest_upsert(
     (module-level so a replay — same batch, same ``batch_id``, run
     twice — is directly testable, like ``_digest_ingest_upsert``)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..operators.text_dedup import minhash_band_keys, shingles
 
@@ -816,7 +782,7 @@ def _neardup_ingest_upsert(
     sh = shingles(spread).persist()
     bands = minhash_band_keys(spread, sh=sh).persist()
     hist = _index_history(
-        b_spark, index_path, batch_id, bands.select("band", "band_key").limit(0)
+        b_spark, index_path, batch_id, BAND_INDEX_SCHEMA
     ).select("band", "band_key")
     matched_keys = (
         hist.join(
@@ -870,10 +836,7 @@ def _neardup_ingest_upsert(
         .distinct()
         .withColumn("batch_id", F.lit(batch_id).cast("long"))
     )
-    fresh.write.mode("append").parquet(index_path)
-    stats.write.mode("overwrite").parquet(
-        os.path.join(index_path + "_stats", f"batch={batch_id}")
-    )
+    _commit_ingest_batch(stats, fresh, batch_id, index_path, BAND_INDEX_SCHEMA)
     cls.unpersist()
     bands.unpersist()
     sh.unpersist()

@@ -1,7 +1,8 @@
 """The one directory-replace protocol (``hadoop_fs.fs_publish`` /
 ``fs_recover``) under injected crashes, on ``file:`` and on a
 ``viewfs://`` mount, for the three state stores that use it: the geo
-cache, the ingest index and the write-audit-publish (WAP) sink.
+cache and the ingest index (both ``sources/keyed_store.py``) and the
+write-audit-publish (WAP) sink.
 
 A kill point is a named call of ``hadoop_fs._rename`` — the protocol's
 one rename seam — at which the patched seam raises:
@@ -40,7 +41,7 @@ from elb_log_etl_enrichment_spark.sinks.writers import (
     AuditFailure,
     write_audit_publish,
 )
-from elb_log_etl_enrichment_spark.sources import geo_cache
+from elb_log_etl_enrichment_spark.sources import geo_cache, keyed_store
 from elb_log_etl_enrichment_spark.sources.alb_fixtures import fixture_lines
 from elb_log_etl_enrichment_spark.sources.geo_cache import (
     append_geo_cache_delta,
@@ -50,8 +51,9 @@ from elb_log_etl_enrichment_spark.sources.geo_cache import (
 from elb_log_etl_enrichment_spark.sources.http_geo import fake_fetch
 from elb_log_etl_enrichment_spark.streaming.elb_stream import stream_elb_pipeline
 from elb_log_etl_enrichment_spark.streaming.stream import (
+    _digest_ingest_upsert,
     _index_history,
-    compact_ingest_index,
+    _neardup_ingest_upsert,
 )
 from tests.test_pipeline import _geo_rows
 
@@ -131,13 +133,25 @@ def _ingest_setup(spark, path):
     ).repartition(4).write.parquet(path)
 
 
+INGEST_SCHEMA = "id BIGINT, batch_id BIGINT"
+
+
 def _ingest_replace(spark, path):
-    compact_ingest_index(spark, path, target_files=1)
+    """An index commit of an empty batch that compacts (threshold 0):
+    the store rewrites every row, batch_id included, into one file."""
+    delta = spark.createDataFrame([], INGEST_SCHEMA)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(keyed_store, "COMPACT_FILES", 0)
+        keyed_store.commit(
+            spark, delta, path,
+            lambda: keyed_store.read_or_empty(spark, path, INGEST_SCHEMA).unionByName(delta),
+        )
 
 
 def _ingest_read(spark, path):
-    empty = spark.range(0).select(F.col("id"), F.col("id").alias("batch_id"))
-    rows = sorted(tuple(r) for r in _index_history(spark, path, 99, empty).collect())
+    rows = sorted(
+        tuple(r) for r in _index_history(spark, path, 99, INGEST_SCHEMA).collect()
+    )
     return rows, _n_data_files(path)
 
 
@@ -258,7 +272,7 @@ def test_stream_kill_in_compaction_replays_exactly_once(
     micro-batch, so it surfaces as the stream's error. The IPs only
     the first file holds prove the old cache was recovered, not
     lost."""
-    monkeypatch.setattr(geo_cache, "GEO_CACHE_COMPACT_FILES", 0)  # tick 2 compacts
+    monkeypatch.setattr(keyed_store, "COMPACT_FILES", 0)  # tick 2 compacts
     logs = tmp_path / "logs"
     logs.mkdir()
     out = str(tmp_path / "out")
@@ -389,94 +403,112 @@ def test_rename_failure_is_loud(spark, tmp_path, monkeypatch):
     assert staging.exists()
 
 
-def test_compact_ingest_index_swaps_via_fs_api(spark, tmp_path):
-    """Happy path end-to-end through the Hadoop FS API: compaction
-    preserves rows + batch_id and leaves no staging or ``._old``
-    remnant."""
+def test_index_compaction_swaps_via_fs_api(spark, tmp_path):
+    """Happy path end-to-end through the Hadoop FS API: a compacting
+    index commit preserves rows + batch_id and leaves no staging or
+    ``._old`` remnant."""
     idx = str(tmp_path / "index.parquet")
-    spark.range(10).select(
-        F.col("id"), F.lit(0).alias("batch_id")
-    ).repartition(4).write.parquet(idx)
-    n = compact_ingest_index(spark, idx, target_files=1)
-    assert n == 10
+    _ingest_setup(spark, idx)
+    _ingest_replace(spark, idx)
     assert _leftovers(idx) == []
-    assert spark.read.parquet(idx).count() == 10
+    assert _ingest_read(spark, idx) == (INGEST_ROWS, 1)
     assert "batch_id" in spark.read.parquet(idx).columns
 
 
-def test_compact_ingest_index_preserves_classification(spark, tmp_path):
-    """Compacting the append-grown ingest index between ticks must not
-    change a later batch's history classification: same stats row with
-    and without compaction, fewer data files after."""
-    import os
-
-    from pyspark.sql import Row
-
-    from elb_log_etl_enrichment_spark.streaming.stream import (
-        _digest_ingest_upsert,
-        compact_ingest_index,
+def _index_stats(spark, index):
+    return sorted(
+        (r.batch_id, r.n_batch, r.n_dup_of_history, r.n_ingested)
+        for r in spark.read.parquet(index + "_stats").collect()
     )
 
-    def _stats(index):
-        return sorted(
-            (r.batch_id, r.n_batch, r.n_dup_of_history, r.n_ingested)
-            for r in spark.read.parquet(index + "_stats").collect()
-        )
 
-    docs0 = spark.createDataFrame(
-        [Row(doc_id=1, text="alpha beta gamma"), Row(doc_id=2, text="delta eps")]
-    )
-    docs1 = spark.createDataFrame(
-        [Row(doc_id=3, text="alpha beta gamma"), Row(doc_id=4, text="zeta")]
-    )
-    results = {}
-    for tag, compact in [("plain", False), ("compacted", True)]:
-        index = str(tmp_path / f"idx_{tag}.parquet")
-        _digest_ingest_upsert(docs0, 0, index)
-        if compact:
-            n = compact_ingest_index(spark, index, target_files=1)
-            assert n == spark.read.parquet(index).count()
-            files = [
-                f for f in os.listdir(index)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
-            assert len(files) == 1
-        _digest_ingest_upsert(docs1, 1, index)
-        results[tag] = _stats(index)
-    assert results["plain"] == results["compacted"]
-    # doc 3 is a history dup of doc 1 in batch 1 either way
-    assert results["plain"][1][2] == 1
-
-
-def test_compact_ingest_index_band_layout(spark, tmp_path):
-    """Same invariance for the MinHash BAND index (the other persisted
-    ingest layout): compaction between ticks leaves near-dup history
-    classification unchanged."""
-    from pyspark.sql import Row
-
-    from elb_log_etl_enrichment_spark.streaming.stream import (
-        _neardup_ingest_upsert,
-        compact_ingest_index,
-    )
-
-    text_a = "the quick brown fox jumps over the lazy dog again and again"
-    docs0 = spark.createDataFrame([Row(doc_id=1, text=text_a)])
-    docs1 = spark.createDataFrame(
-        [Row(doc_id=2, text=text_a), Row(doc_id=3, text="totally different words here nothing shared at all today")]
-    )
+def _classify_with_and_without_compaction(spark, tmp_path, monkeypatch, upsert, batches):
+    """Run ``batches`` through ``upsert`` twice: appending only, and
+    with the threshold at 0, so every batch after the first compacts
+    the index and every batch after the second classifies against a
+    compacted one. A replay of the last batch follows each run.
+    Returns the stats rows of both runs."""
     stats = {}
-    for tag, compact in [("plain", False), ("compacted", True)]:
-        index = str(tmp_path / f"band_{tag}.parquet")
-        _neardup_ingest_upsert(docs0, 0, index)
-        if compact:
-            compact_ingest_index(spark, index, target_files=1)
-        _neardup_ingest_upsert(docs1, 1, index)
-        stats[tag] = sorted(
-            (r.batch_id, r.n_batch, r.n_dup_of_history, r.n_ingested)
-            for r in spark.read.parquet(index + "_stats").collect()
-        )
+    for tag, threshold in [("plain", keyed_store.COMPACT_FILES), ("compacted", 0)]:
+        monkeypatch.setattr(keyed_store, "COMPACT_FILES", threshold)
+        index = str(tmp_path / f"idx_{tag}.parquet")
+        for b, docs in enumerate(batches):
+            upsert(docs, b, index)
+        stats[tag] = _index_stats(spark, index)
+        upsert(batches[-1], len(batches) - 1, index)  # replay after the commit
+        assert _index_stats(spark, index) == stats[tag], tag
+        if threshold == 0:
+            assert _n_data_files(index) == 1
+    return stats
+
+
+def test_index_compaction_preserves_classification(spark, tmp_path, monkeypatch):
+    """Compacting the digest index inside a batch's commit must not
+    change any batch's history classification, the replay of a batch
+    whose commit compacted included: same stats rows with and without
+    compaction."""
+    docs = [
+        [Row(doc_id=1, text="alpha beta gamma"), Row(doc_id=2, text="delta eps")],
+        [Row(doc_id=3, text="alpha beta gamma"), Row(doc_id=4, text="zeta")],
+        [Row(doc_id=5, text="zeta"), Row(doc_id=6, text="delta eps"), Row(doc_id=7, text="eta")],
+    ]
+    stats = _classify_with_and_without_compaction(
+        spark, tmp_path, monkeypatch, _digest_ingest_upsert,
+        [spark.createDataFrame(rows) for rows in docs],
+    )
     assert stats["plain"] == stats["compacted"]
-    assert stats["plain"][1][2] == 1  # doc 2 is a near-dup of history
+    # doc 3 is a history dup of doc 1; docs 5 and 6 of docs 4 and 2
+    assert [r[2] for r in stats["plain"]] == [0, 1, 2]
+
+
+def test_index_compaction_band_layout(spark, tmp_path, monkeypatch):
+    """Same invariance for the MinHash BAND index (the other persisted
+    ingest layout)."""
+    text_a = "the quick brown fox jumps over the lazy dog again and again"
+    text_b = "totally different words here nothing shared at all today"
+    docs = [
+        [Row(doc_id=1, text=text_a)],
+        [Row(doc_id=2, text=text_a), Row(doc_id=3, text=text_b)],
+        [Row(doc_id=4, text=text_b), Row(doc_id=5, text="one more unrelated line of words here")],
+    ]
+    stats = _classify_with_and_without_compaction(
+        spark, tmp_path, monkeypatch, _neardup_ingest_upsert,
+        [spark.createDataFrame(rows) for rows in docs],
+    )
+    assert stats["plain"] == stats["compacted"]
+    # doc 2 is a near-dup of doc 1's history, doc 4 of doc 3's
+    assert [r[2] for r in stats["plain"]] == [0, 1, 1]
+
+
+def test_only_the_stores_publish():
+    """``fs_publish`` and ``staging_path`` are the replace protocol's
+    two entry points; only the keyed store and the write-audit-publish
+    sink may use them, so a third copy of a store's commit rules cannot
+    grow back."""
+    import ast
+
+    pkg = os.path.dirname(hadoop_fs.__file__)
+    allowed = {
+        os.path.join(pkg, p)
+        for p in ("hadoop_fs.py", "sources/keyed_store.py", "sinks/writers.py")
+    }
+    names = {"fs_publish", "staging_path"}
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path in allowed:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            offenders += [
+                f"{path}:{n.lineno}"
+                for n in ast.walk(tree)
+                if (isinstance(n, ast.Name) and n.id in names)
+                or (isinstance(n, ast.Attribute) and n.attr in names)
+                or (isinstance(n, ast.alias) and n.name in names)
+            ]
+    assert offenders == []
 
 
 # --- a non-file: scheme ----------------------------------------------------
@@ -515,7 +547,7 @@ def test_viewfs_ingest_compaction(spark, viewfs):
     root, local = viewfs
     idx = root + "/index.parquet"
     _ingest_setup(spark, idx)
-    assert compact_ingest_index(spark, idx, target_files=1) == 10
+    _ingest_replace(spark, idx)
     assert _ingest_read(spark, idx)[0] == INGEST_ROWS
     assert _n_data_files(str(local / "index.parquet")) == 1
     assert sorted(os.listdir(local)) == ["index.parquet"]

@@ -248,9 +248,9 @@ def test_append_delta_compacts_past_ideal_plus_threshold(spark, tmp_path, monkey
     every run). At fixture scale ideal == 1, so with a threshold of 1
     a 2-file directory compacts back to ONE file whose content is the
     merge."""
-    from elb_log_etl_enrichment_spark.sources import geo_cache
+    from elb_log_etl_enrichment_spark.sources import geo_cache, keyed_store
 
-    monkeypatch.setattr(geo_cache, "GEO_CACHE_COMPACT_FILES", 1)
+    monkeypatch.setattr(keyed_store, "COMPACT_FILES", 1)
     cache_path = str(tmp_path / "cache.parquet")
 
     def step(ip: str, ts: str) -> None:
